@@ -139,8 +139,8 @@ HEADLINE = [
     "q_stream_dedup_data",
     "q_compaction_plan",
     # round-10 registrations (new ids — absent from BENCH_r01..r09): the
-    # five capped/audio/KMV tiers funded by the attested-latest-4 step
-    # plus the estimator-audit / multimodal-dedup wave
+    # five capped/audio/KMV tiers plus the estimator-audit /
+    # multimodal-dedup wave
     "q_triangle_count_capped",
     "q_label_prop_capped",
     "q_semantic_dedup_groups_capped",
@@ -151,8 +151,8 @@ HEADLINE = [
     "q_cell_compactness",
     "q_quantile_sample_eval",
     "q_dedup_rate_curve",
-    # round-11 registrations (the r10 library wave 3, funded by the
-    # attested-latest-5 step, plus the same-round r11 wave)
+    # round-11 registrations (the r10 library wave 3, plus the
+    # same-round r11 wave)
     "q_substring_runs",
     "q_ivf_pq_recall",
     "q_stream_outer_join",

@@ -35,7 +35,7 @@ from hadoop_distexec_spark.pipe.rows import pipe_rows
 from hadoop_distexec_spark.pipe.sync import sync_deletes
 from hadoop_distexec_spark.registry import all_queries, oracle_sqls
 from hadoop_distexec_spark.session import get_spark
-from hadoop_distexec_spark.sources.manifest import build_manifest, build_manifest_binaryfile
+from hadoop_distexec_spark.sources.manifest import build_manifest
 
 __all__ = [
     "DistExecError",
@@ -48,7 +48,6 @@ __all__ = [
     "all_queries",
     "resolve_fs",
     "build_manifest",
-    "build_manifest_binaryfile",
     "distexec",
     "get_spark",
     "oracle_sqls",

@@ -1,8 +1,7 @@
 """Round-8 prep waves: sketch-accuracy, drift, privacy, co-occurrence,
 windowed-cardinality, sampling, regression and join-filter audits (the
 hand-off pattern: implemented + pytest-gated with TESTED draft DuckDB
-oracle twins; REGISTERED in round 8 under q_-prefixed ids —
-the r07 window is fully allocated at 22 first-witness + 28 stale slots).
+oracle twins; registered under q_-prefixed ids).
 
 Wave 1 — five operators a training-data / analytics pipeline runs
 continuously:
@@ -646,8 +645,7 @@ SLIDING_DISTINCT_ORACLE = f"""
 # Round-8 prep, wave 2: per-source cap sampling, per-group OLS, Benford
 # first-digit audit, l-diversity, and an unbinned exact KS drift statistic.
 # Same hand-off pattern as wave 1: implemented + pytest-gated with TESTED
-# draft DuckDB twins (tests/test_round8_ops.py); REGISTERED in round 8 per
-# the round-8 rotation window.
+# DuckDB twins (tests/test_round8_ops.py); registered under q_-prefixed ids.
 # ===========================================================================
 
 # ---------------------------------------------------------------------------
@@ -1576,11 +1574,8 @@ register("q_hot_key_churn", oracle=HOT_KEY_CHURN_ORACLE)(hot_key_churn)
 # kmv_overlap — k-minimum-values (theta-sketch) distinct-set intersection
 # estimates with measured error (round-9 library tier; completes the
 # sketch ladder: HLL distinct / CMS heavy hitters / Bloom membership /
-# KMV set INTERSECTION). REGISTERED r10 under the attested-latest-4
-# witness step (VERDICT r09 next-round #2/#3), with the r09 ADVICE
-# fixes folded in pre-first-witness: per-arm hash dedup (theta
-# semantics) and LEFT-join so zero-true-intersection pairs stay in the
-# audit output.
+# KMV set INTERSECTION). Per-arm hash dedup (theta semantics) and a
+# LEFT join keep zero-true-intersection pairs in the audit output.
 # ---------------------------------------------------------------------------
 
 KMV_K = 64  # sketch size (minimum hash values kept per set)

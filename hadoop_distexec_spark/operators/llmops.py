@@ -3692,11 +3692,10 @@ def triangle_cap_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r09 registration of the capped tiers (VERDICT r08 next-round #3, under
-# the approved attested-latest-3 witness policy's headroom): the two
-# candidate-capped edge builders a 100 TB user actually runs for
-# embedding dedup, plus their measured-error companions (the pq_recall
-# pattern — agreement is a driver-witnessed number, never an assumption).
+# The capped tiers: the two candidate-capped edge builders a 100 TB user
+# actually runs for embedding dedup, plus their measured-error companions
+# (the pq_recall pattern — agreement is a measured, oracle-checked number,
+# never an assumption).
 # The oracle twins below reproduce the sorted-sliding-window candidate
 # policy exactly: same exact-decimal projection rank, same rank-successor
 # cap, same exact-decimal cosine threshold.
@@ -3772,13 +3771,6 @@ def q_dedup_embed_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embed_edges_capped(spark, sf_dir)
 
 
-q_dedup_embed_capped._fingerprint_extras = (
-    embed_edges_capped,
-    _window_capped_pairs,
-    _spark_proj,
-)
-
-
 @register(
     "q_dedup_embed_capped_ivf",
     oracle=f"""
@@ -3798,14 +3790,6 @@ def q_dedup_embed_capped_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the label-blocked edge set — the two policies' overlap is the
     measured quantity q_ivf_cap_overlap reports."""
     return embed_edges_capped_ivf(spark, sf_dir)
-
-
-q_dedup_embed_capped_ivf._fingerprint_extras = (
-    embed_edges_capped_ivf,
-    _ivf_assign_cells,
-    _window_capped_pairs,
-    _spark_proj,
-)
 
 
 @register(
@@ -3849,16 +3833,6 @@ def q_ivf_cap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_cap_overlap(spark, sf_dir)
 
 
-q_ivf_cap_overlap._fingerprint_extras = (
-    ivf_cap_overlap,
-    embed_edges_capped,
-    embed_edges_capped_ivf,
-    _ivf_assign_cells,
-    _window_capped_pairs,
-    _spark_proj,
-)
-
-
 # q_cc_cap_agreement (the q_dedup_embed_capped measured-error companion)
 # is registered from pipeline.py, where cc_cap_agreement lives: its
 # oracle interpolates THIS module's SQL fragments, which pipeline can
@@ -3867,10 +3841,8 @@ q_ivf_cap_overlap._fingerprint_extras = (
 # q_pii_source_audit placement note in pipeline.py).
 
 # triangle_count_capped's DuckDB twin — the same ordered id-triple
-# enumeration as q_triangle_count's oracle, over the capped edge set.
-# Drafted + parity-tested r09 (tests/test_round9_ops.py), REGISTERED r10
-# under the attested-latest-4 witness step (VERDICT r09 next-round
-# #2/#3).
+# enumeration as q_triangle_count's oracle, over the capped edge set
+# (parity-tested by tests/test_round9_ops.py).
 TRIANGLE_COUNT_CAPPED_ORACLE = f"""
     WITH {_CAPPED_CELLS_LABEL_SQL},
     {_capped_window_sql('lcells', 'l')},
@@ -3886,12 +3858,6 @@ TRIANGLE_COUNT_CAPPED_ORACLE = f"""
 register("q_triangle_count_capped", oracle=TRIANGLE_COUNT_CAPPED_ORACLE)(
     triangle_count_capped
 )
-triangle_count_capped._fingerprint_extras = (
-    embed_edges_capped,
-    _window_capped_pairs,
-    _spark_proj,
-    triangle_counts,
-)
 
 
 HYBRID_DEPTH = 100  # per-modality candidate-list depth fed into the fusion
@@ -3901,11 +3867,7 @@ HYBRID_TOPK = 20
 # Shared by q_hybrid_search and the retrieval-agreement harness: the two
 # modality rank lists (lexr/vecr) as CTE text — extracted byte-identically
 # from the hybrid oracle so arm definitions cannot drift between fusion
-# and agreement. NOTE: this refactor DID change q_hybrid_search's
-# registered source fingerprint (the fn body now delegates to
-# _hybrid_arms and the fingerprint extras grew) — its change-aware
-# staleness clock reset at the r07 rotation; only the oracle STRING is
-# byte-identical.
+# and agreement.
 _HYBRID_ARMS_SQL = f"""{_BM25_CORE_SQL},
     lex AS (SELECT doc_id, {_BM25_TOTAL_SQL} AS score FROM per_doc),
     lexr AS (
@@ -4644,19 +4606,9 @@ def _tfidf_pairs_build(
     return result, w, cnt
 
 
-# Fingerprint coverage for delegated bodies (registry.source_fingerprint
-# hashes these helpers' sources alongside the registered fn, so edits to
-# the delegated logic reset the witness-staleness clock — round-6 review):
-q_tfidf_pairs._fingerprint_extras = (_tfidf_pairs_build,)
-q_bm25._fingerprint_extras = (_bm25_per_doc,)
-q_hybrid_search._fingerprint_extras = (_bm25_per_doc, _hybrid_arms)
-
-
 # ---------------------------------------------------------------------------
-# round-6 prep wave — REGISTERED at the r06 rotation and hash-green in
-# CORRECTNESS_r06 (q_uniform_sample / q_embed_norm_stats /
-# q_source_top_tokens / q_key_skew_profile). Header kept for provenance:
-# these were built one round ahead under the 50-witness/round budget.
+# Sampling and profiling operators (q_uniform_sample / q_embed_norm_stats /
+# q_source_top_tokens / q_key_skew_profile).
 # ---------------------------------------------------------------------------
 
 
@@ -4738,9 +4690,8 @@ def _embed_norm_stats_frame(e: DataFrame) -> DataFrame:
     )
 
 
-# Draft oracle twins for the r06-prep APIs — tested against the functions
-# by tests/test_round5_ops.py now, wired into @register at the next
-# rotation. Kept here so registration is a two-line diff.
+# Oracle twins for the sampling and profiling operators above (parity:
+# tests/test_round5_ops.py).
 UNIFORM_SAMPLE_K_ORACLE = """
     SELECT doc_id, source FROM documents
     ORDER BY md5('usk:' || CAST(doc_id AS VARCHAR)), doc_id
@@ -4873,10 +4824,8 @@ KEY_SKEW_PROFILE_ORACLE = f"""
 
 
 # ---------------------------------------------------------------------------
-# round-6 registration of the r05-prepped APIs (VERDICT r05 next-round #3):
-# the draft oracles above were parity-proven at sf0.01 in round 5
-# (tests/test_round5_ops.py), so registration is the promised two-line diff
-# per operator. Window-slotted via scripts/rotate.py.
+# Registration of the sampling and profiling operators; their oracles are
+# parity-proven at sf0.01 by tests/test_round5_ops.py.
 # ---------------------------------------------------------------------------
 
 UNIFORM_SAMPLE_REGISTERED_K = 100
@@ -4900,11 +4849,8 @@ register("q_key_skew_profile", oracle=KEY_SKEW_PROFILE_ORACLE)(key_skew_profile)
 
 
 # ---------------------------------------------------------------------------
-# round-7 wave 1 — prepped early in round 7, then REGISTERED the same
-# round once the re-rotated window opened slots (all 11 hold "never
-# never" first-witness slots in the r07 window; see rotation.py). Each op
-# shipped with a draft DuckDB twin parity-tested by
-# tests/test_round6_ops.py before registration.
+# round-7 wave 1 — each op ships with a DuckDB twin parity-tested by
+# tests/test_round6_ops.py.
 # ---------------------------------------------------------------------------
 
 
@@ -5717,16 +5663,11 @@ TOKEN_FERTILITY_ORACLE = (
 
 
 # ---------------------------------------------------------------------------
-# round-7 registration of the r06-prepped APIs: the draft oracles above
-# were parity-proven at sf0.01 in round 6 (tests/test_round6_ops.py), so
-# registration is the promised two-line diff per operator. Window-slotted
-# via scripts/rotate.py (never-witnessed ids lead the window). Helper
-# builders are declared via _fingerprint_extras so edits to the delegated
-# logic reset each id's staleness clock (registry.source_fingerprint).
+# round-7 registration of the r06-prepped APIs: the oracles above are
+# parity-proven at sf0.01 by tests/test_round6_ops.py.
 # ---------------------------------------------------------------------------
 
 register("q_source_overlap", oracle=SOURCE_OVERLAP_ORACLE)(source_overlap)
-source_overlap._fingerprint_extras = (_source_overlap_ss, _source_overlap_frame)
 
 register("q_token_freq_spectrum", oracle=TOKEN_FREQ_SPECTRUM_ORACLE)(
     token_freq_spectrum
@@ -5735,7 +5676,6 @@ register("q_token_freq_spectrum", oracle=TOKEN_FREQ_SPECTRUM_ORACLE)(
 register("q_shard_plan", oracle=SHARD_PLAN_ORACLE)(shard_plan)
 
 register("q_hapax_docs", oracle=HAPAX_DOCS_ORACLE)(hapax_docs)
-hapax_docs._fingerprint_extras = (_hapax_tokc, _hapax_docs_frame)
 
 register("q_quality_filter_funnel", oracle=QUALITY_FILTER_FUNNEL_ORACLE)(
     quality_filter_funnel
@@ -5757,13 +5697,10 @@ register("q_sim_quantized_recall", oracle=SIM_QUANTIZED_RECALL_ORACLE)(
 register("q_token_fertility", oracle=TOKEN_FERTILITY_ORACLE)(token_fertility)
 # fold/w0 edits land in q_bpe_apply's own fingerprint; declaring it here
 # propagates that reset to the audit built on top of it.
-token_fertility._fingerprint_extras = (q_bpe_apply,)
 
 
 # ---------------------------------------------------------------------------
-# round-7 wave 2 — prepped as a round-8 hand-off, then REGISTERED within
-# round 7 (window slots remained after wave 1; all five sit in the r07
-# first-witness window). Corpus-audit and embedding-analysis operators a
+# round-7 wave 2 — corpus-audit and embedding-analysis operators a
 # training-data pipeline runs before committing a tokenizer / index build.
 # ---------------------------------------------------------------------------
 
@@ -6091,24 +6028,17 @@ EMBED_PCA_ORACLE = f"""
     """
 
 
-# Round-7 registration of this round's prep wave: all draft oracles above
-# are parity-proven at sf0.01 (tests/test_round7_ops.py) before the
-# driver's first witness, the established hand-off contract — registered
-# in the SAME round because the witness window still holds every
-# displaced stale id within the change-aware bound (the ledger math in
-# the registration commit).
+# Round-7 registration of this round's prep wave: all oracles above are
+# parity-proven at sf0.01 by tests/test_round7_ops.py.
 register("q_vocab_coverage", oracle=VOCAB_COVERAGE_ORACLE)(vocab_coverage)
 
 register("q_ngram_novelty", oracle=NGRAM_NOVELTY_ORACLE)(ngram_novelty)
-ngram_novelty._fingerprint_extras = (_ngram_novelty_frame, _shingles_df)
 
 register("q_embed_pca", oracle=EMBED_PCA_ORACLE)(embed_pca)
-embed_pca._fingerprint_extras = (_embed_pca_core,)
 
 
 # ---------------------------------------------------------------------------
-# round-7 wave 3 — measured-quality harnesses, REGISTERED in round 7
-# (first-witness slots in the r07 window): classifier accuracy,
+# round-7 wave 3 — measured-quality harnesses: classifier accuracy,
 # retrieval-arm agreement, and join-planning estimator error. The repo's
 # standing rule: a heuristic/sketch/estimator ships WITH the harness that
 # measures it.
@@ -6457,17 +6387,14 @@ EMBED_WHITEN_ORACLE = f"""
 # arithmetic in the registration commit — all displaced stale ids stay
 # inside the change-aware bound).
 register("q_lang_id_eval", oracle=LANG_ID_EVAL_ORACLE)(lang_id_eval)
-lang_id_eval._fingerprint_extras = (q_lang_id,)
 
 register("q_join_card_est", oracle=JOIN_CARD_EST_ORACLE)(join_card_est)
 
 register("q_retrieval_agreement", oracle=RETRIEVAL_AGREEMENT_ORACLE)(
     retrieval_agreement
 )
-retrieval_agreement._fingerprint_extras = (_hybrid_arms, _bm25_per_doc)
 
 register("q_embed_whiten", oracle=EMBED_WHITEN_ORACLE)(embed_whiten)
-embed_whiten._fingerprint_extras = (_embed_pca_core,)
 
 
 # ---------------------------------------------------------------------------
@@ -7171,7 +7098,6 @@ DEDUP_RATE_CURVE_ORACLE = (
 )
 
 register("q_dedup_rate_curve", oracle=DEDUP_RATE_CURVE_ORACLE)(dedup_rate_curve)
-dedup_rate_curve._fingerprint_extras = (_shingle_pair_stats,)
 
 
 # theory literals for the LSH band S-curve, computed ONCE here and
@@ -7358,7 +7284,6 @@ LSH_BAND_CURVE_ORACLE = (
 )
 
 register("q_lsh_band_curve", oracle=LSH_BAND_CURVE_ORACLE)(lsh_band_curve)
-lsh_band_curve._fingerprint_extras = (_shingles_df, _minhash_parts)
 
 
 # ---------------------------------------------------------------------------
@@ -7508,9 +7433,7 @@ SUBSTRING_RUNS_ORACLE = (
     """
 )
 
-# r11 registration (VERDICT r10 next-round #1, funded by the enacted
-# attested-latest-5 witness step): the r10-drafted tier keeps its
-# tested bit-exact oracle unchanged
+# registered with its tested bit-exact oracle
 register("q_substring_runs", oracle=SUBSTRING_RUNS_ORACLE)(substring_runs)
 
 
@@ -7535,11 +7458,10 @@ def _ivf_pq_recall_at(
     corpus in exact ppm (scan_ppm) — recall AND cost on one line, the
     deploy decision in one frame.
 
-    The IVF probe and the PQ build are kept INLINE (not refactored out
-    of the registered tiers) so q_sim_ivf / q_pq_recall keep their
-    witnessed fingerprints; the draft oracle embeds the registered
-    oracles' CTE text verbatim (pytest-asserted), so the copies cannot
-    drift silently.
+    The IVF probe and the PQ build are inline copies of the registered
+    tiers' logic; the draft oracle embeds the registered oracles' CTE
+    text verbatim (pytest-asserted), so the copies cannot drift
+    silently.
 
     Shape at 100 TB: centroids broadcast; ADC joins fan out over probed
     cells only (the nlist/nprobe pruning is applied BEFORE the per-
@@ -7703,9 +7625,6 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_pq_recall_at(spark, sf_dir, IVFPQ_NPROBE)
 
 
-ivf_pq_recall._fingerprint_extras = (_ivf_pq_recall_at,)
-
-
 # verbatim CTE reuse from the REGISTERED oracles (pytest-asserted): the
 # PQ chain is sliced out of PQ_RECALL_ORACLE between its stable markers,
 # so an edit to the registered oracle flows into this draft or fails the
@@ -7753,9 +7672,8 @@ IVF_PQ_RECALL_ORACLE = f"""
     GROUP BY e4.q_id
     """
 
-# r11 registration: the entry point pins nprobe to the oracle's baked-in
-# constant (ADVICE r10 #3); _ivf_pq_recall_at is fingerprint-covered via
-# _fingerprint_extras
+# the entry point pins nprobe to the oracle's baked-in constant
+# (ADVICE r10 #3)
 register("q_ivf_pq_recall", oracle=IVF_PQ_RECALL_ORACLE)(ivf_pq_recall)
 
 
@@ -7849,9 +7767,6 @@ def _line_audit(ln: DataFrame) -> DataFrame:
     )
 
 
-line_dedup._fingerprint_extras = (_line_audit,)
-
-
 def line_dedup_newline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """line_dedup's PRODUCTION splitter (VERDICT r10 next-round #6): a
     line is a real newline-delimited line — split on '\\n', trimmed,
@@ -7870,9 +7785,6 @@ def line_dedup_newline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("line") >= 1)
     )
     return _line_audit(ln)
-
-
-line_dedup_newline._fingerprint_extras = (_line_audit,)
 
 
 LINE_DEDUP_ORACLE = f"""
@@ -7924,10 +7836,9 @@ LINE_DEDUP_NEWLINE_ORACLE = (
     + _LINE_AUDIT_TAIL
 )
 
-# r11 registration: the CHUNKER variant is the registered id (the driver
-# fixture has no newlines); line_dedup_newline is the production-splitter
-# library twin (VERDICT r10 next-round #6) sharing the fingerprint-covered
-# _line_audit body
+# the CHUNKER variant is the registered id (the driver fixture has no
+# newlines); line_dedup_newline is the production-splitter library twin
+# (VERDICT r10 next-round #6) sharing the _line_audit body
 register("q_line_dedup", oracle=LINE_DEDUP_ORACLE)(line_dedup)
 
 
@@ -7978,8 +7889,7 @@ def _verbatim_share_on(docs: DataFrame) -> DataFrame:
     """The per-source verbatim-share aggregate over an arbitrary
     tokenized (doc_id, source, t) frame — q_doc_verbatim_share's body,
     extracted (r12) so q_excise_impact can run the IDENTICAL audit over
-    both the raw and the excised corpus (fingerprint-covered on both
-    registered ids)."""
+    both the raw and the excised corpus."""
     w = docs.filter(F.size("t") >= VERBATIM_K).select(
         "doc_id",
         "source",
@@ -8070,17 +7980,11 @@ DOC_VERBATIM_SHARE_ORACLE = f"""
     FROM per_doc GROUP BY source
     """
 
-# r11 registration (same-round, the r10 wave-2 precedent: bit-exact at
-# sf0.001 AND sf0.01, law-tested, 10x-measured before registering; the
-# latest-5 window arithmetic holds 7 never-witnessed ids this round)
+# registered once bit-exact at sf0.001 AND sf0.01, law-tested and
+# 10x-measured
 register("q_doc_verbatim_share", oracle=DOC_VERBATIM_SHARE_ORACLE)(
     doc_verbatim_share
 )
-# r12: the body moved to _verbatim_share_on so q_excise_impact can run
-# the identical audit over the excised corpus — cover the delegated
-# logic in this id's fingerprint (resets its staleness clock to the
-# tight bound; the r12 window arithmetic accounts for it)
-doc_verbatim_share._fingerprint_extras = (_verbatim_share_on,)
 
 
 # ---------------------------------------------------------------------------
@@ -8278,7 +8182,7 @@ def embed_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the capped edge set is the REGISTERED q_dedup_embed_capped oracle's
 # CTE chain verbatim (containment pytest-asserted) — the curve cannot
-# drift from the edge builder the driver witnesses
+# drift from the registered edge builder
 EMBED_THRESHOLD_CURVE_ORACLE = f"""
     WITH {_CAPPED_CELLS_LABEL_SQL},
     {_capped_window_sql('lcells', 'l')},
@@ -8299,17 +8203,8 @@ EMBED_THRESHOLD_CURVE_ORACLE = f"""
     FROM per_t JOIN ends ON per_t.t_pct = ends.t_pct
     """
 
-# r11 registration (same-round; see q_doc_verbatim_share note). The
-# capped builder chain is fingerprint-covered so edits to the edge
-# semantics reset this id's witness clock exactly like the registered
-# q_dedup_embed_capped's
 register("q_embed_threshold_curve", oracle=EMBED_THRESHOLD_CURVE_ORACLE)(
     embed_threshold_curve
-)
-embed_threshold_curve._fingerprint_extras = (
-    embed_edges_capped,
-    _window_capped_pairs,
-    _spark_proj,
 )
 
 
@@ -8591,22 +8486,13 @@ def _kcore_oracle() -> str:
 
 KCORE_AUDIT_ORACLE = _kcore_oracle()
 
-# r11 registration (same-round; see q_doc_verbatim_share note). The
-# peel body and the capped builder chain are fingerprint-covered
 register("q_kcore_audit", oracle=KCORE_AUDIT_ORACLE)(kcore_audit)
-kcore_audit._fingerprint_extras = (
-    _kcore_peel,
-    _kcore_peel_cells,
-    embed_edges_capped,
-    _window_capped_pairs,
-    _spark_proj,
-)
 
 
 # ---------------------------------------------------------------------------
 # verbatim_excise — the span-level cleaning ACTION to the r11 audits'
 # decision (VERDICT r11 next-round #2; drafted and law-tested early in
-# r12, registered same-round under the latest-5 spare slots):
+# r12):
 # q_doc_verbatim_share says HOW MUCH of each doc is verbatim-reused,
 # q_line_dedup says WHICH lines repeat — this one materializes the
 # CLEANED corpus: every shared rolling-window span cut from every doc
@@ -8812,17 +8698,6 @@ def verbatim_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _token_excise_audit(verbatim_excise_corpus(spark, sf_dir))
 
 
-verbatim_excise._fingerprint_extras = (
-    verbatim_excise_corpus,
-    _verbatim_hit,
-    _excise_from_hit,
-    _pos_windows,
-    _footprint,
-    _excise_docs,
-    _excise_covered,
-    _token_excise_audit,
-)
-
 # the toks + window-hash CTEs are the REGISTERED q_doc_verbatim_share
 # oracle's text verbatim (sliced between stable markers, the
 # _LINE_AUDIT_TAIL idiom), with ONE anchored edit: the window CTE also
@@ -8884,11 +8759,9 @@ VERBATIM_EXCISE_ORACLE = (
     """
 )
 
-# r12 registration (same-round, the q_doc_verbatim_share idiom): the
-# draft tier passed its brute-force, planted-fixture and cross-operator
-# laws plus bit-exact oracle parity at sf0.001 AND sf0.01 before this
-# line landed (tests/test_round12_ops.py); the corpus builder is
-# fingerprint-covered via _fingerprint_extras above.
+# registered once its brute-force, planted-fixture and cross-operator
+# laws plus bit-exact oracle parity at sf0.001 AND sf0.01 held
+# (tests/test_round12_ops.py)
 register("q_verbatim_excise", oracle=VERBATIM_EXCISE_ORACLE)(verbatim_excise)
 
 
@@ -8997,9 +8870,6 @@ def line_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _line_excise_body(ln, " ")
 
 
-line_excise._fingerprint_extras = (_line_excise_body,)
-
-
 def line_excise_newline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """line_excise's PRODUCTION splitter (the line_dedup_newline twin):
     real newline-delimited lines — split on '\\n', trimmed, empties
@@ -9018,8 +8888,6 @@ def line_excise_newline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.length("line") >= 1)
     return _line_excise_body(raw, "\n")
 
-
-line_excise_newline._fingerprint_extras = (_line_excise_body,)
 
 # the toks/ln0/ln CTE chain is the REGISTERED q_line_dedup oracle's text
 # verbatim (sliced between stable markers), with ONE anchored edit
@@ -9098,11 +8966,9 @@ LINE_EXCISE_NEWLINE_ORACLE = (
     )
 )
 
-# r12 registration (same-round): both splitter variants passed the
-# brute-force, planted-footer, FIXPOINT (cleaned corpus re-audits
-# boilerplate-free) and dual-SF oracle-parity gates before these lines
-# landed (tests/test_round12_ops.py); the shared body is
-# fingerprint-covered on both ids via _fingerprint_extras above.
+# both splitter variants pass the brute-force, planted-footer, FIXPOINT
+# (cleaned corpus re-audits boilerplate-free) and dual-SF oracle-parity
+# gates (tests/test_round12_ops.py)
 register("q_line_excise", oracle=LINE_EXCISE_ORACLE)(line_excise)
 register("q_line_excise_newline", oracle=LINE_EXCISE_NEWLINE_ORACLE)(
     line_excise_newline
@@ -9159,16 +9025,6 @@ def decontam_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries at least one eval shingle."""
     return _token_excise_audit(decontam_excise_corpus(spark, sf_dir))
 
-
-decontam_excise._fingerprint_extras = (
-    decontam_excise_corpus,
-    _pos_windows,
-    _footprint,
-    _excise_docs,
-    _excise_covered,
-    _token_excise_audit,
-    _shingles_df,
-)
 
 # the reconstruction tail (tok/kept/recon/base CTEs + the audit SELECT)
 # is the REGISTERED q_verbatim_excise oracle's text verbatim, sliced at
@@ -9258,15 +9114,6 @@ def intradoc_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every doc with cut_tokens > 0 has q_repetition rep_ratio > 0."""
     return _token_excise_audit(intradoc_excise_corpus(spark, sf_dir))
 
-
-intradoc_excise._fingerprint_extras = (
-    intradoc_excise_corpus,
-    _pos_windows,
-    _footprint,
-    _excise_docs,
-    _excise_covered,
-    _token_excise_audit,
-)
 
 INTRADOC_EXCISE_ORACLE = (
     f"""
@@ -9384,16 +9231,6 @@ def excise_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("after_ppm", F.lit(0)).cast("long").alias("after_ppm"),
     )
 
-
-excise_impact._fingerprint_extras = (
-    _verbatim_share_on,
-    _verbatim_hit,
-    _excise_from_hit,
-    _pos_windows,
-    _footprint,
-    _excise_docs,
-    _excise_covered,
-)
 
 # the excision chain (toks/w/owner/cut/covered/tok/kept/recon/base) is
 # the REGISTERED q_verbatim_excise oracle's text verbatim, sliced just
@@ -9675,7 +9512,6 @@ PPS_SAMPLE_ORACLE = f"""
     SELECT * FROM fallback
     """
 
-q_pps_sample._fingerprint_extras = (_md5_60,)
 register("q_pps_sample", oracle=PPS_SAMPLE_ORACLE)(q_pps_sample)
 
 
@@ -9741,8 +9577,6 @@ def mix_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t").cast("long").alias("t"),
     )
 
-
-mix_schedule._fingerprint_extras = (mix_temperature, _md5_60)
 
 # the per/shares/rooted weight CTEs are the REGISTERED
 # q_mix_temperature oracle's text verbatim (sliced before its final
@@ -10219,8 +10053,6 @@ def ann_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rr_ppm"),
     ).orderBy("q_id")
 
-
-ann_mrr._fingerprint_extras = (q_sim_topk, q_sim_ivf)
 
 ANN_MRR_ORACLE = f"""
     WITH {_EXACT_TOPK_CTE},

@@ -30,15 +30,6 @@ MEDIA_SCHEMA = (
 )
 
 
-def decode_image(content: bytes) -> "object":
-    """STUB: real image decode requires PIL/opencv (not in this container).
-
-    The Spark-side contract (binary in, typed metadata out) is exercised via
-    ``_decode_stub``; replace this body with e.g. ``PIL.Image.open`` on a
-    real cluster."""
-    raise NotImplementedError("image decode requires PIL/opencv; see _decode_stub")
-
-
 def decode_audio(content: bytes) -> "object":
     """STUB: real audio decode requires soundfile/ffmpeg (not in container)."""
     raise NotImplementedError("audio decode requires soundfile/ffmpeg; see _decode_stub")
@@ -129,8 +120,6 @@ def sample_frames(
             )
 
     return df.mapInPandas(frame_batches, FRAME_SCHEMA)
-
-
 
 
 def _content_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,10 +404,8 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # audio window features (round-9 library tier; the audio leg of the
-# image/audio/video plumbing contract). UNREGISTERED: the registry sits
-# at its witness-bandwidth capacity (SURVEY §2.10 r09 rows) — this ships
-# with a TESTED draft oracle (tests/test_round9_ops.py), registration-
-# ready like the other r10 candidates.
+# image/audio/video plumbing contract), registered as q_multimodal_audio
+# with its oracle parity-tested by tests/test_round9_ops.py.
 # ---------------------------------------------------------------------------
 
 AUDIO_WIN = 256  # samples per analysis window (512 bytes of 16-bit PCM)
@@ -493,11 +480,10 @@ def audio_window_features(df: DataFrame, window: int = AUDIO_WIN) -> DataFrame:
 
 
 def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio plumbing end-to-end on real data (drafted r09, REGISTERED
-    r10 under the attested-latest-4 witness step, VERDICT r09 #2/#3):
-    document UTF-8 bytes as the fake PCM16 payload through the
-    Arrow mapInPandas framing, one row per (doc, window). Docs shorter
-    than one sample (under 2 bytes) are out of contract on both sides."""
+    """Audio plumbing end-to-end on real data: document UTF-8 bytes as
+    the fake PCM16 payload through the Arrow mapInPandas framing, one row
+    per (doc, window). Docs shorter than one sample (under 2 bytes) are
+    out of contract on both sides."""
     docs = _content_df(spark, sf_dir).where(F.octet_length("content") >= 2)
     return audio_window_features(docs)
 
@@ -539,7 +525,6 @@ MULTIMODAL_AUDIO_ORACLE = f"""
     """
 
 register("q_multimodal_audio", oracle=MULTIMODAL_AUDIO_ORACLE)(multimodal_audio)
-multimodal_audio._fingerprint_extras = (audio_window_features,)
 
 
 # ---------------------------------------------------------------------------
@@ -701,4 +686,3 @@ MULTIMODAL_PHASH_ORACLE = f"""
     """
 
 register("q_multimodal_phash", oracle=MULTIMODAL_PHASH_ORACLE)(multimodal_phash)
-multimodal_phash._fingerprint_extras = (phash_images,)

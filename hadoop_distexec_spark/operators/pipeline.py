@@ -1178,7 +1178,6 @@ register("q_pack_efficiency", oracle=PACK_EFFICIENCY_ORACLE)(pack_efficiency)
 register("q_dedup_cluster_stats", oracle=DEDUP_CLUSTER_STATS_ORACLE)(
     dedup_cluster_stats
 )
-dedup_cluster_stats._fingerprint_extras = (q_dedup_groups,)
 
 
 # ---------------------------------------------------------------------------
@@ -1240,10 +1239,10 @@ def label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lpa_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """The synchronous LPA loop (label_prop's registered core, declared
-    via _fingerprint_extras): LPA_ROUNDS rounds of mode-of-neighbors
-    with smallest-label tiebreak over an undirected (vec_a, vec_b) edge
-    frame, isolated nodes self-stable; returns per-node (v, lab).
+    """The synchronous LPA loop (label_prop's registered core):
+    LPA_ROUNDS rounds of mode-of-neighbors with smallest-label tiebreak
+    over an undirected (vec_a, vec_b) edge frame, isolated nodes
+    self-stable; returns per-node (v, lab).
     Shared with label_prop_capped so the capped tier cannot drift from
     the registered semantics it approximates."""
     sym = edges.select(
@@ -1364,10 +1363,9 @@ def _lpa_spectrum(labels: DataFrame) -> DataFrame:
 
 
 def label_prop_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """label_prop's hub-mitigation tier (VERDICT r07 #6; drafted r09,
-    REGISTERED r10 under the attested-latest-4 witness step, VERDICT r09
-    #2/#3): the same {LPA_ROUNDS}-round synchronous
-    LPA over the candidate-capped edge set (llmops.embed_edges_capped —
+    """label_prop's hub-mitigation tier (VERDICT r07 #6): the same
+    {LPA_ROUNDS}-round synchronous LPA over the candidate-capped edge set
+    (llmops.embed_edges_capped —
     the cap must sit at pair ENUMERATION, where the 10x cost actually
     lives; see that docstring's measured negative result for capping
     after the build). Edge volume is <= cap*|V| no matter how dense the
@@ -1389,10 +1387,9 @@ def label_prop_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def semantic_dedup_groups_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_semantic_dedup_groups' hub-mitigation tier (drafted r09,
-    REGISTERED r10 under the attested-latest-4 witness step, VERDICT r09
-    #2/#3): the same min-label connected components
-    over the candidate-capped edge set (llmops.embed_edges_capped).
+    """q_semantic_dedup_groups' hub-mitigation tier: the same min-label
+    connected components over the candidate-capped edge set
+    (llmops.embed_edges_capped).
     Because the capped edges are a strict SUBSET of the registered edge
     set, every capped cluster sits wholly inside one exact cluster — the
     capped partition REFINES the exact one (pytest law), so a keep-list
@@ -1636,10 +1633,6 @@ def _register_cc_cap_agreement() -> None:
         EMBED_COS_THRESHOLD,
         TRUTH_SAMPLE_TARGET_DOCS,
         _capped_window_sql,
-        _spark_dot,
-        _spark_proj,
-        _truth_sample_mod,
-        _window_capped_pairs,
     )
 
     tdot = _DEC_DOT.format(a="a.embedding", b="b.embedding")
@@ -1711,16 +1704,6 @@ def _register_cc_cap_agreement() -> None:
         transitive closure of the capped edges."""
         return cc_cap_agreement(spark, sf_dir)
 
-    q_cc_cap_agreement._fingerprint_extras = (
-        cc_cap_agreement,
-        _agree_cell_mod,
-        connected_components_cell_local,
-        connected_components,
-        _window_capped_pairs,
-        _spark_proj,
-        _spark_dot,
-        _truth_sample_mod,
-    )
 
 _register_cc_cap_agreement()
 
@@ -1838,8 +1821,8 @@ LABEL_PROP_ORACLE = _lpa_oracle()
 
 
 def _lpa_capped_oracle() -> str:
-    """label_prop_capped's DuckDB twin (drafted + parity-tested r09,
-    REGISTERED r10 under the attested-latest-4 step) — the identical
+    """label_prop_capped's DuckDB twin (parity-tested by
+    tests/test_round9_ops.py) — the identical
     unrolled {LPA_ROUNDS}-round CTE chain, with the neighbor list built
     from the CAPPED edge set (llmops' shared capped-window fragments)
     instead of the exact one."""
@@ -1872,10 +1855,9 @@ LABEL_PROP_CAPPED_ORACLE = _lpa_capped_oracle()
 
 
 def _semantic_dedup_groups_capped_oracle() -> str:
-    """semantic_dedup_groups_capped's DuckDB twin (drafted +
-    parity-tested r09, REGISTERED r10 under the attested-latest-4
-    step) — the same recursive-CTE
-    min-label transitive closure as q_semantic_dedup_groups, over the
+    """semantic_dedup_groups_capped's DuckDB twin (parity-tested by
+    tests/test_round9_ops.py) — the same recursive-CTE min-label
+    transitive closure as q_semantic_dedup_groups, over the
     CAPPED edge set (llmops' shared capped-window fragments, embedded
     byte-for-byte so the candidate policy cannot drift)."""
     from hadoop_distexec_spark.operators.llmops import (
@@ -1909,31 +1891,6 @@ register(
     "q_semantic_dedup_groups_capped",
     oracle=SEMANTIC_DEDUP_GROUPS_CAPPED_ORACLE,
 )(semantic_dedup_groups_capped)
-
-
-def _capped_graph_extras() -> tuple:
-    # the capped graph tiers delegate their edge policy to llmops'
-    # shared capped-window builder; hash its source in so an edit to the
-    # candidate policy resets their staleness clocks too (the same
-    # reasoning as the registered capped edge ids' extras in llmops)
-    from hadoop_distexec_spark.operators.llmops import (
-        _spark_proj,
-        _window_capped_pairs,
-        embed_edges_capped,
-    )
-
-    return (embed_edges_capped, _window_capped_pairs, _spark_proj)
-
-
-label_prop_capped._fingerprint_extras = _capped_graph_extras() + (
-    _lpa_labels,
-    _lpa_spectrum,
-)
-semantic_dedup_groups_capped._fingerprint_extras = _capped_graph_extras() + (
-    connected_components_cell_local,
-    connected_components_jump,
-    _cc_round,
-)
 
 
 # ---------------------------------------------------------------------------
@@ -2077,8 +2034,6 @@ SPLIT_LEAKAGE_ORACLE = (
 
 # round-8 registration of the prep ops above (parity-proven since r07,
 # tests/test_round8_ops.py). label_prop's loop body lives in the shared
-# _lpa_labels/_lpa_spectrum helpers (the capped tier reuses them), so
-# they join its fingerprint coverage.
-label_prop._fingerprint_extras = (_lpa_labels, _lpa_spectrum, _lpa_labels_cell_local)
+# _lpa_labels/_lpa_spectrum helpers, which the capped tier reuses.
 register("q_label_prop", oracle=LABEL_PROP_ORACLE)(label_prop)
 register("q_split_leakage", oracle=SPLIT_LEAKAGE_ORACLE)(split_leakage)

@@ -53,7 +53,6 @@ import subprocess
 import threading
 import time
 import uuid
-from dataclasses import dataclass
 from typing import Iterable, Iterator
 from urllib.parse import urlsplit
 
@@ -113,14 +112,6 @@ def _md5_of(fs: FileSystem, path: str) -> str:
                 break
             h.update(chunk)
     return h.hexdigest()
-
-
-@dataclass
-class PipeMetrics:
-    executed: int = 0
-    failed: int = 0
-    bytes_executed: int = 0
-    bytes_written: int = 0
 
 
 class _Pump(threading.Thread):
@@ -791,6 +782,7 @@ def distexec(
     # manifest, not the data. Released after the plan rows are consumed.
     manifest = manifest.cache()
     plan_cache = None
+    tmp_dir = None
     try:
 
         # pre-flight: duplicate destinations (DistExec.java:630-631,647-673).
@@ -968,6 +960,14 @@ def distexec(
         manifest.unpersist()
         if plan_cache is not None:
             plan_cache.unpersist()
+        # tmp goes on every exit too (reference DistExec.java:333-338); on
+        # success this runs after the durability write, so no result row
+        # can still need a tmp file
+        if tmp_dir is not None:
+            try:
+                dst_fs.rmtree(tmp_dir)
+            except FileNotFoundError:
+                pass
 
     if update_mode == "hash":
         # persist content hashes for the next run: EXECUTED rows carry the
@@ -1011,7 +1011,6 @@ def distexec(
 
             log_lines.foreachPartition(_write_log)
 
-    dst_fs.rmtree(tmp_dir)
     return results
 
 

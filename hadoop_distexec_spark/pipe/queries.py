@@ -97,13 +97,3 @@ def q_pipe_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
-
-
-# The pipe ids delegate their entire execution to the executor/rows
-# machinery; declare it as fingerprint coverage so edits there (e.g. the
-# round-8 JVM-side planning + dir-list changes) reset their witness
-# clocks automatically instead of relying on manual ledger marks
-# (registry.source_fingerprint HELPER COVERAGE note).
-q_pipe_exec._fingerprint_extras = (distexec,)
-q_pipe_grep._fingerprint_extras = (distexec,)
-q_pipe_rows._fingerprint_extras = (pipe_rows,)

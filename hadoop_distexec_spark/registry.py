@@ -1,15 +1,16 @@
 """Query registry: every engine operator exposed as a (spark, sf_dir) ->
 DataFrame callable, optionally paired with a DuckDB oracle SQL twin.
 
-The driver contract (/root/repo/__spark_entry__.py) consumes this via
-``all_queries()`` and ``oracle_sqls()``. Oracle SQL must produce the same
-column names and (bit-deterministic) values as the Spark query; see
-``hadoop_distexec_spark.functions.numeric`` for the determinism rules
+The driver contract (``__spark_entry__.py`` at the repo root) consumes
+this via ``all_queries()`` and ``oracle_sqls()``. Oracle SQL must produce
+the same column names and (bit-deterministic) values as the Spark query;
+see ``hadoop_distexec_spark.functions.numeric`` for the determinism rules
 (decimal-cast sums, epoch bigints, explicit tiebreakers).
 """
 
 from __future__ import annotations
 
+import importlib
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -41,145 +42,47 @@ def register(qid: str, oracle: Optional[str] = None, doc: str = ""):
     return deco
 
 
+# Registering modules: the reference-parity core (manifest, pipe,
+# streaming) first, then the relational surface, then the LLM-data extras,
+# so a consumer that samples ids in order sees the reference-parity rows
+# first.
+_MODULES: tuple[str, ...] = (
+    "hadoop_distexec_spark.plans.manifest_plan",
+    "hadoop_distexec_spark.pipe.queries",
+    "hadoop_distexec_spark.streaming.windows",
+    "hadoop_distexec_spark.operators.relational",
+    "hadoop_distexec_spark.operators.relational_ext",
+    "hadoop_distexec_spark.operators.skew",
+    "hadoop_distexec_spark.operators.pipeline",
+    "hadoop_distexec_spark.operators.multimodal",
+    "hadoop_distexec_spark.operators.llmops",
+    "hadoop_distexec_spark.operators.audits",
+)
+
+
 def _load_modules() -> None:
-    # Import for side effect: each module registers its queries.
-    #
-    # ORDER MATTERS: the driver's CORRECTNESS harness checks queries in
-    # registration order with a bounded entry budget (r01 stopped at 50 of
-    # 76). Register the SURVEY §2 [REF] reference-parity core first
-    # (manifest/pipe/streaming), then the relational surface, then the LLM
-    # extras — so the rows that prove reference parity are always inside
-    # the driver's window (VERDICT r01 "Next round" item 2).
-    from hadoop_distexec_spark.plans import manifest_plan  # noqa: F401
-    from hadoop_distexec_spark.pipe import queries as pipe_queries  # noqa: F401
-    from hadoop_distexec_spark.streaming import windows  # noqa: F401
-    from hadoop_distexec_spark.operators import (  # noqa: F401
-        relational,
-        relational_ext,
-        skew,
-        pipeline,
-        multimodal,
-        llmops,
-        audits,
-    )
+    """Import every registering module for its side effect of registering
+    its queries.
 
-
-def source_fingerprint(spec: "QuerySpec") -> str:
-    """Stable fingerprint of a query's registered semantics: sha256 of its
-    function source + oracle SQL. The witness ledger records this at each
-    driver witness; the change-aware staleness bound
-    (tests/test_round2_ops.py::test_witness_staleness_bounded) lets ids
-    whose fingerprint is UNCHANGED since their last hash-green witness age
-    one extra round — code edits reset the clock to the tight bound.
-
-    HELPER COVERAGE: a registered fn that delegates its body to a
-    builder helper declares it via a ``_fingerprint_extras`` attribute
-    (tuple of callables) — their sources are hashed in, so edits to the
-    delegated logic reset the staleness clock exactly like edits to the
-    fn itself (without this, q_tfidf_pairs' 5-line wrapper would leave
-    its entire body outside coverage — round-6 review finding).
-    REMAINING LIMITATION: undeclared shared helpers are still invisible;
-    a round that edits one must mark the dependent ids
-    ``fp_attested: false`` in WITNESS_LEDGER.json (r06 did this for the
-    bm25/hybrid and pipe/manifest families), and the local byte-identical
-    oracle gate still covers every id each session regardless."""
-    import hashlib
-    import inspect
-
-    def _src(f) -> str:
-        try:
-            return inspect.getsource(f)
-        except (OSError, TypeError):  # pragma: no cover — builtins/lambdas
-            return repr(f)
-
-    parts = [_src(spec.fn)]
-    for extra in sorted(
-        getattr(spec.fn, "_fingerprint_extras", ()), key=lambda f: f.__qualname__
-    ):
-        parts.append(f"\n--extra {extra.__qualname__}--\n" + _src(extra))
-    return hashlib.sha256(
-        ("".join(parts) + "\n--oracle--\n" + (spec.oracle or "")).encode()
-    ).hexdigest()
-
-
-# Driver-facing registration order. The driver's CORRECTNESS harness checks
-# queries in the order `queries()` yields them, with a bounded entry budget
-# (r01 witnessed only the first 50 of 76). The list lives in the GENERATED
-# module hadoop_distexec_spark/rotation.py — scripts/rotate.py recomputes
-# it from the CORRECTNESS artifacts (stalest-witness-first) and regenerates
-# WITNESS_LEDGER.json + PARITY.md in the same run, so rotation, ledger and
-# parity map can never land in different commits (VERDICT r05 next-round
-# #1/#7). The fallback list below is only used before the first rotate.
-_FALLBACK_PRIORITY: list[str] = [
-    # --- driver window (50): computed by scripts/witness_ledger.py
-    #     (WITNESS_LEDGER.json "suggested_window", stalest-witness-first):
-    #     the 4 round-5 additions (tier 0 — never witnessed), then
-    #     q_bpe_train (tier 1 — its r04 row was rows-only and the
-    #     REPLACE-chain hash oracle landed this round, so the driver has
-    #     never witnessed the hash check), then the 23 r01-stale and 22
-    #     r02-stale hash-green ids (VERDICT r04 next-round #1). The 4
-    #     r03-fill ids the r04-sized window would have carried slide just
-    #     past #50; they hold green r03 rows (staleness bound respected)
-    #     and stay under the local oracle gate. ---
-    "q_quantile_bins", "q_dedup_prefix", "q_dedup_recall_eval",
-    "q_bpe_apply",
-    "q_bpe_train", "q_fn_array", "q_agg_stats", "q_agg_collect",
-    "q_agg_median", "q_dedup_exact", "q_dedup_ngram", "q_sim_topk",
-    "q_dedup_embed", "q_text_stats", "q_lang_id", "q_token_count",
-    "q_quality_score", "q_fingerprint", "q_winnow_fingerprint",
-    "q_split_train_test", "q_pii_redact", "q_doc_chunks", "q_pack_sequences",
-    "q_dedup_groups", "q_multimodal_frames", "q_set_union",
-    "q_set_intersect", "q_multimodal_meta", "q_join_full_outer",
-    "q_join_salted", "q_agg_minmax", "q_agg_grouping_sets", "q_win_ntile",
-    "q_sql_star", "q_sql_corr_subquery", "q_scalar_subquery", "q_vocab_topk",
-    "q_ngram_counts", "q_repetition", "q_len_hist", "q_decontam",
-    "q_token_entropy", "q_sample_stratified", "q_tfidf", "q_embed_quantize",
-    "q_dedup_incremental", "q_rag_retrieval", "q_cooc_pmi",
-    "q_pack_sequences_dist", "q_corpus_pipeline", "q_text_normalize",
-    "q_dedup_contain", "q_bm25", "q_join_bloom",
-    # --- below the window: every id holds a green r03/r04 driver row
-    #     (freshness bounded at N-2 once r05 lands) and stays covered by
-    #     the local byte-identical oracle gate every session ---
-    "q_agg_percentile",
-    "q_scd2", "q_join_bucketed", "q_triangle_count", "q_hybrid_search",
-    "q_funnel", "q_retention", "q_stream_late_data", "q_event_transitions",
-    "q_attribution", "q_interval_merge", "q_win_cume", "q_pareto_frontier",
-    "q_ab_lift", "q_weighted_sample", "q_data_mix", "q_bpe_pair_counts",
-    "q_rollup_time", "q_top_paths", "q_cdc_merge", "q_recall_eval",
-    "q_tfidf_pairs", "q_robust_stats", "q_dq_referential",
-    "q_multimodal_resize", "q_multimodal_features", "q_dedup_minhash",
-    "q_dedup_simhash", "q_sim_ivf", "q_sim_lsh", "q_agg_groupby",
-    "q_agg_distinct", "q_agg_rollup", "q_agg_cube", "q_join_inner",
-    "q_join_broadcast", "q_join_semi", "q_join_anti", "q_join_multi",
-    "q_win_rank", "q_win_running", "q_win_lag", "q_topk", "q_set_except",
-    "q_pivot", "q_unpivot", "q_fn_string", "q_fn_date", "q_fn_math",
-    "q_anomaly", "q_hll_distinct", "q_pagerank", "q_kmeans", "q_kmeans_vec",
-    "q_lm_score", "q_source_stats", "q_corpus_shuffle",
-    "q_group_representative", "q_fuzzy_join", "q_semantic_dedup_groups",
-    "q_cluster_sample", "q_agg_salted", "q_stream_tumble", "q_stream_slide",
-    "q_stream_session", "q_ts_gapfill", "q_sessionize", "q_win_frame",
-    "q_range_join_bucketed", "q_latest_by_key", "q_dq_profile",
-    "q_asof_join", "q_range_join", "q_fn_json", "q_agg_approx",
-    "q_stream_smoke", "q_stream_join_smoke", "q_stream_stateful_smoke",
-    "q_stream_dedup_smoke", "q_agg_mode", "q_regex_extract_all",
-    "q_scan_manifest", "q_rel_dst", "q_size_stats", "q_filter_files",
-    "q_proj_manifest", "q_dup_check", "q_split_plan", "q_pipe_exec",
-    "q_pipe_rows", "q_pipe_grep", "q_fn_levenshtein", "q_fn_explode",
-    "q_join_left_outer", "q_fn_cond",
-]
-
-try:
-    from hadoop_distexec_spark.rotation import PRIORITY as _PRIORITY
-except ImportError:  # pragma: no cover — pre-rotation bootstrap
-    _PRIORITY = _FALLBACK_PRIORITY
+    ``_MODULES`` is the order contract: ``specs()`` yields ids by the
+    position of the module defining their callable in that tuple, then by
+    registration order inside the module. Import history does not enter
+    it, so importing an operator module early (``__spark_entry__.entry``
+    imports ``operators.relational`` before ``queries()`` runs) leaves the
+    order unchanged."""
+    for name in _MODULES:
+        importlib.import_module(name)
 
 
 def specs() -> dict[str, QuerySpec]:
+    """Every registered query in ``_load_modules`` order. A callable
+    defined outside ``_MODULES`` raises KeyError: its module would not
+    be in the order contract."""
     _load_modules()
-    rank = {qid: i for i, qid in enumerate(_PRIORITY)}
+    rank = {name: i for i, name in enumerate(_MODULES)}
     insertion = {qid: i for i, qid in enumerate(_REGISTRY)}
     ordered = sorted(
-        _REGISTRY, key=lambda q: (rank.get(q, len(rank)), insertion[q])
+        _REGISTRY, key=lambda q: (rank[_REGISTRY[q].fn.__module__], insertion[q])
     )
     return {qid: _REGISTRY[qid] for qid in ordered}
 

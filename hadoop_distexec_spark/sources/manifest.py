@@ -16,7 +16,6 @@ Manifest schema (SURVEY.md §1): src_path, rel_dst, size, is_dir, mtime.
 from __future__ import annotations
 
 import datetime
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -227,40 +226,6 @@ def _rel_expr():
             "substring(src_path, length(root) + (CASE WHEN root = '/' THEN 1 ELSE 2 END))"
         )
     )
-
-
-def build_manifest_binaryfile(
-    spark: SparkSession, srcs: list[str] | str, with_content: bool = False
-) -> DataFrame:
-    """Alternative manifest source backed by Spark's ``binaryFile`` reader:
-    the listing runs through Spark's own distributed file index instead of
-    our BFS walk, and can optionally carry the file bytes as a column.
-
-    Trade-offs vs ``build_manifest``: no directory records (binaryFile only
-    yields files -> no empty-dir preservation), and no "special"/multi-root
-    rebase rules — but the enumeration itself scales with zero custom code
-    and pushes path-glob/mtime filters into the file index. Use it when the
-    job is content-bearing (the pipe reads bytes from the DataFrame rather
-    than re-opening files) or when the tree is huge and flat.
-    """
-    if isinstance(srcs, str):
-        srcs = [srcs]
-    srcs = [os.path.abspath(s) for s in srcs]
-    check_src_paths(srcs)
-    df = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(srcs)
-    )
-    cols = [
-        F.regexp_replace("path", "^file:", "").alias("src_path"),
-        F.col("length").alias("size"),
-        F.lit(False).alias("is_dir"),
-        F.col("modificationTime").alias("mtime"),
-    ]
-    if with_content:
-        cols.append(F.col("content"))
-    return df.select(*cols)
 
 
 def read_uri_list(spark: SparkSession, uri_file: str) -> DataFrame:

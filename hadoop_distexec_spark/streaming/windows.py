@@ -801,8 +801,7 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-7 wave 1 (REGISTERED round 7, first-witness slot in the r07
-# window): the stream-STATIC dimension join — the one core Structured
+# round-7 wave 1: the stream-STATIC dimension join — the one core Structured
 # Streaming join shape the registry didn't yet cover (stream-stream:
 # q_stream_join_smoke; stream-static: this).
 # ---------------------------------------------------------------------------
@@ -868,12 +867,10 @@ STREAM_DIM_JOIN_ORACLE = """
 # Round-7 registration (prep proven in round 6 — parity + batch-equivalence
 # in tests/test_round6_ops.py::test_stream_dim_join_prep_parity_and_batch_equivalence).
 register("q_stream_dim_join", oracle=STREAM_DIM_JOIN_ORACLE)(stream_dim_join_check)
-stream_dim_join_check._fingerprint_extras = (stream_dim_join,)
 
 
 # ---------------------------------------------------------------------------
-# round-7 wave 2 (REGISTERED round 7, first-witness slots in the r07
-# window): DATA-oracle upgrades of the two assertive streaming smokes.
+# round-7 wave 2: DATA-oracle upgrades of the two assertive streaming smokes.
 # q_stream_join_smoke / q_stream_stateful_smoke prove stream==batch and
 # hand the driver a check counter; these return the actual rows so the
 # DuckDB oracle checks real data (the q_stream_dim_join pattern applied
@@ -1020,12 +1017,10 @@ STREAM_STATEFUL_TOTALS_ORACLE = """
 # Round-7 registration of this round's prep wave (parity proof:
 # tests/test_round7_ops.py).
 register("q_stream_join_data", oracle=STREAM_JOIN_DATA_ORACLE)(stream_join_data)
-stream_join_data._fingerprint_extras = (streaming_join,)
 
 register("q_stream_stateful_totals", oracle=STREAM_STATEFUL_TOTALS_ORACLE)(
     stream_stateful_totals
 )
-stream_stateful_totals._fingerprint_extras = (streaming_user_totals_exact,)
 
 
 # ---------------------------------------------------------------------------
@@ -1250,10 +1245,8 @@ STREAM_OUTER_JOIN_ORACLE = f"""
     WHERE c.click_ts_us <= (SELECT wm_us FROM wm) - {OUTER_CLOSE_US}
     """
 
-# r11 registration (VERDICT r10 next-round #1): the only left-outer /
-# state-eviction streaming-join semantics in the repo, with the
-# NULL-strict watermark oracle fix (ADVICE r10 #2) taken BEFORE the
-# first witness
+# the only left-outer / state-eviction streaming-join semantics in the
+# repo; the oracle's watermark comparison is NULL-strict (ADVICE r10 #2)
 register("q_stream_outer_join", oracle=STREAM_OUTER_JOIN_ORACLE)(
     stream_outer_join_data
 )

@@ -1,17 +1,15 @@
-"""Generate the machine-derived id inventory section of PARITY.md
-(VERDICT r04 next-round #8): one row per registered query id with its
-implementation site (module:line of the registered callable), oracle
-kind, and last driver witness from WITNESS_LEDGER.json. The curated
-reference-citation tables above the marker stay hand-maintained; this
-section is regenerated (idempotently) from the registry + ledger so the
-id inventory can never drift from the code.
+"""Generate the machine-derived id inventory section of PARITY.md: one row
+per registered query id with its implementation site (module:line of the
+registered callable) and oracle kind. The curated reference-citation
+tables above the marker stay hand-maintained; this section is regenerated
+(idempotently) from the registry so the id inventory can never drift from
+the code.
 
 Run from the repo root:  python scripts/gen_parity.py
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
@@ -24,35 +22,26 @@ def build_table() -> str:
     from hadoop_distexec_spark import registry
 
     specs = registry.specs()
-    ledger_path = os.path.join(REPO, "WITNESS_LEDGER.json")
-    ledger = {}
-    if os.path.exists(ledger_path):
-        with open(ledger_path) as f:
-            ledger = json.load(f)["ids"]
 
     lines = [
         MARKER,
         "",
         "## Generated id inventory (regenerate: `python scripts/gen_parity.py`)",
         "",
-        f"{len(specs)} registered query ids, in driver-facing order (the",
-        "first 50 are the current witness-rotation window). Check kind:",
+        f"{len(specs)} registered query ids, in registry order (module order",
+        "of `registry._MODULES`, then registration order). Check kind:",
         "**hash** = DuckDB oracle hash-compare; **rows** = rows-only by the",
-        "driver contract's non-SQL exemption. Witness = last driver",
-        "CORRECTNESS round with a row for the id, and what it said.",
+        "driver contract's non-SQL exemption.",
         "",
-        "| # | id | implementation | check | last witness |",
-        "|---|---|---|---|---|",
+        "| # | id | implementation | check |",
+        "|---|---|---|---|",
     ]
     for i, (qid, spec) in enumerate(specs.items(), 1):
         fn = spec.fn
         mod = fn.__module__.replace("hadoop_distexec_spark.", "")
         site = f"{mod.replace('.', '/')}.py:{fn.__code__.co_firstlineno}"
         kind = "hash" if spec.oracle else "rows"
-        e = ledger.get(qid, {})
-        lr, res = e.get("last_round"), e.get("result", "never")
-        witness = f"r{lr:02d} {res}" if lr else "never"
-        lines.append(f"| {i} | `{qid}` | {site} | {kind} | {witness} |")
+        lines.append(f"| {i} | `{qid}` | {site} | {kind} |")
     lines.append("")
     return "\n".join(lines)
 

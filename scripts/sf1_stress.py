@@ -71,21 +71,19 @@ QUERIES = ["q_join_multi", "q_dedup_minhash", "q_dedup_groups",
            "q_itemset_triples", "q_bloom_fpr_eval", "q_pq_recall",
            "q_stream_dedup_data", "q_label_prop", "q_split_leakage",
            "q_mix_temperature", "q_compaction_plan", "q_hot_key_churn",
-           # round-9 registrations (the r08 capped graph tiers, funded by
-           # the approved attested-latest-3 witness policy): both capped
-           # edge builders plus their measured-agreement companions
+           # round-9 registrations (the r08 capped graph tiers): both
+           # capped edge builders plus their measured-agreement companions
            "q_dedup_embed_capped", "q_dedup_embed_capped_ivf",
            "q_ivf_cap_overlap", "q_cc_cap_agreement",
-           # round-10 registrations: the five former library tiers funded
-           # by the attested-latest-4 step, plus the estimator-audit /
-           # multimodal-dedup wave
+           # round-10 registrations: the five former library tiers, plus
+           # the estimator-audit / multimodal-dedup wave
            "q_triangle_count_capped", "q_label_prop_capped",
            "q_semantic_dedup_groups_capped", "q_multimodal_audio",
            "q_kmv_overlap", "q_multimodal_phash", "q_lsh_band_curve",
            "q_cell_compactness", "q_quantile_sample_eval",
            "q_dedup_rate_curve",
-           # round-11 registrations (the r10 library wave 3, funded by
-           # the attested-latest-5 step, plus the same-round r11 wave)
+           # round-11 registrations (the r10 library wave 3, plus the
+           # same-round r11 wave)
            "q_substring_runs", "q_ivf_pq_recall", "q_stream_outer_join",
            "q_line_dedup", "q_doc_verbatim_share", "q_gopher_rules",
            "q_embed_threshold_curve", "q_kcore_audit",

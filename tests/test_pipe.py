@@ -446,3 +446,103 @@ def test_split_plan_bins_contiguous_and_deterministic(spark, tmp_path):
     ]
     cached.unpersist()
     cached2.unpersist()
+
+
+def test_tmp_dir_removed_when_job_raises(spark, tree, tmp_path, monkeypatch):
+    """A raise after the tmp dir exists (here: split planning) propagates,
+    and ``<dst>/_distexec_tmp`` is still removed (reference deletes tmp in
+    a finally, DistExec.java:333-338)."""
+    from hadoop_distexec_spark.pipe import executor
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("planning failed")
+
+    monkeypatch.setattr(executor, "plan_partitions", boom)
+    dst = tmp_path / "out"
+    with pytest.raises(RuntimeError, match="planning failed"):
+        distexec(spark, str(tree), str(dst), "cat")
+    assert dst.is_dir()
+    assert not (dst / "_distexec_tmp").exists()
+
+
+@pytest.fixture(params=["fd_direct", "thread_pump"])
+def fault_tree(request, tmp_path):
+    """A small tree (one file bigger than a pipe buffer) behind one of the
+    two exec paths. ``fd_direct``: plain local paths, whose handles carry
+    OS descriptors the child is wired to. ``thread_pump``: a MappedFS
+    whose handles hide their descriptor, so ``_fd_handles`` declines and
+    the pump threads move the bytes. Yields (src, dst, fs, dst_local)."""
+    import io
+
+    from hadoop_distexec_spark.fs import MappedFS
+
+    store = tmp_path / "store"
+    t = store / "tree"
+    (t / "sub").mkdir(parents=True)
+    (t / "a.txt").write_text("Hello this is my string")
+    (t / "sub" / "b.txt").write_text("line one\nline two with pattern\n")
+    (t / "sub" / "big.bin").write_bytes(bytes(range(256)) * 800)
+    (t / "tiny.txt").write_text("x")
+    if request.param == "fd_direct":
+        return str(t), str(store / "out"), None, store / "out"
+
+    class NoFd:
+        def __init__(self, f):
+            self._f = f
+
+        def fileno(self):
+            raise io.UnsupportedOperation("fileno")
+
+        def __getattr__(self, name):
+            return getattr(self._f, name)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._f.close()
+
+    class PumpFS(MappedFS):
+        def open(self, path, mode="rb", buffering=-1):
+            return NoFd(super().open(path, mode, buffering))
+
+    fs = PumpFS("mock", str(store))
+    from hadoop_distexec_spark.pipe import executor
+
+    probe = executor._fd_handles(
+        fs, "mock://tree/a.txt", fs, "mock://probe.out", "mock://probe.err", False
+    )
+    assert probe is None, "thread_pump fixture must not take the fd-direct path"
+    return "mock://tree", "mock://out", fs, store / "out"
+
+
+def test_child_killed_mid_stream(spark, fault_tree):
+    """A child killed by a signal after reading part of its input FAILs
+    that file with the negative signal as exit code, commits nothing
+    (no destination, no .stderr, no tmp leftovers), logs one FAIL line
+    per file, and the job still returns every file
+    (ExecFilesMapper.java:173-208)."""
+    src, dst, fs, dst_local = fault_tree
+    res = distexec(spark, src, dst, "sh -c 'head -c 16 >/dev/null; kill -9 $$'", fs=fs)
+    rows = res.collect()
+    assert sorted(r["rel_dst"] for r in rows) == ["a.txt", "sub/b.txt", "sub/big.bin", "tiny.txt"]
+    assert all(r["status"] == "FAIL" and r["exit_code"] == -9 for r in rows), rows
+
+    log_dir = dst_local / "_distexec_logs"
+    leftovers = [
+        p.relative_to(dst_local).as_posix()
+        for p in dst_local.rglob("*")
+        if p.is_file()
+        and log_dir not in p.parents
+        and (dst_local / "_distexec_results") not in p.parents
+    ]
+    assert leftovers == []
+    assert not (dst_local / "_distexec_tmp").exists()
+    log_lines = [
+        line
+        for p in log_dir.iterdir()
+        if p.is_file() and not p.name.startswith((".", "_"))
+        for line in p.read_text().splitlines()
+        if line
+    ]
+    assert sorted(log_lines) == sorted(f"FAIL {r['rel_dst']} : {r['error']}" for r in rows)

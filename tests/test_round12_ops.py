@@ -74,13 +74,10 @@ def test_stream_full_outer_registered():
 
 
 def test_excision_wave_registered():
-    """The three excision tiers are registered under the latest-5 spare
-    slots AFTER the draft gates below went green — each registered
+    """The three excision tiers are registered, and each registered
     oracle is the SAME text the draft-parity tests pinned bit-exact at
     sf0.001 and sf0.01, so registration changed visibility, not
-    semantics. Window arithmetic holds: the 4 never-witnessed ids front
-    the r12 window without displacing the 25-strong r07 deadline cohort
-    (pre-computed in SURVEY §2.10; enforced by the staleness gate)."""
+    semantics."""
     from hadoop_distexec_spark.operators.llmops import (
         LINE_EXCISE_NEWLINE_ORACLE,
         LINE_EXCISE_ORACLE,

@@ -1,7 +1,6 @@
 """Invariant tests for the round-2 operator additions — properties the
 oracle hash-compare can't express (cross-query consistency, bounds)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from hadoop_distexec_spark import registry
@@ -124,175 +123,6 @@ def test_rag_retrieval_hydrates_topk(spark):
     per_q = out.groupBy("q_id").count()
     assert per_q.filter(F.col("count") != RAG_TOPN).count() == 0
     assert out.filter(F.col("lang").isNull()).count() == 0
-
-
-def test_priority_ids_all_registered():
-    """Every id in the registry's _PRIORITY window must be a registered
-    query — a typo would silently drop it out of the driver's bounded
-    CORRECTNESS window."""
-    from hadoop_distexec_spark.registry import _PRIORITY
-
-    known = set(SPECS)
-    missing = [q for q in _PRIORITY if q not in known]
-    assert not missing, f"_PRIORITY ids not registered: {missing}"
-    assert len(set(_PRIORITY)) == len(_PRIORITY), "duplicate ids in _PRIORITY"
-
-
-def test_priority_window_is_coherent():
-    """Round-agnostic window-intent invariants (replaces the per-round
-    pinned composition test, which needed hand-editing every rotation):
-      (a) every never-witnessed id sits inside the 50-entry driver
-          window — a new registration outside it would never earn its
-          first CORRECTNESS row;
-      (b) no window slot is WASTED: an id outside the window must not be
-          strictly staler (by the ledger's own staleness key, which
-          sorts never-witnessed first, then oldest witness, with
-          unattested ids ahead of attested siblings) than any id inside
-          it. Together with test_priority_window_matches_ledger this
-          pins the rotation's intent without encoding a specific round's
-          cohort."""
-    import json
-    import os
-    import sys
-
-    ids = list(SPECS)
-    window = ids[:50]
-    with open(os.path.join(os.path.dirname(__file__), "..", "WITNESS_LEDGER.json")) as f:
-        ledger = json.load(f)["ids"]
-
-    never = [q for q in SPECS if ledger.get(q, {}).get("last_round") is None]
-    out = [q for q in never if q not in window]
-    assert not out, f"never-witnessed ids outside the driver window: {out}"
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    import witness_ledger
-
-    keys_in = {q: witness_ledger.staleness_key(ledger[q], q) for q in window if q in ledger}
-    keys_out = {q: witness_ledger.staleness_key(ledger[q], q) for q in ids[50:] if q in ledger}
-    if keys_in and keys_out:
-        worst_in = max(keys_in.values())
-        best_out = min(keys_out.values())
-        assert best_out >= worst_in, (
-            f"window slot wasted: an outside id sorts staler than an inside "
-            f"id ({min(keys_out, key=keys_out.get)} vs {max(keys_in, key=keys_in.get)})"
-        )
-
-
-def test_priority_window_matches_ledger():
-    """registry._PRIORITY's first 50 entries must equal the computed
-    stalest-first window in WITNESS_LEDGER.json (scripts/witness_ledger.py)
-    — rotation is computed from the artifact, not hand-curated
-    (VERDICT r03 #7). Regenerate the ledger after a rotation edit."""
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..", "WITNESS_LEDGER.json")
-    if not os.path.exists(path):
-        import pytest
-
-        pytest.skip("WITNESS_LEDGER.json not generated")
-    with open(path) as f:
-        ledger = json.load(f)
-    window = list(SPECS)[: ledger["window"]]
-    assert set(window) == set(ledger["suggested_window"]), (
-        "registry._PRIORITY window diverges from the computed ledger window; "
-        "re-run scripts/witness_ledger.py and re-rotate"
-    )
-
-
-def test_witness_staleness_bounded():
-    """Rotation debt fails the build instead of relying on judge memory
-    (VERDICT r04 next-round #6), with the CHANGE-AWARE bound of VERDICT
-    r05 next-round #2: with R = the latest driver CORRECTNESS round,
-    every registered id must either
-      (a) sit inside the upcoming 50-entry driver window — it will be
-          witnessed in round R+1 — or
-      (b) hold a driver witness from round R-1 or newer — or
-      (c) hold a HASH-GREEN witness from round R-5 or newer AND an
-          ATTESTED source fingerprint (function source + oracle SQL,
-          registry.source_fingerprint) unchanged since that witness, per
-          WITNESS_LEDGER.json. Attested means the fingerprint was
-          recorded at witness time (rotate.py immediately after the
-          artifact) or validated against a judge-verified tree — never
-          back-filled from post-edit source (round-6 review finding:
-          back-filling fabricates "untouched" provenance for edited
-          operators).
-    Clause (c) is the r11+ witness-bandwidth policy proposed in
-    SURVEY §2.10 and APPROVED — indeed REQUIRED, since the r11 window
-    owed ~65 expiring ids against 50 slots under latest-4 — by VERDICT
-    r10 next-round #1 (it was R-4 in round 10, R-3 through round 9,
-    R-2 through round 8): an untouched operator's witness does not
-    decay as fast as an edited one's — the local byte-identical oracle
-    gate still covers it every session, and re-witnessing identical
-    semantics every other round starves NEW ids of window slots. The
-    tight R-1 bound stays for any id whose registered semantics
-    changed, whose fingerprint was never attested, or whose last
-    witness was rows-only (weaker evidence never ages on the relaxed
-    bound). This lifts the witness-bandwidth ceiling from 5x50=~250
-    ids to 6x50=~300 at the driver's 50-witness/round budget; the
-    registry was frozen at 208 against the latest-4 ~250 steady-state
-    ceiling (SURVEY §2.10 r10 arithmetic), and this notch funds the
-    round-11 registration waves (the four r10-drafted tiers plus the
-    four same-round wave-2 tiers, registry 208 -> 216) and the ~20
-    spare slots/round that carried the r12 registrations
-    (q_stream_full_outer plus the excision-transform waves
-    q_verbatim_excise / q_line_excise / q_line_excise_newline /
-    q_decontam_excise / q_intradoc_excise / q_excise_impact /
-    q_pps_sample, 216 -> 224) with no further policy change.
-    Once a new CORRECTNESS artifact lands, `python scripts/rotate.py`
-    (rotation + ledger + parity in ONE commit) is the only way to keep
-    this green, which is exactly the point."""
-    import glob
-    import json
-    import os
-    import re
-
-    from hadoop_distexec_spark.registry import source_fingerprint
-
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    rounds = {}
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        with open(path) as f:
-            rounds[int(m.group(1))] = json.load(f)
-    if not rounds:
-        import pytest
-
-        pytest.skip("no CORRECTNESS artifacts")
-    ledger_path = os.path.join(repo, "WITNESS_LEDGER.json")
-    ledger_ids = {}
-    if os.path.exists(ledger_path):
-        with open(ledger_path) as f:
-            ledger_ids = json.load(f).get("ids", {})
-    latest = max(rounds)
-    last_seen = {}
-    for r in sorted(rounds):
-        for qid in rounds[r]:
-            last_seen[qid] = r
-    window = set(list(SPECS)[:50])
-    stale = []
-    for qid, spec in SPECS.items():
-        if qid in window:
-            continue
-        seen = last_seen.get(qid, 0)
-        if seen >= latest - 1:
-            continue
-        untouched = (
-            qid in ledger_ids
-            and ledger_ids[qid].get("fp_attested") is True
-            and ledger_ids[qid].get("fp") == source_fingerprint(spec)
-            and ledger_ids[qid].get("fp_round") == seen
-            and ledger_ids[qid].get("result") == "hash_green"
-        )
-        if untouched and seen >= latest - 5:
-            continue
-        stale.append(qid)
-    assert not stale, (
-        f"ids outside the rotation window with witnesses older than their "
-        f"bound (r{latest - 1:02d}, or r{latest - 5:02d} if attested "
-        f"hash-green and untouched since last witness): {stale} — run "
-        f"`python scripts/rotate.py`"
-    )
 
 
 def test_join_bloom_restores_session_confs(spark):

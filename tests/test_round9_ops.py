@@ -2,11 +2,10 @@
 (triangle_count_capped, label_prop_capped, semantic_dedup_groups_capped)
 plus the audio and KMV tiers are bit-exact against their Spark builds at
 sf0.01 — the pre-registration gate every wave passes — plus the laws
-that tie them to the r09-registered capped edge builders. All five were
-drafted here in r09 and REGISTERED in r10 once VERDICT r09 #2 enacted
-the attested-latest-4 witness step (the sf0.01 parity duplicates the
-registered oracle gate now, but stays as the direct-call form that
-exercises the library functions without the registry)."""
+that tie them to the registered capped edge builders (the sf0.01
+parity duplicates the registered oracle gate, but stays as the
+direct-call form that exercises the library functions without the
+registry)."""
 
 from hadoop_distexec_spark.operators import llmops, pipeline
 from tests.conftest import SF_ORACLE
