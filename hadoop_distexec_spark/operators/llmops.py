@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from hadoop_distexec_spark.functions import group_local
 from hadoop_distexec_spark.registry import register
 from hadoop_distexec_spark.sources.tables import table
 
@@ -3044,58 +3045,30 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by an equivalence test against triangle_counts, which remains
     the oversized-cell fallback (and the frozen capped tier's engine)."""
     emb = table(spark, sf_dir, "embeddings")
-    edges = (
-        q_dedup_embed(spark, sf_dir)
-        .select("vec_a", "vec_b")
-        .localCheckpoint(eager=True)
-    )
+    edges = q_dedup_embed(spark, sf_dir).select("vec_a", "vec_b")
     cell_of = emb.select(F.col("vec_id").alias("vec_a"), F.col("label").alias("cell"))
-    return _tri_counts_cell_local(
-        edges.join(cell_of, "vec_a"),
-        fallback=lambda: triangle_counts(
-            edges.select(F.col("vec_a").alias("va"), F.col("vec_b").alias("vb"))
-        ),
-    ).localCheckpoint(eager=True)
+    return _tri_counts_cell_local(edges.join(cell_of, "vec_a")).localCheckpoint(
+        eager=True
+    )
 
 
-# per-cell edge bound for the one-task triangle pass: tighter than the
-# CC/k-core 4M bound because the per-edge work is a sorted-array
-# intersection (numpy per edge), not O(1) union-find steps — 1M edges is
-# ~seconds of single-task CPU and ~16 MB of ids; anything larger falls
-# back to the distributed degree-oriented join pipeline.
-TRI_CELL_LOCAL_MAX_EDGES = 1_000_000
-
-
-def _tri_counts_cell_local(
-    edges_cell: DataFrame,
-    fallback,
-    max_cell_edges: int = TRI_CELL_LOCAL_MAX_EDGES,
-) -> DataFrame:
+def _tri_counts_cell_local(edges_cell: DataFrame) -> DataFrame:
     """Per-vertex triangle counts over a CELL-BLOCKED (cell, vec_a,
     vec_b) edge set (vec_a < vec_b, unique): every triangle's vertices
     share a cell, so the count decomposes per cell. Each cell's pass
     enumerates each triangle exactly once at its (x, y) edge with the
     common-neighbor filter z > y; per-vertex counts do not depend on the
     enumeration scheme, so the result equals triangle_counts' oriented
-    pipeline row-for-row. The two-stage guard is the CC-family pattern:
-    the TOTAL edge count rides the checkpoint via Observation, and only
-    an over-bound total pays the per-cell max aggregate before invoking
-    ``fallback()`` (a thunk returning the distributed result)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    edges_cell = edges_cell.observe(
-        obs, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=True)
-    if (obs.get["n"] or 0) > max_cell_edges:
-        mx = (
-            edges_cell.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("mx"))
-            .collect()[0]["mx"]
+    pipeline row-for-row. A cell over ``BOUNDS["triangles"]`` edges sends
+    the whole graph to triangle_counts instead
+    (group_local.pin_if_groups_fit)."""
+    edges_cell, fits = group_local.pin_if_groups_fit(
+        edges_cell, "cell", "triangles"
+    )
+    if not fits:
+        return triangle_counts(
+            edges_cell.select(F.col("vec_a").alias("va"), F.col("vec_b").alias("vb"))
         )
-        if mx is not None and mx > max_cell_edges:
-            return fallback()
 
     def _tri(pdf):
         import numpy as np
@@ -8262,18 +8235,10 @@ def _kcore_peel(sym: DataFrame, k: int, rounds: int):
     return alive, converged
 
 
-# per-cell symmetric-edge bound for the one-task peel below: same
-# arithmetic as pipeline.CC_CELL_LOCAL_MAX_EDGES (4M edge rows x ~16
-# bytes of ids ~ 64 MB per Arrow group), duplicated here because
-# llmops must not import pipeline at module scope (import cycle).
-KCORE_CELL_LOCAL_MAX_EDGES = 4_000_000
-
-
 def _kcore_peel_cells(
     sym_cell: DataFrame,
     k: int,
     rounds: int,
-    max_cell_edges: int = KCORE_CELL_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Cell-local form of _kcore_peel (r12 optimization round): the edge
     set is cell-blocked (both endpoints of every capped edge share the
@@ -8285,13 +8250,11 @@ def _kcore_peel_cells(
     symmetric; returns (u, v, converged) — the surviving symmetric
     edges plus each cell's truncated-fixpoint certificate on every row.
 
-    Robustness (VERDICT r12 what's-wrong #1, closed r13): a cell whose
-    symmetric edge list exceeds ``max_cell_edges`` (one bounded agg on
-    the pinned edges decides — |E_cell| <= n_cell*cap bounds edges per
-    MEMBER, but a hot label's n_cell is unbounded) falls back to the
-    distributed _kcore_peel above, broadcast-stamped with its global
-    certificate — identical output contract, and the fast path can no
-    longer OOM a task on a pathological cell.
+    Robustness: |E_cell| <= n_cell*cap bounds edges per MEMBER, but a
+    hot label's n_cell is unbounded, so a cell over ``BOUNDS["kcore"]``
+    symmetric edges sends the whole graph to the distributed _kcore_peel
+    above (group_local.pin_if_groups_fit), stamped with its global
+    certificate — identical output contract.
 
     Equivalence to the distributed loop (which stays above as the tested
     reference): peeling is monotone and cells are independent, so a cell
@@ -8302,26 +8265,10 @@ def _kcore_peel_cells(
     harmlessly). The distributed loop paid 2 driver-blocking jobs per
     round (checkpoint + count: ~16 jobs on the 8-round budget); this is
     one applyInPandas pass over the bounded capped edge set."""
-    from pyspark.sql import Observation
-
-    # two-stage guard, zero extra jobs on the common path: the TOTAL
-    # edge count rides the checkpoint materialization via Observation
-    # (the r12 CC-loop idiom) — total <= bound proves every cell fits;
-    # only an over-bound total pays the per-cell max aggregate.
-    obs = Observation()
-    sym_cell = sym_cell.observe(
-        obs, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=True)
-    if (obs.get["n"] or 0) > max_cell_edges:
-        mx = (
-            sym_cell.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("mx"))
-            .collect()[0]["mx"]
-        )
-        if mx is not None and mx > max_cell_edges:
-            alive, converged = _kcore_peel(sym_cell.select("u", "v"), k, rounds)
-            return alive.withColumn("converged", F.lit(converged))
+    sym_cell, fits = group_local.pin_if_groups_fit(sym_cell, "cell", "kcore")
+    if not fits:
+        alive, converged = _kcore_peel(sym_cell.select("u", "v"), k, rounds)
+        return alive.withColumn("converged", F.lit(converged))
 
     def _peel(pdf):
         import numpy as np

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from hadoop_distexec_spark.functions import group_local
 from hadoop_distexec_spark.operators.llmops import (
     _SHINGLES_SQL,
     MAX_SHINGLE_DF,
@@ -485,28 +486,9 @@ def connected_components_jump(
     )
 
 
-# per-cell edge bound for the single-task union-find in
-# connected_components_cell_local: 4M edge rows x ~16 bytes of ids is
-# ~64 MB per Arrow group plus the O(|V_cell|) parent array — comfortably
-# inside one task's memory at any cap, since the capped builder bounds
-# |E_cell| <= m*cap. A corpus whose largest cell exceeds it falls back
-# to the distributed jump loop (identical output), so the fast path can
-# never OOM a task and the slow path can never be wrong.
-#
-# The PRACTICAL constraint at the bound is CPU, not memory (ADVICE r12
-# #1): the per-edge union step is an interpreted-Python find/union loop
-# (path-compressed, near-linear), so a cell AT the 4M bound costs tens
-# of seconds of single-task CPU — acceptable for a one-off consolidation
-# of a pathological hot cell (the alternative jump loop pays O(log
-# diameter) corpus-wide shuffle rounds), but the bound should not be
-# raised without vectorizing the union pass.
-CC_CELL_LOCAL_MAX_EDGES = 4_000_000
-
-
 def connected_components_cell_local(
     nodes: DataFrame,
     edges_cell: DataFrame,
-    max_cell_edges: int = CC_CELL_LOCAL_MAX_EDGES,
     validate_blocking: bool = False,
 ) -> DataFrame:
     """Connected components over a CELL-BLOCKED edge set — ``edges_cell``
@@ -532,10 +514,10 @@ def connected_components_cell_local(
     replaces O(log diameter) corpus-wide shuffle rounds; per-cell cost is
     linear in the edge list (array union-find with path compression).
 
-    Robustness: the fast path is taken only when the largest cell's edge
-    count (one map-side-combinable agg on the materialized edges) fits
-    ``max_cell_edges``; otherwise the distributed jump loop runs — same
-    result, graceful at chain diameters no single task should hold.
+    Robustness: a cell over ``BOUNDS["cc"]`` edges sends the whole graph
+    to the distributed jump loop instead (group_local.pin_if_groups_fit)
+    — same result, graceful at chain diameters no single task should
+    hold.
 
     HARD PRECONDITION (VERDICT r12 what's-wrong #3): every doc_id must
     appear under at most ONE cell. A cross-cell edge would make the
@@ -545,17 +527,7 @@ def connected_components_cell_local(
     ``validate_blocking=True`` adds one agg over the pinned edges that
     raises loudly on a violation — the debug path for any future caller
     whose blocking is not proof-by-construction."""
-    from pyspark.sql import Observation
-
-    # two-stage guard, zero extra jobs on the common path (r13): the
-    # TOTAL edge count rides the checkpoint materialization via
-    # Observation — total <= bound proves every cell fits; only an
-    # over-bound total pays the per-cell max aggregate.
-    _obs = Observation()
-    edges_cell = edges_cell.observe(
-        _obs, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=True)
-    _total = _obs.get["n"] or 0
+    edges_cell, fits = group_local.pin_if_groups_fit(edges_cell, "cell", "cc")
     if validate_blocking:
         bad = (
             edges_cell.select(
@@ -572,17 +544,8 @@ def connected_components_cell_local(
                 "under more than one cell — a cross-cell edge would "
                 "silently duplicate component labels"
             )
-    if _total > max_cell_edges:
-        mx = (
-            edges_cell.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("mx"))
-            .collect()[0]["mx"]
-        )
-        if mx is not None and mx > max_cell_edges:
-            return connected_components_jump(
-                nodes, edges_cell.select("doc_a", "doc_b")
-            )
+    if not fits:
+        return connected_components_jump(nodes, edges_cell.select("doc_a", "doc_b"))
 
     def _uf_min_label(pdf):
         import numpy as np
@@ -644,6 +607,25 @@ _NGRAM_PAIRS_SQL = f"""
 """
 
 
+def _ngram_dedup_labels(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> DataFrame:
+    """(doc_id, component = min reachable doc_id) over the q_dedup_ngram
+    near-dup pair graph; ``docs`` carries every doc_id. The pair list is
+    SMALL by nature (it is the dedup OUTPUT, not the corpus — 260 edges
+    at sf0.1), yet the distributed min-label loop paid ~1.3s of
+    per-round blocking jobs on it, so the edges run through
+    connected_components_cell_local under a single cell: one union-find
+    pass when the pair list fits one task, the distributed jump loop
+    otherwise — identical labels either way."""
+    from hadoop_distexec_spark.operators.llmops import q_dedup_ngram
+
+    edges = q_dedup_ngram(spark, sf_dir).select(
+        F.lit(0).alias("cell"), "doc_a", "doc_b"
+    )
+    return connected_components_cell_local(docs, edges)
+
+
 # Shared by q_dedup_groups and the round-8-prep cluster-size spectrum
 # (dedup_cluster_stats wraps this byte-identical text as a subquery, so the
 # two can never drift — and q_dedup_groups' registered fingerprint is
@@ -683,21 +665,9 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     it with a recursive-CTE transitive closure — genuinely iterative on
     the oracle side, yet still hash-checkable.
 
-    Shape (r13): the near-dup pair list is SMALL by nature (it is the
-    dedup OUTPUT, not the corpus — 260 edges at sf0.1), yet the
-    distributed min-label loop paid ~1.3s of per-round blocking jobs on
-    it. The edges now run through connected_components_cell_local under
-    a single cell: when the measured edge count fits one task
-    (CC_CELL_LOCAL_MAX_EDGES) a single union-find pass labels the graph;
-    a larger pair list falls back to the distributed jump loop —
-    identical labels either way (the r12 guard pattern)."""
-    from hadoop_distexec_spark.operators.llmops import q_dedup_ngram
-
+    Shape: see _ngram_dedup_labels."""
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    edges = q_dedup_ngram(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components_cell_local(
-        docs, edges.select(F.lit(0).alias("cell"), "doc_a", "doc_b")
-    )
+    labels = _ngram_dedup_labels(spark, sf_dir, docs)
     return labels.withColumn(
         "cluster_size", F.count(F.lit(1)).over(W.partitionBy("component")).cast("long")
     )
@@ -1002,16 +972,13 @@ def q_group_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the operator a user actually runs to deduplicate: one row per
     cluster = the keep-list; n_dropped accounts the removals.
 
-    Shape on top of connected_components' per-round endpoint shuffle: one
+    Shape on top of q_dedup_groups' labelling (_ngram_dedup_labels): one
     doc_id-keyed broadcast-sized join to hydrate lengths, then a single
     component-keyed Exchange shared by both window functions (same
     partitioning => one shuffle, plan-verified in tests). Oracle: the
     recursive-CTE closure again, plus an argmax window."""
-    from hadoop_distexec_spark.operators.llmops import q_dedup_ngram
-
     docs = table(spark, sf_dir, "documents")
-    edges = q_dedup_ngram(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(docs.select("doc_id"), edges)
+    labels = _ngram_dedup_labels(spark, sf_dir, docs.select("doc_id"))
     j = labels.join(docs.select("doc_id", "n_chars"), "doc_id")
     wsel = W.partitionBy("component").orderBy(F.col("n_chars").desc(), "doc_id")
     wcnt = W.partitionBy("component")
@@ -1213,23 +1180,14 @@ def label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_lpa_labels_cell_local, the r12 CC-family playbook; measured at
     sf0.1 the distributed loop paid ~3 blocking jobs/round on a bounded
     edge set). Cells larger than the per-task edge bound fall back to
-    the distributed _lpa_labels loop: the edge list is built once,
-    symmetrized, and localCheckpoint-pinned; each round is ONE equi-join
+    the distributed _lpa_labels loop: each round is ONE equi-join
     against the pinned edges plus one (node, label) hash aggregate and a
     per-node top-1 window. Rounds are a constant, not data-dependent."""
     from hadoop_distexec_spark.operators.llmops import q_dedup_embed
 
     emb = table(spark, sf_dir, "embeddings")
     nodes = emb.select(F.col("vec_id").alias("v"))
-    # pin the cosine pair join BEFORE fanning out — downstream consumers
-    # (the max-cell guard and the per-cell grouping, or the fallback's
-    # symmetrize union) would otherwise each evaluate the expensive edge
-    # build (round-7 review finding)
-    edges = (
-        q_dedup_embed(spark, sf_dir)
-        .select("vec_a", "vec_b")
-        .localCheckpoint(eager=True)
-    )
+    edges = q_dedup_embed(spark, sf_dir).select("vec_a", "vec_b")
     # the builder blocks by label: attach each edge's cell with a pruned
     # 2-column equi-join on vec_a (both endpoints share the label)
     cell_of = emb.select(F.col("vec_id").alias("vec_a"), F.col("label").alias("cell"))
@@ -1276,7 +1234,6 @@ def _lpa_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 def _lpa_labels_cell_local(
     nodes: DataFrame,
     edges_cell: DataFrame,
-    max_cell_edges: int = CC_CELL_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """_lpa_labels over a CELL-BLOCKED edge set — ``edges_cell`` is
     (cell, vec_a, vec_b) where both endpoints share the cell (the label
@@ -1291,18 +1248,11 @@ def _lpa_labels_cell_local(
     round changes nothing is safe: a synchronous fixed point reproduces
     itself, so rounds k+1..LPA_ROUNDS are no-ops.
 
-    Cells whose edge list exceeds ``max_cell_edges`` (one bounded agg on
-    the materialized edges decides) fall back to the distributed
-    _lpa_labels loop — identical output, the fast path cannot OOM a
-    task and the slow path cannot be wrong."""
-    edges_cell = edges_cell.localCheckpoint(eager=True)
-    mx = (
-        edges_cell.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("mx"))
-        .collect()[0]["mx"]
-    )
-    if mx is not None and mx > max_cell_edges:
+    A cell over ``BOUNDS["lpa"]`` edges sends the whole graph to the
+    distributed _lpa_labels loop instead (group_local.pin_if_groups_fit)
+    — identical output."""
+    edges_cell, fits = group_local.pin_if_groups_fit(edges_cell, "cell", "lpa")
+    if not fits:
         return _lpa_labels(nodes, edges_cell.select("vec_a", "vec_b"))
 
     def _lpa_cell(pdf):

@@ -14,6 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from hadoop_distexec_spark.functions import group_local
 from hadoop_distexec_spark.functions.numeric import SQL_REVENUE, dsum, revenue_expr
 from hadoop_distexec_spark.registry import register
 from hadoop_distexec_spark.sources.tables import table
@@ -1168,6 +1169,55 @@ def _pct_agg_sql(p: int) -> str:
     return f"({vlo} + ({vhi} - {vlo}) * (MAX(rem{p}) / 100.0))"
 
 
+def _spark_pcts(df: DataFrame, pcts, extra_aggs=()) -> DataFrame:
+    """Spark twin of _pct_row_sql / _pct_agg_sql: the integer-exact
+    interpolated percentiles of ``v`` per ``g`` over ``df`` (g, v, ...),
+    one window sort that spills. Returns (g, n, p{p} for each p in
+    ``pcts``, then ``extra_aggs``). Every input column reaches the final
+    groupBy, so ``extra_aggs`` can read any of them and ride the same
+    Exchange instead of a second scan."""
+    ranked = df.select(
+        "*",
+        (F.row_number().over(W.partitionBy("g").orderBy("v")) - 1).alias("i"),
+        F.count(F.lit(1)).over(W.partitionBy("g")).alias("n"),
+    )
+    sel = [f"_{c}{p}" for p in pcts for c in ("vlo", "vhi", "rem")]
+    for p in pcts:
+        lo = F.expr(f"((n - 1) * {p}) div 100")
+        rem = ((F.col("n") - 1) * p) % 100
+        hi = lo + F.when(rem > 0, 1).otherwise(0)
+        ranked = ranked.withColumns({
+            f"_vlo{p}": F.when(F.col("i") == lo, F.col("v")),
+            f"_vhi{p}": F.when(F.col("i") == hi, F.col("v")),
+            f"_rem{p}": rem,
+        })
+    agg = ranked.groupBy("g").agg(
+        F.max("n").alias("n"), *[F.max(c).alias(c) for c in sel], *extra_aggs
+    )
+
+    def pct(p: int):
+        vlo, vhi = F.col(f"_vlo{p}"), F.col(f"_vhi{p}")
+        return vlo + (vhi - vlo) * (F.col(f"_rem{p}").cast("double") / 100.0)
+
+    # a fresh g attribute: callers join the result back onto ``df``
+    return agg.select(
+        F.col("g").alias("g"), "n", *[pct(p).alias(f"p{p}") for p in pcts],
+        *[c for c in agg.columns if c not in ("g", "n", *sel)],
+    )
+
+
+def _interp_pct_np(xs, p: int) -> float:
+    """Numpy twin of _spark_pcts for one group: the integer-exact
+    interpolated p-th percentile of the ascending-sorted array ``xs``,
+    with the identical IEEE operation order, so the value is bit-equal
+    to the window tier's."""
+    n = len(xs)
+    lo = ((n - 1) * p) // 100
+    rem = ((n - 1) * p) % 100
+    hi = lo + (1 if rem > 0 else 0)
+    return float(xs[lo]) + (float(xs[hi]) - float(xs[lo])) * (rem / 100.0)
+
+
 @register(
     "q_agg_percentile",
     oracle=f"""
@@ -1204,40 +1254,29 @@ def q_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape (r13): the exact tier runs as one Arrow pass per group — numpy
     sorts the bounded group in-task and applies the identical integer-
-    exact rank interpolation at all three points (the q_robust_stats
-    rewrite, guide §4.2; bit-equal by the shared formula, pinned by
-    test_agg_percentile_arrow_matches_window_tier) — while the GK
-    production tier stays a map-side-combinable hash aggregate. A group
-    over ROBUST_GROUP_LOCAL_MAX_ROWS (one bounded agg decides) falls
-    back to the r4 window tier below, which sorts with spilling. At
-    100 TB the exact path is the audit tier and approx_percentile is the
-    production tier — this query ships both and proves they agree."""
+    exact rank interpolation at all three points (_interp_pct_np, the
+    q_robust_stats rewrite, guide §4.2) — while the GK production tier
+    stays a map-side-combinable hash aggregate. A group over
+    ``BOUNDS["order_stats"]`` rows sends every group to the r4 window
+    tier (_spark_pcts) instead, which sorts with spilling
+    (group_local.pin_if_groups_fit). At 100 TB the exact path is the
+    audit tier and approx_percentile is the production tier — this query
+    ships both and proves they agree."""
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"), F.col("l_quantity").alias("v")
     )
-    grp_max = (
-        li.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("mx"))
-        .collect()[0]["mx"]
-    )
-    if grp_max is not None and grp_max <= ROBUST_GROUP_LOCAL_MAX_ROWS:
+    approx_p50 = F.percentile_approx("v", 0.5, 10000).alias("_approx_p50")
+    li, fits = group_local.pin_if_groups_fit(li, "g", "order_stats")
+    if fits:
 
         def _pcts(pdf):
             import numpy as np
             import pandas as pd
 
             xs = np.sort(pdf["v"].to_numpy())
-            n = len(xs)
-            row = {"g": [pdf["g"].iloc[0]], "n": [n]}
+            row = {"g": [pdf["g"].iloc[0]], "n": [len(xs)]}
             for p in _PCTS:
-                lo = ((n - 1) * p) // 100
-                rem = ((n - 1) * p) % 100
-                hi = lo + (1 if rem > 0 else 0)
-                row[f"p{p}"] = [
-                    float(xs[lo])
-                    + (float(xs[hi]) - float(xs[lo])) * (rem / 100.0)
-                ]
+                row[f"p{p}"] = [_interp_pct_np(xs, p)]
             return pd.DataFrame(row)
 
         exact = li.groupBy("g").applyInPandas(
@@ -1245,47 +1284,9 @@ def q_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="g string, n long, "
             + ", ".join(f"p{p} double" for p in _PCTS),
         )
-        approx = li.groupBy("g").agg(
-            F.percentile_approx("v", 0.5, 10000).alias("_approx_p50")
-        )
-        return exact.join(approx, "g").select(
-            F.col("g").alias("l_returnflag"), "n", "p25", "p50", "p75",
-            (F.abs(F.col("_approx_p50") - F.col("p50")) <= F.lit(1.0)).alias(
-                "median_ok"
-            ),
-        )
-
-    w = W.partitionBy("g").orderBy("v")
-    # rank index, group size, and the per-percentile lo/hi rank selectors
-    # are all per-row columns (n is constant within a group, so the
-    # selector booleans and rem are too — aggregated with max below).
-    cols = ["g", "v", (F.row_number().over(w) - 1).alias("i"),
-            F.count(F.lit(1)).over(W.partitionBy("g")).alias("n")]
-    ranked = li.select(*cols)
-    for p in _PCTS:
-        lo = F.expr(f"((n - 1) * {p}) div 100")
-        rem = ((F.col("n") - 1) * p) % 100
-        hi = lo + F.when(rem > 0, 1).otherwise(0)
-        ranked = ranked.withColumns({
-            f"_vlo{p}": F.when(F.col("i") == lo, F.col("v")),
-            f"_vhi{p}": F.when(F.col("i") == hi, F.col("v")),
-            f"_rem{p}": rem,
-        })
-
-    def pct(p: int):
-        vlo, vhi = F.col(f"_vlo{p}"), F.col(f"_vhi{p}")
-        frac = F.col(f"_rem{p}").cast("double") / 100.0
-        return vlo + (vhi - vlo) * frac
-
-    agg = ranked.groupBy("g").agg(
-        F.max("n").alias("n"),
-        *[f
-          for p in _PCTS
-          for f in (F.max(f"_vlo{p}").alias(f"_vlo{p}"),
-                    F.max(f"_vhi{p}").alias(f"_vhi{p}"),
-                    F.max(f"_rem{p}").alias(f"_rem{p}"))],
-        F.percentile_approx("v", 0.5, 10000).alias("_approx_p50"),
-    ).withColumns({f"p{p}": pct(p) for p in _PCTS})
+        agg = exact.join(li.groupBy("g").agg(approx_p50), "g")
+    else:
+        agg = _spark_pcts(li, _PCTS, [approx_p50])
     # GK sketch with accuracy 10000 has rank error <= n/10000 (~6 ranks at
     # sf0.1); l_quantity is dense near the median, so 1.0 of headroom is
     # generous while still catching a broken sketch.
@@ -1350,34 +1351,9 @@ def q_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"), F.col("l_extendedprice").alias("v")
     )
-    w = W.partitionBy("g").orderBy("v")
-    ranked = li.select(
-        "g", "v",
-        (F.row_number().over(w) - 1).alias("i"),
-        F.count(F.lit(1)).over(W.partitionBy("g")).alias("n"),
-    )
-    for p in _PCTS:
-        lo = F.expr(f"((n - 1) * {p}) div 100")
-        rem = ((F.col("n") - 1) * p) % 100
-        hi = lo + F.when(rem > 0, 1).otherwise(0)
-        ranked = ranked.withColumns({
-            f"_vlo{p}": F.when(F.col("i") == lo, F.col("v")),
-            f"_vhi{p}": F.when(F.col("i") == hi, F.col("v")),
-            f"_rem{p}": rem,
-        })
-
-    def pct(p: int):
-        vlo, vhi = F.col(f"_vlo{p}"), F.col(f"_vhi{p}")
-        return vlo + (vhi - vlo) * (F.col(f"_rem{p}").cast("double") / 100.0)
-
-    bounds = ranked.groupBy("g").agg(
-        *[f
-          for p in _PCTS
-          for f in (F.max(f"_vlo{p}").alias(f"_vlo{p}"),
-                    F.max(f"_vhi{p}").alias(f"_vhi{p}"),
-                    F.max(f"_rem{p}").alias(f"_rem{p}"))],
-        F.percentile_approx("v", [p / 100.0 for p in _PCTS], 10000).alias("_apx"),
-    ).withColumns({f"p{p}": pct(p) for p in _PCTS})
+    bounds = _spark_pcts(li, _PCTS, [
+        F.percentile_approx("v", [p / 100.0 for p in _PCTS], 10000).alias("_apx")
+    ])
 
     def close(p: int, idx: int):
         exact = F.col(f"p{p}")
@@ -2277,90 +2253,25 @@ def _median_sql(src: str, g: str, v: str, out: str) -> str:
       FROM {out}_r GROUP BY g, n)"""
 
 
-def _spark_median(df: DataFrame, g: str, v: str, out: str,
-                  extra_aggs: list = ()) -> DataFrame:
-    """Spark twin of _median_sql: integer-exact interpolated per-group
-    median. Returns (g, n_{out}, {out}). ``extra_aggs`` ride the same
-    final groupBy (same Exchange) — q_robust_stats fuses its
-    approx_percentile production tier here instead of paying a second
-    scan of the input."""
-    w = W.partitionBy(g).orderBy(v)
-    others = [c for c in df.columns if c not in (g, v)]
-    ranked = df.select(
-        F.col(g).alias("g"),
-        F.col(v).alias("v"),
-        *others,
-        (F.row_number().over(w) - 1).alias("i"),
-        F.count(F.lit(1)).over(W.partitionBy(g)).alias("n"),
-    )
-    lo = F.expr("(n - 1) div 2")
-    rem = ((F.col("n") - 1) * 50) % 100
-    hi = lo + F.when(rem > 0, 1).otherwise(0)
-    ranked = ranked.select(
-        "g", "n", "v", *others,
-        F.when(F.col("i") == lo, F.col("v")).alias("_vlo"),
-        F.when(F.col("i") == hi, F.col("v")).alias("_vhi"),
-        rem.alias("_rem"),
-    )
-    agged = ranked.groupBy("g").agg(
-        F.max("n").alias(f"n_{out}"),
-        F.max("_vlo").alias("_vlo"),
-        F.max("_vhi").alias("_vhi"),
-        F.max("_rem").alias("_rem"),
-        *extra_aggs,
-    )
-    extra_names = [c for c in agged.columns
-                   if c not in ("g", f"n_{out}", "_vlo", "_vhi", "_rem")]
-    return agged.select(
-        "g",
-        f"n_{out}",
-        (
-            F.col("_vlo")
-            + (F.col("_vhi") - F.col("_vlo"))
-            * (F.col("_rem").cast("double") / 100.0)
-        ).alias(out),
-        *extra_names,
-    )
-
-
 _MAD_K = 1.4826  # consistency constant: MAD * k estimates sigma for normals
 _MAD_Z = 3.0
-
-# per-group row bound for the Arrow exact-order-statistics path of
-# q_robust_stats: 8M float64 values are ~64 MB in one task (plus the
-# numpy sort's copy) — comfortably in-task; a corpus whose largest group
-# exceeds it falls back to the spilling window tier (identical output),
-# the connected_components_cell_local guard pattern.
-ROBUST_GROUP_LOCAL_MAX_ROWS = 8_000_000
-
-
-def _interp_median_np(xs):
-    """The integer-exact interpolated median of a 1-D float64 numpy
-    array — the same lo/hi/rem arithmetic as _median_sql/_spark_median,
-    evaluated with the identical IEEE operation order, so the result is
-    bit-equal to the window tier's."""
-    import numpy as np
-
-    xs = np.sort(xs)
-    n = len(xs)
-    lo = (n - 1) // 2
-    rem = ((n - 1) * 50) % 100
-    hi = lo + (1 if rem > 0 else 0)
-    return float(xs[lo]) + (float(xs[hi]) - float(xs[lo])) * (rem / 100.0), n
 
 
 def _group_median_arrow(df: DataFrame) -> DataFrame:
     """Per-group exact interpolated median via one Arrow pass: numpy
     sorts each bounded group in-task (guide §4.2) instead of a
     single-partition-per-group WindowExec sort + rank arithmetic.
-    Input (g, v); output (g, n_med, med), bit-equal to
-    _spark_median(df, 'g', 'v', 'med')."""
+    Input (g, v); output (g, n_med, med), bit-equal to _spark_pcts(df,
+    [50]) (g, n, p50)."""
 
     def _med(pdf):
+        import numpy as np
         import pandas as pd
 
-        m, n = _interp_median_np(pdf["v"].to_numpy())
-        return pd.DataFrame({"g": [pdf["g"].iloc[0]], "n_med": [n], "med": [m]})
+        xs = np.sort(pdf["v"].to_numpy())
+        return pd.DataFrame({
+            "g": [pdf["g"].iloc[0]], "n_med": [len(xs)], "med": [_interp_pct_np(xs, 50)]
+        })
 
     return df.groupBy("g").applyInPandas(_med, schema="g string, n_med long, med double")
 
@@ -2373,10 +2284,11 @@ def _group_mad_outliers_arrow(devs: DataFrame) -> DataFrame:
     as the old broadcast-join pass. Output (g, mad, n_outliers)."""
 
     def _mad(pdf):
+        import numpy as np
         import pandas as pd
 
-        d = pdf["v"].to_numpy()
-        m, _ = _interp_median_np(d)
+        d = np.sort(pdf["v"].to_numpy())
+        m = _interp_pct_np(d, 50)
         n_out = int((d > _MAD_Z * (_MAD_K * m)).sum())
         return pd.DataFrame({"g": [pdf["g"].iloc[0]], "mad": [m], "n_outliers": [n_out]})
 
@@ -2389,10 +2301,9 @@ def _robust_stats_window_tier(li: DataFrame, _close) -> DataFrame:
     """The r8 window-tier body of q_robust_stats, kept verbatim as the
     oversized-group fallback (and the tested reference twin) for the
     Arrow path above."""
-    med = _spark_median(
-        li, "g", "v", "med",
-        extra_aggs=[F.percentile_approx("v", 0.5, 10000).alias("amed")],
-    )
+    med = _spark_pcts(
+        li, [50], [F.percentile_approx("v", 0.5, 10000).alias("amed")]
+    ).select("g", F.col("n").alias("n_med"), F.col("p50").alias("med"), "amed")
     devs = (
         li.join(F.broadcast(med), li.g == med.g)
         .select(
@@ -2403,10 +2314,9 @@ def _robust_stats_window_tier(li: DataFrame, _close) -> DataFrame:
         .persist()
     )
     devs.count()
-    mad = _spark_median(
-        devs, "g", "v", "mad",
-        extra_aggs=[F.percentile_approx("av", 0.5, 10000).alias("amad")],
-    )
+    mad = _spark_pcts(
+        devs, [50], [F.percentile_approx("av", 0.5, 10000).alias("amad")]
+    ).select("g", F.col("p50").alias("mad"), "amad")
     thresh = F.lit(_MAD_Z) * (F.lit(_MAD_K) * F.col("mad"))
     outl = (
         devs.join(F.broadcast(mad), "g")
@@ -2458,7 +2368,7 @@ def q_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hunts.
 
     Determinism: both medians use q_agg_percentile's integer-exact rank
-    arithmetic (shared _median_sql / _spark_median twins); deviations and
+    arithmetic (shared _median_sql / _spark_pcts twins); deviations and
     the outlier threshold are fixed per-row IEEE expression trees.
 
     Two tiers in one query (the q_agg_percentile pattern, VERDICT r04
@@ -2480,11 +2390,10 @@ def q_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced by recomputing the cheap scan+broadcast projection per
     consumer. The approx tier stays two hash-aggregate passes (sketches
     merge map-side), no sort, no window — the plan that runs at 100 TB.
-    A group larger than ROBUST_GROUP_LOCAL_MAX_ROWS (one bounded agg
-    decides) falls back to the r8 window-tier implementation
-    (_spark_median), which sorts with spilling — the CC-family guard
-    pattern: the fast path cannot OOM a task, the slow path cannot be
-    wrong. Measured at sf0.1: 4.5 -> 2.5s, 16 -> 12 jobs."""
+    A group over ``BOUNDS["order_stats"]`` rows sends every group to the
+    r8 window tier (_robust_stats_window_tier), which sorts with
+    spilling (group_local.pin_if_groups_fit). Measured at sf0.1:
+    4.5 -> 2.5s, 16 -> 12 jobs."""
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"), F.col("l_extendedprice").alias("v")
     )
@@ -2496,13 +2405,8 @@ def q_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # while still failing on a broken sketch or a wrong deviation pass.
         return F.abs(approx - exact) <= (F.lit(0.005) * F.abs(exact) + F.lit(1.0))
 
-    grp_max = (
-        li.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("mx"))
-        .collect()[0]["mx"]
-    )
-    if grp_max is not None and grp_max > ROBUST_GROUP_LOCAL_MAX_ROWS:
+    li, fits = group_local.pin_if_groups_fit(li, "g", "order_stats")
+    if not fits:
         return _robust_stats_window_tier(li, _close)
 
     # exact tier, Arrow pass 1: per-group n + interpolated median;

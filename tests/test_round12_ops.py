@@ -2141,32 +2141,6 @@ def test_cc_cell_local_matches_jump_on_capped_graph(spark):
     assert diff == 0
 
 
-def test_cc_cell_local_fallback_is_identical(spark):
-    """Forcing the oversized-cell fallback (max_cell_edges=0) routes
-    through connected_components_jump and yields the same labels."""
-    from pyspark.sql import functions as F
-
-    from hadoop_distexec_spark.operators.llmops import embed_edges_capped
-    from hadoop_distexec_spark.operators.pipeline import (
-        connected_components_cell_local,
-    )
-    from hadoop_distexec_spark.sources.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    emb = table(spark, sf, "embeddings")
-    nodes = emb.select(F.col("vec_id").alias("doc_id"))
-    edges = embed_edges_capped(spark, sf).select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    cell_of = emb.select(
-        F.col("vec_id").alias("doc_a"), F.col("label").alias("cell")
-    )
-    ewc = edges.join(cell_of, "doc_a")
-    fast = connected_components_cell_local(nodes, ewc)
-    fb = connected_components_cell_local(nodes, ewc, max_cell_edges=0)
-    assert fast.exceptAll(fb).unionAll(fb.exceptAll(fast)).count() == 0
-
-
 def test_cc_cell_local_chain_and_singletons(spark):
     """Hand-built graph: a chain 1-2-3-4 in cell A (min-label 1 must
     reach 4 through the chain), a pair (10,11) in cell B, and untouched

@@ -120,25 +120,6 @@ def test_robust_stats_arrow_tier_matches_window_tier(spark):
         assert a["n_outliers"] == w["n_outliers"]
 
 
-def test_robust_stats_forced_fallback_is_identical(spark):
-    """Forcing the oversized-group guard must route q_robust_stats
-    through the window tier and return the identical frame (the
-    CC-family forced-fallback pattern)."""
-    import hadoop_distexec_spark.operators.relational_ext as rx
-    from hadoop_distexec_spark.registry import specs
-
-    fn = specs()["q_robust_stats"].fn
-    sf = "/root/testdata/sf0.001"
-    fast = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
-    old = rx.ROBUST_GROUP_LOCAL_MAX_ROWS
-    rx.ROBUST_GROUP_LOCAL_MAX_ROWS = 1
-    try:
-        slow = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
-    finally:
-        rx.ROBUST_GROUP_LOCAL_MAX_ROWS = old
-    assert fast == slow
-
-
 def test_lpa_cell_local_matches_distributed_on_natural_graph(spark):
     """_lpa_labels_cell_local must be bit-identical to the distributed
     _lpa_labels loop on the real label-blocked q_dedup_embed graph."""
@@ -158,29 +139,6 @@ def test_lpa_cell_local_matches_distributed_on_natural_graph(spark):
     cell_of = emb.select(F.col("vec_id").alias("vec_a"), F.col("label").alias("cell"))
     fast = _lpa_labels_cell_local(nodes, edges.join(cell_of, "vec_a"))
     slow = _lpa_labels(nodes, edges)
-    assert fast.exceptAll(slow).count() == 0
-    assert slow.exceptAll(fast).count() == 0
-
-
-def test_lpa_cell_local_forced_fallback_is_identical(spark):
-    """With max_cell_edges=0 every cell is oversized: the guard must
-    route through _lpa_labels and return the identical labels."""
-    from pyspark.sql import functions as F
-
-    from hadoop_distexec_spark.operators.llmops import q_dedup_embed
-    from hadoop_distexec_spark.operators.pipeline import _lpa_labels_cell_local
-    from hadoop_distexec_spark.sources.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    emb = table(spark, sf, "embeddings")
-    nodes = emb.select(F.col("vec_id").alias("v"))
-    edges = (
-        q_dedup_embed(spark, sf).select("vec_a", "vec_b").localCheckpoint(eager=True)
-    )
-    cell_of = emb.select(F.col("vec_id").alias("vec_a"), F.col("label").alias("cell"))
-    ec = edges.join(cell_of, "vec_a")
-    fast = _lpa_labels_cell_local(nodes, ec)
-    slow = _lpa_labels_cell_local(nodes, ec, max_cell_edges=0)
     assert fast.exceptAll(slow).count() == 0
     assert slow.exceptAll(fast).count() == 0
 
@@ -366,31 +324,6 @@ def test_single_cell_cc_matches_distributed_on_ngram_graph(spark):
     assert slow.exceptAll(fast).count() == 0
 
 
-def test_kcore_peel_cells_oversized_fallback_is_identical(spark):
-    """_kcore_peel_cells r13 guard (VERDICT r12 #1): forcing the
-    max-cell-edges bound must route through the distributed _kcore_peel
-    and return the identical surviving edges + certificate."""
-    from pyspark.sql import functions as F
-
-    import hadoop_distexec_spark.operators.llmops as L
-    from hadoop_distexec_spark.sources.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    edges = L.embed_edges_capped(spark, sf).select("vec_a", "vec_b")
-    sym = edges.select(
-        F.col("vec_a").alias("u"), F.col("vec_b").alias("v")
-    ).unionByName(
-        edges.select(F.col("vec_b").alias("u"), F.col("vec_a").alias("v"))
-    )
-    emb = table(spark, sf, "embeddings").select("vec_id", "label")
-    cell_of = emb.select(F.col("vec_id").alias("u"), F.col("label").alias("cell"))
-    sc = sym.join(cell_of, "u")
-    fast = L._kcore_peel_cells(sc, L.KCORE_K, L.KCORE_ROUNDS)
-    slow = L._kcore_peel_cells(sc, L.KCORE_K, L.KCORE_ROUNDS, max_cell_edges=0)
-    assert fast.exceptAll(slow).count() == 0
-    assert slow.exceptAll(fast).count() == 0
-
-
 def test_cc_cell_local_validate_blocking_trips_on_cross_cell_edge(spark):
     """connected_components_cell_local's debug-path guard (VERDICT r12
     #3): a planted doc appearing under two cells must raise instead of
@@ -460,25 +393,6 @@ def test_contract_line_accounts_and_stabilizes_omissions():
     assert fast_id in c2["queries"]
 
 
-def test_agg_percentile_arrow_matches_window_tier(spark):
-    """q_agg_percentile r13: the Arrow exact tier must be bit-equal to
-    the window tier at every percentile point — forced by running the
-    registered fn both under and over the group-size guard."""
-    import hadoop_distexec_spark.operators.relational_ext as rx
-    from hadoop_distexec_spark.registry import specs
-
-    fn = specs()["q_agg_percentile"].fn
-    sf = "/root/testdata/sf0.001"
-    fast = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
-    old = rx.ROBUST_GROUP_LOCAL_MAX_ROWS
-    rx.ROBUST_GROUP_LOCAL_MAX_ROWS = 0
-    try:
-        slow = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
-    finally:
-        rx.ROBUST_GROUP_LOCAL_MAX_ROWS = old
-    assert fast == slow
-
-
 def test_tri_counts_cell_local_matches_oriented_pipeline(spark):
     """q_triangle_count r13: the per-cell enumeration must equal the
     degree-oriented join pipeline row-for-row on the natural graph and
@@ -495,7 +409,7 @@ def test_tri_counts_cell_local_matches_oriented_pipeline(spark):
         eager=True
     )
     cell_of = emb.select(F.col("vec_id").alias("vec_a"), F.col("label").alias("cell"))
-    fast = L._tri_counts_cell_local(edges.join(cell_of, "vec_a"), fallback=None)
+    fast = L._tri_counts_cell_local(edges.join(cell_of, "vec_a"))
     slow = L.triangle_counts(
         edges.select(F.col("vec_a").alias("va"), F.col("vec_b").alias("vb"))
     )
@@ -511,25 +425,6 @@ def test_tri_counts_cell_local_matches_oriented_pipeline(spark):
     pe = spark.createDataFrame(rows, "cell int, vec_a long, vec_b long")
     got = {
         r["vec_id"]: r["n_tri"]
-        for r in L._tri_counts_cell_local(pe, fallback=None).collect()
+        for r in L._tri_counts_cell_local(pe).collect()
     }
     assert got == {1: 3, 2: 3, 3: 3, 4: 3, 5: 1, 6: 1, 7: 1}
-
-
-def test_tri_counts_cell_local_forced_fallback(spark):
-    """max_cell_edges=0 must route through the fallback thunk."""
-    from pyspark.sql import functions as F
-
-    import hadoop_distexec_spark.operators.llmops as L
-
-    pe = spark.createDataFrame(
-        [(0, 1, 2), (0, 1, 3), (0, 2, 3)], "cell int, vec_a long, vec_b long"
-    )
-    out = L._tri_counts_cell_local(
-        pe,
-        fallback=lambda: L.triangle_counts(
-            pe.select(F.col("vec_a").alias("va"), F.col("vec_b").alias("vb"))
-        ),
-        max_cell_edges=0,
-    )
-    assert {r["vec_id"]: r["n_tri"] for r in out.collect()} == {1: 1, 2: 1, 3: 1}

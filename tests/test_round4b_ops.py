@@ -656,16 +656,16 @@ def test_transitions_logic_randomized(spark, events):
     )
 )
 def test_median_twin_logic_randomized(spark, vals):
-    """_spark_median must equal the textbook interpolated median on ANY
-    multiset — even/odd sizes, ties, negatives."""
+    """_spark_pcts at p50 must equal the textbook interpolated median on
+    ANY multiset — even/odd sizes, ties, negatives."""
     from pyspark.sql import Row
 
-    from hadoop_distexec_spark.operators.relational_ext import _spark_median
+    from hadoop_distexec_spark.operators.relational_ext import _spark_pcts
 
     df = spark.createDataFrame(
         [Row(g=g, v=float(v)) for g, v in vals], "g string, v double"
     )
-    got = {r["g"]: (r["n_m"], r["m"]) for r in _spark_median(df, "g", "v", "m").collect()}
+    got = {r["g"]: (r["n"], r["p50"]) for r in _spark_pcts(df, [50]).collect()}
     groups = {}
     for g, v in vals:
         groups.setdefault(g, []).append(float(v))
