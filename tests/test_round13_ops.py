@@ -120,6 +120,21 @@ def test_robust_stats_arrow_tier_matches_window_tier(spark):
         assert a["n_outliers"] == w["n_outliers"]
 
 
+def test_robust_stats_forced_fallback_is_identical(spark, monkeypatch):
+    """Forcing the oversized-group guard must route q_robust_stats
+    through the window tier and return the identical frame (the
+    CC-family forced-fallback pattern)."""
+    from hadoop_distexec_spark.functions.group_local import BOUNDS
+    from hadoop_distexec_spark.registry import specs
+
+    fn = specs()["q_robust_stats"].fn
+    sf = "/root/testdata/sf0.001"
+    fast = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
+    monkeypatch.setitem(BOUNDS, "order_stats", 1)
+    slow = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
+    assert fast == slow
+
+
 def test_lpa_cell_local_matches_distributed_on_natural_graph(spark):
     """_lpa_labels_cell_local must be bit-identical to the distributed
     _lpa_labels loop on the real label-blocked q_dedup_embed graph."""
@@ -391,6 +406,21 @@ def test_contract_line_accounts_and_stabilizes_omissions():
     out2["_prev_queries"] = {fast_id: 8.0}
     c2 = b._compact_contract_line(out2)
     assert fast_id in c2["queries"]
+
+
+def test_agg_percentile_arrow_matches_window_tier(spark, monkeypatch):
+    """q_agg_percentile r13: the Arrow exact tier must be bit-equal to
+    the window tier at every percentile point — forced by running the
+    registered fn both under and over the group-size guard."""
+    from hadoop_distexec_spark.functions.group_local import BOUNDS
+    from hadoop_distexec_spark.registry import specs
+
+    fn = specs()["q_agg_percentile"].fn
+    sf = "/root/testdata/sf0.001"
+    fast = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
+    monkeypatch.setitem(BOUNDS, "order_stats", 0)
+    slow = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
+    assert fast == slow
 
 
 def test_tri_counts_cell_local_matches_oriented_pipeline(spark):
