@@ -41,8 +41,11 @@ streams, distexec/ExecFilesMapper.java:35).
 Scale design: the manifest is a DataFrame (distributed listing, see
 sources/manifest.py); partitions are balanced by *bytes* with the same
 greedy rule as the reference's ExecInputFormat (DistExec.java:132-177) via
-``plan_partitions``; tasks write independently (no cross-task coordination;
-speculative execution must stay off, DistExec.java:443-445).
+``plan_partitions``, and ``limit_manifest`` cuts a strict prefix; both
+read their running totals from the one distributed prefix sum,
+``functions.prefix_sum.running_sums``. Tasks write independently (no
+cross-task coordination; speculative execution must stay off,
+DistExec.java:443-445).
 """
 
 from __future__ import annotations
@@ -57,12 +60,12 @@ from typing import Iterable, Iterator
 from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hadoop_distexec_spark.errors import DuplicationError
 from hadoop_distexec_spark.fs import FileSystem, executor_mutation_safe, resolve_fs
+from hadoop_distexec_spark.functions import prefix_sum
 from hadoop_distexec_spark.pipe.cmdline import exit_ok, tokenize
 from hadoop_distexec_spark.sources.manifest import build_manifest
 
@@ -80,9 +83,6 @@ def _spark_native(path: str) -> bool:
     return scheme in _SPARK_NATIVE_SCHEMES or len(scheme) == 1  # 1: drive letter
 
 BUF_SIZE = 128 * 1024  # reference copy.buf.size (ExecFilesMapper.java:35)
-# planning rows per task before the cheap partition-count heuristic is
-# re-planned at full width (flat-directory manifests; see plan_partitions)
-PLAN_ROWS_PER_PART = 4096
 PUMP_JOIN_TIMEOUT = 10.0  # reference SingleExecution.java:48-51
 CLEANUP_RETRIES = 3  # reference ExecFilesMapper.java:189-200
 CLEANUP_SLEEP = float(os.environ.get("DISTEXEC_CLEANUP_SLEEP", "3.0"))
@@ -447,178 +447,33 @@ def _exec_one_fd(
     return ("FAIL", rc, bytes_in, bytes_out, bytes_err, msg)
 
 
-def _plan_ordered_stats(files: DataFrame, n_parts: int, dp: int, pin, final_pin=None):
-    """Range-order the file manifest by src_path and collect per-partition
-    (byte total, row count) in one pass — the shared phase-1 of
-    plan_partitions and limit_manifest. ``pin`` materializes each probe
-    pass; ``final_pin`` (optional) re-pins whichever frame turns out to
-    be final with a stronger strategy.
-
-    Partition count is a proxy for manifest SIZE only when the tree is
-    deep — one flat directory with 10^6 files arrives as 1-2 listing
-    partitions and would collapse all planning onto 1-2 tasks. Phase 1
-    counts the real rows, so re-plan once at proper width when the cheap
-    first guess turns out badly undersized (rare; costs one extra pass
-    exactly when the manifest is big enough to warrant it).
-
-    WHY two pin strategies (ADVICE r05 #3): DataFrame.unpersist() is a
-    no-op for localCheckpoints, so a checkpoint-pinned UNDERSIZED probe
-    would sit on executor storage until GC — double storage exactly on
-    the large flat manifests the re-plan targets. So every probe pass is
-    pinned with the cheap, releasable ``pin`` (cache), and only the
-    final, correctly-sized frame gets ``final_pin`` (the caller's eager
-    localCheckpoint). When the probe IS final, ``final_pin`` materializes
-    it from the still-live cached blocks — no recompute, so partition
-    identity carries over to the checkpoint — and the cache is then
-    released.
-
-    Returns (ordered, part_stats, n_parts)."""
-
-    def collect_stats(o: DataFrame) -> dict:
-        # JVM-side per-partition stats: spark_partition_id + hash agg
-        # stays in codegen, where the former rdd.mapPartitionsWithIndex
-        # serialized every metadata row through Python workers — a
-        # visible slice of the fixed cost at toy size and a real
-        # bottleneck at 10^8-file manifests (VERDICT r07 #8). Empty
-        # partitions produce no group row; every consumer defaults
-        # missing ids to (0, 0).
-        rows = (
-            o.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.sum("size").alias("s"), F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-        return {r["pid"]: (r["s"] or 0, r["c"]) for r in rows}
-
-    def one(nparts: int, m):
-        o = m(
-            files.repartitionByRange(nparts, "src_path").sortWithinPartitions("src_path")
-        )
-        return o, collect_stats(o)
-
-    def _release(df):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-    probe, part_stats = one(n_parts, pin)
-    n_flat = sum(c for _, c in part_stats.values())
-    if n_parts < dp and n_flat > n_parts * PLAN_ROWS_PER_PART:
-        n_parts = min(dp, max(1, -(-n_flat // PLAN_ROWS_PER_PART)))
-        ordered, part_stats = one(n_parts, final_pin or pin)
-        _release(probe)  # cache-pinned => actually freed, unlike a checkpoint
-        return ordered, part_stats, n_parts
-    if final_pin is None:
-        return probe, part_stats, n_parts
-    ordered = final_pin(probe)
-    _release(probe)
-    # Re-collect the stats FROM the pinned frame: between the probe's
-    # stats job and this checkpoint, a lost cached block would have been
-    # recomputed through a fresh range-sampling pass that can land
-    # boundary rows in different partitions — offsets computed from the
-    # probe layout would then cut the wrong rows. The re-collect is one
-    # cheap metadata-row pass over checkpointed partitions and guarantees
-    # stats and partitions describe the SAME materialization.
-    return ordered, collect_stats(ordered), n_parts
-
-
 def plan_partitions(
     manifest: DataFrame, n_tasks: int | None = None
 ) -> tuple[DataFrame, int, DataFrame]:
     """Assign files to byte-balanced bins — the reference's greedy
     prefix-sum split planning (ExecInputFormat.getSplits,
-    DistExec.java:132-177), computed as a **distributed two-phase prefix
-    sum** so it scales to manifests of hundreds of millions of files:
+    DistExec.java:132-177): in src_path order, a file's bin is the bytes
+    before it divided by ``ceil(total / n_tasks)``, capped at the last
+    bin. The bytes-before column comes from the distributed prefix sum
+    (``functions.prefix_sum.running_sums``), so no single-partition
+    window runs and the driver sees O(#partitions) numbers.
 
-    1. range-partition + sort the manifest by src_path (deterministic
-       global order, each partition holds a contiguous range);
-    2. per-partition byte sums come back to the driver (one long per
-       partition — tiny) and become cumulative offsets;
-    3. each partition assigns bins locally from its offset.
-
-    No single-partition window anywhere; the driver only ever sees
-    O(#partitions) numbers.
-
-    Returns (planned, n_tasks, cached) — ``cached`` is the persisted
-    intermediate the caller must unpersist once planned rows have been
+    Returns (planned, n_tasks, pinned) — ``pinned`` is the checkpointed
+    intermediate the caller may release once the planned rows have been
     consumed."""
     files = manifest.filter(~F.col("is_dir"))
-    sc = files.sparkSession.sparkContext
-
-    # cap planning partitions by the manifest's OWN partition count: a
-    # small tree (one BFS level -> a couple of parallelize partitions)
-    # otherwise fans every planning job out to defaultParallelism tasks,
-    # and on a 64-file run the fixed per-task dispatch dominates the
-    # whole job (measured: the bulk of the tiny-file bench probe). Phase 1
-    # also yields n_files for the DOP rule (no separate count() job) and
-    # re-plans wider for flat-directory manifests — see _plan_ordered_stats.
-    n_plan_parts = max(1, min(sc.defaultParallelism, files.rdd.getNumPartitions()))
-    # Same pin discipline as limit_manifest (round-6 review finding #3
-    # applied here too): the bin-assignment pass below drives ordered.rdd
-    # in a LATER action than the stats collect, so the final frame must
-    # be an eager localCheckpoint — a cache-only pin could lose a block
-    # in between and recompute repartitionByRange with fresh sampled
-    # boundaries, silently applying the cumulative offsets to the wrong
-    # partition contents (mis-sized bins, destroyed byte balance). The
-    # sizing probe stays a releasable cache; _plan_ordered_stats
-    # re-collects stats from the checkpointed frame.
-    ordered, part_stats, n_plan_parts = _plan_ordered_stats(
-        files,
-        n_plan_parts,
-        sc.defaultParallelism,
-        lambda df: df.cache(),
-        final_pin=lambda df: df.localCheckpoint(eager=True),
-    )
-    part_sums = {i: s for i, (s, c) in part_stats.items()}
-    total = sum(part_sums.values())
-    n_files = sum(c for _, c in part_stats.values())
+    ranked, totals, pinned = prefix_sum.running_sums(files, "src_path", ["size"])
     if n_tasks is None:
-        cap = sc.defaultParallelism * 4
+        cap = files.sparkSession.sparkContext.defaultParallelism * 4
         # one map per file, capped — reference setMapCount (DistExec.java:419-426)
-        n_tasks = max(1, min(n_files, cap))
-    target = max(1, -(-total // n_tasks))  # ceil div
-    offsets = {}
-    acc = 0
-    for i in range(max(part_sums) + 1 if part_sums else 0):
-        offsets[i] = acc
-        acc += part_sums.get(i, 0)
-
-    # phase 2: bin assignment from the partition's global offset, fully
-    # JVM-side (VERDICT r07 #8 — the former mapPartitionsWithIndex pushed
-    # every manifest row through Python workers a second time before the
-    # run's own unavoidable crossing): spark_partition_id is projected
-    # BEFORE the window's pid exchange, so each row carries the physical
-    # partition it was materialized in; the offset map is a bounded
-    # (<= defaultParallelism-entry) literal; the running byte sum is a
-    # window over (pid, src_path) — same unique order assign() iterated —
-    # and the bin is exact bigint division, never IEEE.
-    if offsets:
-        off_map = F.create_map(
-            *[x for i, v in offsets.items() for x in (F.lit(i), F.lit(v))]
-        )
-        off_expr = F.coalesce(
-            F.element_at(off_map, F.col("_plan_pid")), F.lit(0)
-        )
-    else:  # empty manifest: no partitions materialized any rows
-        off_expr = F.lit(0)
-    run_w = (
-        W.partitionBy("_plan_pid")
-        .orderBy("src_path")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    cum = off_expr + F.coalesce(F.sum("size").over(run_w), F.lit(0))
-    planned = (
-        ordered.withColumn("_plan_pid", F.spark_partition_id())
-        .withColumn("_plan_cum", cum.cast("long"))
-        .withColumn(
-            "bin",
-            F.least(
-                F.expr(f"_plan_cum div {int(target)}"), F.lit(n_tasks - 1)
-            ).cast("int"),
-        )
-        .drop("_plan_pid", "_plan_cum")
-    )
-    return planned, n_tasks, ordered
+        n_tasks = max(1, min(totals["rows"], cap))
+    target = max(1, -(-totals["size"] // n_tasks))  # ceil div
+    # exact bigint division, never IEEE
+    planned = ranked.withColumn(
+        "bin",
+        F.least(F.expr(f"size_before div {int(target)}"), F.lit(n_tasks - 1)).cast("int"),
+    ).drop("size_before")
+    return planned, n_tasks, pinned
 
 
 def limit_manifest(
@@ -631,60 +486,25 @@ def limit_manifest(
     keep files, in deterministic src_path order, while the running file
     count stays < filelimit and the running byte total stays <= sizelimit.
 
-    Distributed with the same two-phase prefix-sum shape as
-    ``plan_partitions`` — per-partition (count, bytes) offsets to the
-    driver, local cumulative filter on executors — so truncating a
-    10^8-file manifest never funnels rows through one task. Directory
-    records are kept (empty-dir preservation is orthogonal to the copy
-    budget, and dropping a parent dir of a kept file would be wrong).
+    Both running totals come from the distributed prefix sum and are
+    monotone, so a JVM-side filter on them keeps a strict prefix.
+    Directory records are all kept (empty-dir preservation is orthogonal
+    to the copy budget, and dropping a parent dir of a kept file would be
+    wrong).
     """
     if filelimit is None and sizelimit is None:
         return manifest
     files = manifest.filter(~F.col("is_dir"))
     dirs = manifest.filter(F.col("is_dir"))
-    sc = files.sparkSession.sparkContext
-
-    n_parts = max(1, min(sc.defaultParallelism, files.rdd.getNumPartitions()))
-    # Pin partition identity before the two passes (eager localCheckpoint,
-    # NOT cache, for the FINAL frame): the offsets pass and the cut pass
-    # below both drive ordered.rdd, and an unmaterialized
-    # repartitionByRange re-executes per action with sampled range
-    # boundaries — the two jobs could land boundary rows in different
-    # partitions, applying offsets to the wrong contents (and re-running
-    # the manifest walk). Same eager-checkpoint rule as
-    # pack_sequences_distributed. The sizing PROBE pass uses a releasable
-    # cache instead (ADVICE r05 #3 — unpersist is a no-op on checkpoints,
-    # and a discarded undersized probe must not hold executor storage on
-    # exactly the big flat manifests the re-plan exists for).
-    ordered, part_stats, n_parts = _plan_ordered_stats(
-        files,
-        n_parts,
-        sc.defaultParallelism,
-        lambda df: df.cache(),
-        final_pin=lambda df: df.localCheckpoint(eager=True),
+    ranked, _, _ = prefix_sum.running_sums(
+        files.withColumn("_files", F.lit(1)), "src_path", ["size", "_files"]
     )
-    size_off, count_off, acc_s, acc_c = {}, {}, 0, 0
-    for i in range(max(part_stats) + 1 if part_stats else 0):
-        size_off[i], count_off[i] = acc_s, acc_c
-        s, c = part_stats.get(i, (0, 0))
-        acc_s += s
-        acc_c += c
-
-    def cut(i: int, rows: Iterator[Row]) -> Iterator[Row]:
-        cum_s, cum_c = size_off.get(i, 0), count_off.get(i, 0)
-        for r in rows:
-            if filelimit is not None and cum_c >= filelimit:
-                return
-            if sizelimit is not None and cum_s + r["size"] > sizelimit:
-                return
-            yield r
-            cum_s += r["size"]
-            cum_c += 1
-
-    kept = files.sparkSession.createDataFrame(
-        ordered.rdd.mapPartitionsWithIndex(cut), ordered.schema
-    )
-    return kept.unionByName(dirs)
+    keep = F.lit(True)
+    if filelimit is not None:
+        keep &= F.col("_files_before") < filelimit
+    if sizelimit is not None:
+        keep &= F.col("size_before") + F.col("size") <= sizelimit
+    return ranked.filter(keep).select(*files.columns).unionByName(dirs)
 
 
 def distexec(
@@ -769,11 +589,10 @@ def distexec(
     # (DistCp -update semantics).
     manifest = build_manifest(spark, srcs, dst, contents_into_dst=update, fs=fs)
     # directory rel_dsts the walk already collected driver-side (None when
-    # over the attach cap); invalidated by manifest-narrowing transforms
+    # over the attach cap); still exact after limit_manifest, which keeps
+    # every directory row
     dir_rels = getattr(manifest, "_distexec_dir_rels", None)
     manifest = limit_manifest(manifest, filelimit, sizelimit)
-    if filelimit is not None or sizelimit is not None:
-        dir_rels = None  # the limited manifest may have dropped dir rows
     # One cache for the whole orchestration: the dup check, dir pass and
     # split planning each action this frame, and without the pin every
     # action re-converts the walk's Python RDD rows through the Python

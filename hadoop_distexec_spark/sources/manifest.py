@@ -211,8 +211,8 @@ def build_manifest(
     )
     # rel_dst of every DIRECTORY row (root rows excluded when they map to
     # "."), known driver-side from the walk; None when over the attach
-    # cap. Consumers must drop it after any manifest-narrowing transform
-    # (limit_manifest) — the attribute describes THIS frame only.
+    # cap. It describes THIS frame's directories: a transform that drops
+    # directory rows must drop it too (limit_manifest keeps them all).
     out._distexec_dir_rels = dir_rels
     return out
 

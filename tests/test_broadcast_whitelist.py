@@ -77,7 +77,6 @@ WHITELIST = {
     ("operators/llmops.py", "key_skew_profile"): (1, "1-row global stats"),
     ("operators/llmops.py", "shard_plan"): (1, "1-row mean scalar"),
     ("operators/llmops.py", "quality_filter_funnel"): (1, "1-row stage-count aggregate"),
-    ("operators/pipeline.py", "pack_sequences_distributed"): (1, "per-partition offsets, O(#partitions)"),
     ("operators/llmops.py", "vocab_coverage"): (2, "3-row static tier table + 1-row totals aggregate"),
     ("operators/llmops.py", "embed_pca"): (1, "1-row norm scalar over the 64-row w2 frame"),
     ("operators/audits.py", "drift_tvd"): (1, "1-row min/max epoch+cents scalar aggregate"),

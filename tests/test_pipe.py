@@ -314,6 +314,61 @@ def test_sizelimit_truncates_prefix(spark, tree, tmp_path):
     assert done2 == ["a.txt"]  # nomatch.txt would cross 42 -> cut there
 
 
+def test_limits_cut_inside_a_later_partition(spark, tmp_path, monkeypatch):
+    """-filelimit and -sizelimit cuts that fall inside a later range
+    partition keep exactly the sequential strict prefix over sorted
+    src_path, so the per-partition offsets are applied; every directory
+    row is kept."""
+    import random
+
+    from hadoop_distexec_spark.functions import prefix_sum
+    from hadoop_distexec_spark.pipe.executor import limit_manifest
+    from hadoop_distexec_spark.sources.manifest import build_manifest
+
+    monkeypatch.setattr(prefix_sum, "ROWS_PER_PART", 10)
+    widths = []
+    real = prefix_sum.running_sums
+
+    def spy(*args, **kwargs):
+        out, totals, pinned = real(*args, **kwargs)
+        widths.append(pinned.rdd.getNumPartitions())
+        return out, totals, pinned
+
+    monkeypatch.setattr(prefix_sum, "running_sums", spy)
+    src = tmp_path / "flat"
+    src.mkdir()
+    rng = random.Random(3)
+    sizes = [rng.randrange(1, 500) for _ in range(120)]
+    for i, n in enumerate(sizes):
+        (src / f"f{i:03d}.bin").write_bytes(b"x" * n)
+    manifest = build_manifest(spark, str(src))
+    walked = manifest.collect()
+    files = sorted((r["src_path"], r["size"]) for r in walked if not r["is_dir"])
+    dirs = sorted(r["src_path"] for r in walked if r["is_dir"])
+
+    def prefix(filelimit, sizelimit):
+        kept, total = [], 0
+        for path, size in files:
+            if filelimit is not None and len(kept) >= filelimit:
+                break
+            if sizelimit is not None and total + size > sizelimit:
+                break
+            kept.append(path)
+            total += size
+        return kept
+
+    cut_size = sum(sizes[:93]) + sizes[93] // 2  # file 93 would cross it
+    for filelimit, sizelimit in ((77, None), (None, cut_size), (100, cut_size)):
+        rows = limit_manifest(manifest, filelimit, sizelimit).collect()
+        assert sorted(r["src_path"] for r in rows if not r["is_dir"]) == prefix(
+            filelimit, sizelimit
+        )
+        assert sorted(r["src_path"] for r in rows if r["is_dir"]) == dirs
+    assert len(prefix(None, cut_size)) == 93
+    assert widths == [min(spark.sparkContext.defaultParallelism, 12)] * 3
+    assert widths[0] > 1
+
+
 def test_update_rejects_bad_mode(spark, tree, tmp_path):
     import pytest as _pytest
 
@@ -367,16 +422,17 @@ def test_split_plan_byte_balance(spark, tmp_path):
 
 
 def test_flat_manifest_replans_at_full_width(spark, tmp_path, monkeypatch):
-    """A flat directory arrives as 1-2 listing partitions; the planner's
-    cheap partition-count heuristic must re-plan at proper width once
-    phase-1 counts reveal the manifest is large (otherwise all planning
-    collapses onto 1-2 tasks no matter the cluster size). Threshold
-    lowered so 120 files in one flat dir trip the redo; the plan stays
-    byte-complete and balanced after the re-plan."""
+    """A flat directory arrives as 1-2 listing partitions; the planner
+    must size its width from the row count, not from the listing's
+    partition count (otherwise all planning collapses onto 1-2 tasks no
+    matter the cluster size). Rows per partition lowered so 120 files in
+    one flat dir need 12 partitions; the plan stays byte-complete and
+    balanced."""
+    from hadoop_distexec_spark.functions import prefix_sum
     from hadoop_distexec_spark.pipe import executor
     from hadoop_distexec_spark.sources.manifest import build_manifest
 
-    monkeypatch.setattr(executor, "PLAN_ROWS_PER_PART", 10)
+    monkeypatch.setattr(prefix_sum, "ROWS_PER_PART", 10)
     src = tmp_path / "flat"
     src.mkdir()
     for i in range(120):
@@ -387,7 +443,7 @@ def test_flat_manifest_replans_at_full_width(spark, tmp_path, monkeypatch):
     n_parts = cached.rdd.getNumPartitions()
     cached.unpersist()
     assert len(rows) == 120
-    # re-planned: 120 rows / 10-per-part floor => min(defaultParallelism, 12)
+    # 120 rows / 10 per partition => min(defaultParallelism, 12)
     assert n_parts == min(spark.sparkContext.defaultParallelism, 12)
     assert sum(r["size"] for r in rows) == sum(range(1, 121))
     assert set(r["bin"] for r in rows) <= set(range(4))
@@ -528,21 +584,54 @@ def test_child_killed_mid_stream(spark, fault_tree):
     assert sorted(r["rel_dst"] for r in rows) == ["a.txt", "sub/b.txt", "sub/big.bin", "tiny.txt"]
     assert all(r["status"] == "FAIL" and r["exit_code"] == -9 for r in rows), rows
 
-    log_dir = dst_local / "_distexec_logs"
-    leftovers = [
+    assert _output_files(dst_local) == []
+    assert not (dst_local / "_distexec_tmp").exists()
+    assert _fail_log_lines(dst_local) == sorted(
+        f"FAIL {r['rel_dst']} : {r['error']}" for r in rows
+    )
+
+
+def test_timeout_fails_only_the_hung_file(spark, fault_tree):
+    """A child past cmd_timeout is killed and FAILs its file with
+    "timeout" in the error; it leaves no destination, .stderr or tmp file
+    and one FAIL-log line, while the other files EXECUTE. ``exec sleep``
+    replaces the shell, so the kill closes the child's pipes."""
+    import time as _time
+
+    src, dst, fs, dst_local = fault_tree
+    cmd = """sh -c 'n=$(wc -c); [ "$n" -eq 1 ] && exec sleep 300; echo "$n"'"""
+    t0 = _time.time()
+    rows = distexec(spark, src, dst, cmd, cmd_timeout=2.0, fs=fs).collect()
+    assert _time.time() - t0 < 60  # did not wait out the sleep
+    by_rel = {r["rel_dst"]: r for r in rows}
+    assert sorted(by_rel) == ["a.txt", "sub/b.txt", "sub/big.bin", "tiny.txt"]
+    hung = by_rel.pop("tiny.txt")
+    assert hung["status"] == "FAIL" and "timeout" in hung["error"], hung
+    assert all(r["status"] == "EXECUTED" for r in by_rel.values()), rows
+    sizes = {"a.txt": 23, "sub/b.txt": 31, "sub/big.bin": 256 * 800}
+    assert _output_files(dst_local) == sorted(sizes)
+    for rel, n in sizes.items():
+        assert (dst_local / rel).read_text() == f"{n}\n"
+    assert not (dst_local / "_distexec_tmp").exists()
+    assert _fail_log_lines(dst_local) == [f"FAIL tiny.txt : {hung['error']}"]
+
+
+def _output_files(dst_local):
+    """Files under dst other than the FAIL logs and the results table."""
+    skip = (dst_local / "_distexec_logs", dst_local / "_distexec_results")
+    return sorted(
         p.relative_to(dst_local).as_posix()
         for p in dst_local.rglob("*")
-        if p.is_file()
-        and log_dir not in p.parents
-        and (dst_local / "_distexec_results") not in p.parents
-    ]
-    assert leftovers == []
-    assert not (dst_local / "_distexec_tmp").exists()
-    log_lines = [
+        if p.is_file() and not any(d in p.parents for d in skip)
+    )
+
+
+def _fail_log_lines(dst_local):
+    log_dir = dst_local / "_distexec_logs"
+    return sorted(
         line
         for p in log_dir.iterdir()
         if p.is_file() and not p.name.startswith((".", "_"))
         for line in p.read_text().splitlines()
         if line
-    ]
-    assert sorted(log_lines) == sorted(f"FAIL {r['rel_dst']} : {r['error']}" for r in rows)
+    )

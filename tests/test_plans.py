@@ -57,12 +57,13 @@ def test_corpus_prep_ops_are_shuffle_free(spark):
 
 def test_pack_sequences_dist_no_global_window(spark):
     """The distributed packer must plan a hash-partitioned window (keyed by
-    part_id), never the baseline's single-partition global sort — and its
-    offsets join must stay a broadcast."""
+    the prefix sum's partition id), never the baseline's single-partition
+    global sort."""
+    from hadoop_distexec_spark.functions.prefix_sum import PID
+
     plan = _plan(spark, "q_pack_sequences_dist")
     assert "Exchange SinglePartition" not in plan, plan[:800]
-    assert "hashpartitioning(part_id" in plan, plan[:800]
-    assert "BroadcastHashJoin" in plan
+    assert f"hashpartitioning({PID}" in plan, plan[:800]
 
 
 def test_pack_sequences_dist_matches_baseline(spark):

@@ -1,12 +1,15 @@
 """Property-based tests (hypothesis) for the engine's pure logic:
-path rebasing, command tokenizing, exit policy, frame chunking. These are
-the pieces with reference-defined semantics and no Spark dependency, so
-they can be fuzzed cheaply and exhaustively."""
+path rebasing, command tokenizing, exit policy, frame chunking, and the
+distributed prefix sum against a single-window baseline. Most are pieces
+with reference-defined semantics and no Spark dependency, so they can be
+fuzzed cheaply and exhaustively."""
 
 import shlex
 import string
+from unittest import mock
 
-from hypothesis import given, settings
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from hadoop_distexec_spark.operators.multimodal import FRAME_BYTES, _decode_stub
@@ -146,3 +149,50 @@ def test_bpe_oracle_replace_chain_equals_greedy_fold(words):
     ).fetchall()]
     con.close()
     assert got == _py_greedy_bpe(words, 3)
+
+
+# --- distributed prefix sum ------------------------------------------------
+
+@pytest.mark.parametrize("rows_per_part", [1, 3, 4096])
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(-(10**6), 10**6),
+            st.integers(0, 2**40),
+            st.integers(0, 9),
+        ),
+        unique_by=lambda t: t[0],
+        max_size=30,
+    )
+)
+@example([])
+def test_running_sums_match_single_window(spark, rows_per_part, rows):
+    """Any width (rows per partition patched to 1, 3 and the default)
+    gives the exclusive running sums and totals of one global window
+    ordered by the key."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    from hadoop_distexec_spark.functions import prefix_sum
+
+    df = spark.createDataFrame(rows, "k BIGINT, a BIGINT, b INT")
+    with mock.patch.object(prefix_sum, "ROWS_PER_PART", rows_per_part):
+        out, totals, _ = prefix_sum.running_sums(df, "k", ["a", "b"])
+    w = W.orderBy("k").rowsBetween(W.unboundedPreceding, -1)
+    base = df.select(
+        "k",
+        "a",
+        "b",
+        F.coalesce(F.sum("a").over(w), F.lit(0)).alias("a_before"),
+        F.coalesce(F.sum("b").over(w), F.lit(0)).alias("b_before"),
+    )
+    cols = ["k", "a", "b", "a_before", "b_before"]
+    assert sorted(map(tuple, out.select(cols).collect())) == sorted(
+        map(tuple, base.collect())
+    )
+    assert totals == {
+        "rows": len(rows),
+        "a": sum(r[1] for r in rows),
+        "b": sum(r[2] for r in rows),
+    }
