@@ -594,11 +594,12 @@ def distexec(
     dir_rels = getattr(manifest, "_distexec_dir_rels", None)
     manifest = limit_manifest(manifest, filelimit, sizelimit)
     # One cache for the whole orchestration: the dup check, dir pass and
-    # split planning each action this frame, and without the pin every
-    # action re-converts the walk's Python RDD rows through the Python
-    # workers (measured as a visible slice of the ~2 s fixed overhead on
-    # small manifests). Metadata-sized rows — storage is bounded by the
-    # manifest, not the data. Released after the plan rows are consumed.
+    # split planning each action this frame. Driver-listed rows are a
+    # LocalTableScan and re-read without a Python task; the pin matters for
+    # fan-out rows, which every action would otherwise re-convert from the
+    # walk's Python RDD through the Python workers. Metadata-sized rows —
+    # storage is bounded by the manifest, not the data. Released after the
+    # plan rows are consumed.
     manifest = manifest.cache()
     plan_cache = None
     tmp_dir = None

@@ -8,9 +8,10 @@ of the dst listing against the src manifest (src/reference/DistCp.java:
 of DistCp's sorted-merge compare (an anti-join IS delete-nonexisting,
 SURVEY.md §2.5).
 
-Scale shape: both sides are manifests (executor-fanned BFS listings), the
-anti-join shuffles on rel_dst once, and deletions run executor-side via
-foreachPartition when the filesystem is mutation-safe from executors
+Scale shape: both sides are manifests from ``build_manifest`` (see its
+docstring for where the walk runs), the anti-join shuffles on rel_dst
+once, and deletions run executor-side via foreachPartition when the
+filesystem is mutation-safe from executors
 (remote FS, or local FS under a local master — fs.executor_mutation_safe);
 otherwise they fall back to the driver (ADVICE r01 #5: executor-local
 ``os.remove`` on a real cluster would target worker disks). The driver

@@ -2,10 +2,8 @@
 
 The reference walks the whole tree on the *client* with an explicit stack
 (reference DistExec.java:546-614) and spills three SequenceFile manifests.
-That walk is a driver bottleneck at 100 TB, so this builder fans the
-listing out per directory on executors in BFS rounds: the driver holds only
-the directory frontier (one string per directory); file entries never leave
-the cluster (they stay in RDDs and become the manifest DataFrame).
+Here the walk runs in BFS rounds, on the driver up to a row cap and on
+executors past it; ``build_manifest`` states the rule.
 
 Manifest schema (SURVEY.md §1): src_path, rel_dst, size, is_dir, mtime.
 ``rel_dst`` implements the reference's ``makeRelative`` rebasing
@@ -17,9 +15,11 @@ from __future__ import annotations
 
 import datetime
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from hadoop_distexec_spark.errors import InvalidInputError
 from hadoop_distexec_spark.fs import FileSystem, resolve_fs
@@ -39,6 +39,26 @@ MANIFEST_SCHEMA = T.StructType(
 # stays trivially small next to the frontier the BFS already collects.
 _DIR_REL_ATTACH_CAP = 4096
 
+# rows the driver lists before the rest of the walk fans out. A bound on
+# driver memory and on the LocalRelation every action on the manifest
+# ships, not a speed crossover: on a local FS the driver walk still beats
+# the fan-out at this size (SCALE.md).
+_DRIVER_ROWS_CAP = 1 << 16
+
+# the walk's rows before the rel_dst projection
+_WALK_SCHEMA = T.StructType(
+    [
+        *MANIFEST_SCHEMA.fields,
+        # nullable: object-store backends may not report mtimes
+        T.StructField("mtime_epoch", T.DoubleType(), True),
+        T.StructField("is_link", T.BooleanType(), False),
+        T.StructField("root", T.StringType(), False),
+    ]
+)
+# its Arrow twin types the driver rounds' table explicitly; mtime is
+# timestamp[us, tz=UTC], the true instant whatever the host's zone
+_WALK_ARROW_SCHEMA = to_arrow_schema(_WALK_SCHEMA)
+
 
 def make_relative(root: str, path: str) -> str | None:
     """Strip ``root`` from ``path`` (reference makeRelative,
@@ -57,20 +77,19 @@ def make_relative(root: str, path: str) -> str | None:
 def _stat_entry(
     path: str, fs: FileSystem
 ) -> tuple[str, int, bool, datetime.datetime | None, float | None, bool]:
-    """(path, size, is_dir, mtime_utc_naive, mtime_epoch, is_link).
+    """(path, size, is_dir, mtime_utc, mtime_epoch, is_link).
 
-    ``mtime_epoch`` is carried separately because a *naive* datetime's
-    ``.timestamp()`` is interpreted in the machine-local timezone — the
-    -update freshness check must compare raw epochs. Object stores may
-    report no mtime at all -> both fields None (and -update re-executes).
+    ``mtime`` is UTC-aware: PySpark converts a *naive* datetime with the
+    host's local timezone, which shifted it by the host's offset.
+    ``mtime_epoch`` carries the raw epoch for the -update freshness check.
+    Object stores may report no mtime at all -> both fields None (and
+    -update re-executes).
     """
     st = fs.stat(path)
     # dirs carry size 0, matching the reference's manifest key
     # (DistExec.java:592: dirs are written with a 0 size key).
     mtime = (
-        datetime.datetime.fromtimestamp(st.mtime_epoch, tz=datetime.timezone.utc).replace(
-            tzinfo=None
-        )
+        datetime.datetime.fromtimestamp(st.mtime_epoch, tz=datetime.timezone.utc)
         if st.mtime_epoch is not None
         else None
     )
@@ -80,7 +99,7 @@ def _stat_entry(
 def _list_dir(
     path: str, fs: FileSystem
 ) -> list[tuple[str, int, bool, datetime.datetime | None, float | None, bool]]:
-    """Executor-side: one directory's direct children.
+    """One directory's direct children (driver or executor side).
 
     PermissionError propagates: an unreadable directory must fail the job
     (like the reference's client-side walk would), never silently vanish
@@ -130,6 +149,15 @@ def build_manifest(
     scheme — local, or fsspec for hdfs/s3/..., matching the reference's
     ``path.getFileSystem`` dispatch at DistExec.java:229). The instance is
     captured in executor closures, so it must pickle.
+
+    Walk: BFS rounds over each source. The driver lists directory after
+    directory (like the reference's client walk) while it holds fewer
+    than ``_DRIVER_ROWS_CAP`` rows, so it holds at most the cap plus one
+    directory's children. Those rows become one typed Arrow table: the
+    manifest plans as a ``LocalTableScan`` and no action on it starts a
+    Python task. Past the cap, the rest of the round and every later round
+    fan out on executors in at most ``defaultParallelism`` tasks; their
+    entries stay in RDDs and only directory names come back.
     """
     if isinstance(srcs, str):
         srcs = [srcs]
@@ -163,44 +191,48 @@ def build_manifest(
         root = src if special else (src_fs.dirname(src) or "/")
         entry = _stat_entry(src, src_fs)
         rows.append((*entry, root))
-        if entry[2]:  # directory: BFS fan-out on executors
+        if entry[2]:  # directory: BFS rounds
             if dir_rels is not None and not special:
                 dir_rels.append(make_relative(root, src))  # the root row itself
             frontier = [src]
             while frontier:
-                listing = sc.parallelize(frontier, max(1, min(len(frontier), 256))).flatMap(
-                    lambda p, _fs=src_fs: _list_dir(p, _fs)
-                )
-                listing = listing.map(lambda e, _root=root: (*e, _root))
-                listing.persist()
-                # only directory *names* come back to the driver (path +
-                # link flag). Symlinked dirs are recorded but never
-                # expanded — a `ln -s . loop` cycle would otherwise walk
-                # forever.
-                dirs = [
-                    (e[0], e[5]) for e in listing.filter(lambda e: e[2]).collect()
-                ]
+                dirs = []
+                n = 0
+                while n < len(frontier) and len(rows) < _DRIVER_ROWS_CAP:
+                    listed = [(*e, root) for e in _list_dir(frontier[n], src_fs)]
+                    rows.extend(listed)
+                    dirs += [(e[0], e[5]) for e in listed if e[2]]
+                    n += 1
+                rest = frontier[n:]
+                if rest:
+                    listing = sc.parallelize(rest, min(len(rest), sc.defaultParallelism))
+                    listing = listing.flatMap(
+                        lambda p, _fs=src_fs, _root=root: [(*e, _root) for e in _list_dir(p, _fs)]
+                    )
+                    listing.persist()
+                    rdds.append(listing)
+                    # only directory *names* come back to the driver
+                    # (path + link flag)
+                    dirs += [(e[0], e[5]) for e in listing.filter(lambda e: e[2]).collect()]
+                # Symlinked dirs are recorded but never expanded — a
+                # `ln -s . loop` cycle would otherwise walk forever.
                 frontier = [p for p, is_link in dirs if not is_link]
                 if dir_rels is not None:
                     dir_rels.extend(make_relative(root, p) for p, _ in dirs)
                     if len(dir_rels) > _DIR_REL_ATTACH_CAP:
                         dir_rels = None
-                rdds.append(listing)
 
-    base = sc.parallelize(rows, 1)
-    for r in rdds:
-        base = base.union(r)
-
-    schema = T.StructType(
-        [
-            *MANIFEST_SCHEMA.fields,
-            # nullable: object-store backends may not report mtimes
-            T.StructField("mtime_epoch", T.DoubleType(), True),
-            T.StructField("is_link", T.BooleanType(), False),
-            T.StructField("root", T.StringType(), False),
-        ]
+    # Driver rows as one typed Arrow table: the frame is a LocalRelation,
+    # so neither the walk nor a later action on it runs a Python task.
+    # Not createDataFrame(list) (row path, slower per action than the RDD)
+    # and not pandas (it falls back to the row path without an error).
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(zip(*rows), _WALK_ARROW_SCHEMA)],
+        schema=_WALK_ARROW_SCHEMA,
     )
-    df = spark.createDataFrame(base, schema)
+    df = spark.createDataFrame(table, _WALK_SCHEMA)
+    if rdds:
+        df = df.union(spark.createDataFrame(sc.union(rdds), _WALK_SCHEMA))
     out = df.select(
         "src_path",
         _rel_expr().alias("rel_dst"),

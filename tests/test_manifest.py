@@ -1,11 +1,25 @@
 """Manifest builder + makeRelative semantics (reference DistExec.java:388-410,
 546-614)."""
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 
 from pyspark.sql import functions as F
 
+from hadoop_distexec_spark.fs import MappedFS
+from hadoop_distexec_spark.sources import manifest as manifest_mod
 from hadoop_distexec_spark.sources.manifest import build_manifest, make_relative, read_uri_list
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DEFAULT_CAP = manifest_mod._DRIVER_ROWS_CAP
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_make_relative_semantics():
@@ -112,6 +126,115 @@ def test_unreadable_dir_fails_job(spark, tmp_path):
             build_manifest(spark, str(t)).collect()
     finally:
         os.chmod(t / "locked", 0o755)
+
+
+@pytest.fixture()
+def mixed_tree(tmp_path):
+    """Three subdirectories under the root (nested, empty, plain), files at
+    every level and a `ln -s . loop` cycle; a second source for the
+    multi-source root rule."""
+    t = tmp_path / "tree"
+    (t / "sub" / "deep").mkdir(parents=True)
+    (t / "empty").mkdir()
+    (t / "plain").mkdir()
+    (t / "a.txt").write_text("aaaa")
+    (t / "sub" / "b.txt").write_text("bb")
+    (t / "sub" / "deep" / "c.txt").write_text("c")
+    (t / "plain" / "d.txt").write_text("dddd")
+    os.symlink(".", t / "loop")
+    other = tmp_path / "other"
+    (other / "o").mkdir(parents=True)
+    (other / "o" / "z.txt").write_text("z")
+    return t, other
+
+
+@pytest.mark.parametrize("rule", ["special", "single_dst_exists", "multi"])
+def test_driver_and_fanout_walks_agree(spark, monkeypatch, mixed_tree, tmp_path, rule):
+    """Driver rounds, fan-out rounds and a walk that crosses the driver's
+    row cap mid-round give the same rows and the same directory list,
+    under each root rule. Cap 0 fans every listing out; cap 7 lists the
+    root, `empty` and `plain` on the driver (7 rows) and fans `sub` and
+    everything after it out."""
+    tree, other = mixed_tree
+    args = {
+        "special": (str(tree), None),
+        "single_dst_exists": (str(tree), str(tmp_path)),
+        "multi": ([str(tree), str(other)], str(tmp_path / "dst")),
+    }[rule]
+    walks = {}
+    for cap in (0, 7, DEFAULT_CAP):
+        monkeypatch.setattr(manifest_mod, "_DRIVER_ROWS_CAP", cap)
+        m = build_manifest(spark, *args)
+        walks[cap] = (sorted(m.collect()), m._distexec_dir_rels, _plan(m))
+    rows, dir_rels, plan = walks[DEFAULT_CAP]
+    # a small tree is listed on the driver into one Arrow table: no Python
+    # RDD under the manifest
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    for cap in (0, 7):
+        assert walks[cap][:2] == (rows, dir_rels)
+        assert "ExistingRDD" in walks[cap][2]
+    # the mixed walk keeps its driver rows in the Arrow table
+    assert "LocalTableScan" in walks[7][2]
+
+
+@pytest.mark.parametrize("cap", [DEFAULT_CAP, 0], ids=["driver", "fanout"])
+def test_permission_error_fails_walk_on_both_paths(spark, monkeypatch, tmp_path, cap):
+    """An unreadable directory fails the walk on the driver and on the
+    executors alike; its subtree never silently drops out. The chmod
+    variant above skips as root, so the denial comes from the FS."""
+    store = tmp_path / "store"
+    (store / "tree" / "locked" / "inner").mkdir(parents=True)
+    (store / "tree" / "locked" / "secret.txt").write_text("s")
+    (store / "tree" / "ok.txt").write_text("k")
+
+    class LockedFS(MappedFS):
+        def listdir(self, path):
+            if path == "lock://tree/locked":
+                raise PermissionError(path)
+            return super().listdir(path)
+
+    monkeypatch.setattr(manifest_mod, "_DRIVER_ROWS_CAP", cap)
+    with pytest.raises(Exception) as excinfo:
+        build_manifest(spark, "lock://tree", fs=LockedFS("lock", str(store))).collect()
+    assert "PermissionError" in f"{excinfo.type.__name__}: {excinfo.value}"
+
+
+_TZ_PROBE = """
+import json, sys
+from pyspark.sql import functions as F
+from hadoop_distexec_spark.session import get_spark
+from hadoop_distexec_spark.sources import manifest
+spark = get_spark("tz_probe")
+out = {}
+for cap in (manifest._DRIVER_ROWS_CAP, 0):
+    manifest._DRIVER_ROWS_CAP = cap
+    m = manifest.build_manifest(spark, sys.argv[1])
+    skew = F.abs(F.unix_micros("mtime") - F.col("mtime_epoch") * 1e6)
+    out[cap] = m.agg(F.max(skew), F.count("*")).first()[:]
+print(json.dumps(out))
+"""
+
+
+def test_mtime_is_the_true_instant_off_utc(tree):
+    """On a host outside UTC both walk paths store the file's true
+    instant: PySpark converts a naive datetime with the host's zone, which
+    shifted mtime by the host's offset on the fan-out path."""
+    env = dict(os.environ, TZ="America/New_York", SPARK_GRAFT_CPUS="2")
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, env.get("PYTHONPATH")]))
+    out = subprocess.run(
+        [sys.executable, "-c", _TZ_PROBE, str(tree)],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=300,
+    )
+    skews = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(skews) == 2
+    for cap, (max_skew, n) in skews.items():
+        assert n == 7, cap
+        assert max_skew <= 1, (cap, max_skew)
 
 
 def test_uri_list_source(spark, tmp_path):
