@@ -33,12 +33,6 @@ MANIFEST_SCHEMA = T.StructType(
     ]
 )
 
-# max directory rel_dsts carried on the manifest DataFrame as driver-side
-# metadata (_distexec_dir_rels); beyond this the walk stops accumulating
-# and consumers run the distributed dir pass instead. Sized so the list
-# stays trivially small next to the frontier the BFS already collects.
-_DIR_REL_ATTACH_CAP = 4096
-
 # rows the driver lists before the rest of the walk fans out. A bound on
 # driver memory and on the LocalRelation every action on the manifest
 # ships, not a speed crossover: on a local FS the driver walk still beats
@@ -55,8 +49,7 @@ _WALK_SCHEMA = T.StructType(
         T.StructField("root", T.StringType(), False),
     ]
 )
-# its Arrow twin types the driver rounds' table explicitly; mtime is
-# timestamp[us, tz=UTC], the true instant whatever the host's zone
+# its Arrow twin types every walk batch (``_walk_batch``)
 _WALK_ARROW_SCHEMA = to_arrow_schema(_WALK_SCHEMA)
 
 
@@ -156,8 +149,11 @@ def build_manifest(
     directory's children. Those rows become one typed Arrow table: the
     manifest plans as a ``LocalTableScan`` and no action on it starts a
     Python task. Past the cap, the rest of the round and every later round
-    fan out on executors in at most ``defaultParallelism`` tasks; their
-    entries stay in RDDs and only directory names come back.
+    fan out on executors in at most ``defaultParallelism`` tasks, as a
+    ``mapInArrow`` over the round's paths. Each round is persisted, so a
+    later action on the manifest reads it without a Python task; it stays
+    cached until the session's cache is cleared. Only directory names come
+    back to the driver.
     """
     if isinstance(srcs, str):
         srcs = [srcs]
@@ -175,25 +171,13 @@ def build_manifest(
         and src_fss[0].stat(srcs[0]).is_dir
         and (contents_into_dst or dst is None or not dst_fs.exists(dst))
     )
-    sc = spark.sparkContext
-
     rows: list[tuple] = []  # (src_path, size, is_dir, mtime, mtime_epoch, is_link, root)
-    rdds = []
-    # The BFS already brings every directory NAME to the driver (the
-    # frontier), so the rel_dst dir list is free to carry along — the
-    # executor consumes it to create destination dirs WITHOUT a Spark
-    # job over the manifest (one fixed-cost job per run, VERDICT r07
-    # #8). Bounded: past the cap the attribute drops to None and the
-    # consumer falls back to the distributed dir pass, which is the
-    # right tool for 10^7-directory trees anyway.
-    dir_rels: list[str] | None = []
+    rounds = []
     for src, src_fs in zip(srcs, src_fss):
         root = src if special else (src_fs.dirname(src) or "/")
         entry = _stat_entry(src, src_fs)
         rows.append((*entry, root))
         if entry[2]:  # directory: BFS rounds
-            if dir_rels is not None and not special:
-                dir_rels.append(make_relative(root, src))  # the root row itself
             frontier = [src]
             while frontier:
                 dirs = []
@@ -205,35 +189,33 @@ def build_manifest(
                     n += 1
                 rest = frontier[n:]
                 if rest:
-                    listing = sc.parallelize(rest, min(len(rest), sc.defaultParallelism))
-                    listing = listing.flatMap(
-                        lambda p, _fs=src_fs, _root=root: [(*e, _root) for e in _list_dir(p, _fs)]
-                    )
-                    listing.persist()
-                    rdds.append(listing)
+                    # a LocalTableScan of n paths splits into
+                    # min(n, defaultParallelism) tasks, with no shuffle
+                    frontier_df = spark.createDataFrame(pa.table({"path": rest}))
+
+                    def list_dirs(batches, _fs=src_fs, _root=root):
+                        for b in batches:
+                            paths = b.column(0).to_pylist()
+                            yield _walk_batch(
+                                [(*e, _root) for p in paths for e in _list_dir(p, _fs)]
+                            )
+
+                    listing = frontier_df.mapInArrow(list_dirs, _WALK_SCHEMA).persist()
+                    rounds.append(listing)
                     # only directory *names* come back to the driver
                     # (path + link flag)
-                    dirs += [(e[0], e[5]) for e in listing.filter(lambda e: e[2]).collect()]
+                    dirs += [
+                        tuple(r)
+                        for r in listing.filter("is_dir").select("src_path", "is_link").collect()
+                    ]
                 # Symlinked dirs are recorded but never expanded — a
                 # `ln -s . loop` cycle would otherwise walk forever.
                 frontier = [p for p, is_link in dirs if not is_link]
-                if dir_rels is not None:
-                    dir_rels.extend(make_relative(root, p) for p, _ in dirs)
-                    if len(dir_rels) > _DIR_REL_ATTACH_CAP:
-                        dir_rels = None
 
-    # Driver rows as one typed Arrow table: the frame is a LocalRelation,
-    # so neither the walk nor a later action on it runs a Python task.
-    # Not createDataFrame(list) (row path, slower per action than the RDD)
-    # and not pandas (it falls back to the row path without an error).
-    table = pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(zip(*rows), _WALK_ARROW_SCHEMA)],
-        schema=_WALK_ARROW_SCHEMA,
-    )
-    df = spark.createDataFrame(table, _WALK_SCHEMA)
-    if rdds:
-        df = df.union(spark.createDataFrame(sc.union(rdds), _WALK_SCHEMA))
-    out = df.select(
+    df = spark.createDataFrame(pa.Table.from_batches([_walk_batch(rows)]), _WALK_SCHEMA)
+    for listing in rounds:
+        df = df.union(listing)
+    return df.select(
         "src_path",
         _rel_expr().alias("rel_dst"),
         "size",
@@ -241,12 +223,20 @@ def build_manifest(
         "mtime",
         "mtime_epoch",
     )
-    # rel_dst of every DIRECTORY row (root rows excluded when they map to
-    # "."), known driver-side from the walk; None when over the attach
-    # cap. It describes THIS frame's directories: a transform that drops
-    # directory rows must drop it too (limit_manifest keeps them all).
-    out._distexec_dir_rels = dir_rels
-    return out
+
+
+def _walk_batch(rows: list[tuple]) -> pa.RecordBatch:
+    """Walk tuples as one typed Arrow batch, for the driver's table and
+    for each fan-out task alike. Explicit types, not inference: ``mtime``
+    is timestamp[us, tz=UTC] whatever the host's zone, and an empty
+    listing still carries the schema. Not ``createDataFrame(list)`` (row
+    path, slower per action) and not pandas (it falls back to the row path
+    without an error)."""
+    cols = list(zip(*rows)) or [()] * len(_WALK_ARROW_SCHEMA)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, _WALK_ARROW_SCHEMA)],
+        schema=_WALK_ARROW_SCHEMA,
+    )
 
 
 def _rel_expr():

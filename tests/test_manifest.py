@@ -151,10 +151,10 @@ def mixed_tree(tmp_path):
 @pytest.mark.parametrize("rule", ["special", "single_dst_exists", "multi"])
 def test_driver_and_fanout_walks_agree(spark, monkeypatch, mixed_tree, tmp_path, rule):
     """Driver rounds, fan-out rounds and a walk that crosses the driver's
-    row cap mid-round give the same rows and the same directory list,
-    under each root rule. Cap 0 fans every listing out; cap 7 lists the
-    root, `empty` and `plain` on the driver (7 rows) and fans `sub` and
-    everything after it out."""
+    row cap mid-round give the same rows under each root rule. Cap 0 fans
+    every listing out; cap 7 lists the root, `empty` and `plain` on the
+    driver (7 rows) and fans `sub` and everything after it out. No walk
+    leaves a Python RDD under the manifest."""
     tree, other = mixed_tree
     args = {
         "special": (str(tree), None),
@@ -165,16 +165,18 @@ def test_driver_and_fanout_walks_agree(spark, monkeypatch, mixed_tree, tmp_path,
     for cap in (0, 7, DEFAULT_CAP):
         monkeypatch.setattr(manifest_mod, "_DRIVER_ROWS_CAP", cap)
         m = build_manifest(spark, *args)
-        walks[cap] = (sorted(m.collect()), m._distexec_dir_rels, _plan(m))
-    rows, dir_rels, plan = walks[DEFAULT_CAP]
-    # a small tree is listed on the driver into one Arrow table: no Python
-    # RDD under the manifest
-    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        walks[cap] = (sorted(m.collect()), _plan(m))
+    rows, plan = walks[DEFAULT_CAP]
+    # a small tree is listed on the driver into one Arrow table
+    assert "LocalTableScan" in plan and "InMemoryTableScan" not in plan
     for cap in (0, 7):
-        assert walks[cap][:2] == (rows, dir_rels)
-        assert "ExistingRDD" in walks[cap][2]
+        assert walks[cap][0] == rows
+        # fan-out rounds are persisted mapInArrow frames
+        assert "InMemoryTableScan" in walks[cap][1]
+    for _, plan in walks.values():
+        assert "ExistingRDD" not in plan
     # the mixed walk keeps its driver rows in the Arrow table
-    assert "LocalTableScan" in walks[7][2]
+    assert "LocalTableScan" in walks[7][1]
 
 
 @pytest.mark.parametrize("cap", [DEFAULT_CAP, 0], ids=["driver", "fanout"])

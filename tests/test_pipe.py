@@ -40,12 +40,47 @@ def test_identity_cat_roundtrip(spark, tree, tmp_path):
     assert m["bytes_executed"] == m["bytes_written"] == 23 + 31 + 20
 
 
-def test_empty_dir_preserved(spark, tree, tmp_path):
-    """Empty dirs become manifest records and are mkdir'd at the dest
-    (ExecFilesMapper.java:91-105)."""
+@pytest.mark.parametrize("fs_kind", ["local", "mapped"])
+@pytest.mark.parametrize("walk", ["driver", "fanout"])
+def test_empty_dir_preserved(spark, tree, tmp_path, monkeypatch, walk, fs_kind):
+    """Empty dirs, nested ones too, are manifest records that the pipe map
+    mkdirs at the dest (ExecFilesMapper.java:91-105), whichever path walked
+    the tree and whichever filesystem holds it; they add no result rows."""
+    from hadoop_distexec_spark.fs import MappedFS
+    from hadoop_distexec_spark.sources import manifest
+
+    if walk == "fanout":
+        monkeypatch.setattr(manifest, "_DRIVER_ROWS_CAP", 0)
+    (tree / "empty_dir" / "inner").mkdir()
+    if fs_kind == "local":
+        res = distexec(spark, str(tree), str(tmp_path / "out"), "cat")
+    else:
+        fs = MappedFS("mock", str(tmp_path))
+        res = distexec(spark, "mock://tree", "mock://out", "cat", fs=fs)
     dst = tmp_path / "out"
-    distexec(spark, str(tree), str(dst), "cat")
     assert (dst / "empty_dir").is_dir()
+    assert (dst / "empty_dir" / "inner").is_dir()
+    rows = res.collect()
+    assert sorted(r["rel_dst"] for r in rows) == ["a.txt", "nomatch.txt", "sub/b.txt"]
+    assert all(r["status"] == "EXECUTED" for r in rows), rows
+
+
+def test_failing_mkdirs_fails_the_job(spark, tree, tmp_path):
+    """A directory the pipe map cannot create fails the job, not just a
+    row, and the tmp dir still goes."""
+    from hadoop_distexec_spark.fs import MappedFS
+
+    class NoEmptyDirFS(MappedFS):
+        def mkdirs(self, path):
+            if path.endswith("/empty_dir"):
+                raise PermissionError(path)
+            super().mkdirs(path)
+
+    fs = NoEmptyDirFS("mock", str(tmp_path))
+    with pytest.raises(Exception) as excinfo:
+        distexec(spark, "mock://tree", "mock://out", "cat", fs=fs)
+    assert "PermissionError" in str(excinfo.value)
+    assert not (tmp_path / "out" / "_distexec_tmp").exists()
 
 
 def test_grep_exit1_tolerated_and_lazy_create(spark, tree, tmp_path):
@@ -391,6 +426,25 @@ def test_pipe_rows_line_filter(spark):
         pipe_rows(df, "grep word1", "w", "up").collect()
 
 
+def test_pipe_rows_many_batches_per_partition(spark):
+    """Several Arrow batches per task: each output line is zipped back to
+    its own row across batch boundaries, and a null input is an empty
+    line."""
+    from hadoop_distexec_spark.pipe.rows import pipe_rows
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        df = spark.createDataFrame(
+            [(i, None if i % 13 == 0 else f"w{i}") for i in range(500)], "id INT, w STRING"
+        ).repartition(3)
+        got = {r["id"]: r["up"] for r in pipe_rows(df, "tr a-z A-Z", "w", "up").collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert got == {i: "" if i % 13 == 0 else f"W{i}" for i in range(500)}
+
+
 def test_split_plan_byte_balance(spark, tmp_path):
     """The distributed prefix-sum planner reproduces the reference's
     greedy byte-balance: every bin's byte total stays within one max-file
@@ -401,24 +455,44 @@ def test_split_plan_byte_balance(spark, tmp_path):
     from hadoop_distexec_spark.sources.manifest import build_manifest
 
     src = tmp_path / "many"
-    src.mkdir()
+    (src / "empty").mkdir(parents=True)
+    (src / "nest" / "deep" / "empty").mkdir(parents=True)
     rng = random.Random(7)
     sizes = [rng.randrange(1, 4096) for _ in range(200)]
     for i, n in enumerate(sizes):
-        (src / f"f{i:03d}.bin").write_bytes(b"x" * n)
+        parent = src / "nest" / "deep" if i % 10 == 0 else src
+        (parent / f"f{i:03d}.bin").write_bytes(b"x" * n)
     manifest = build_manifest(spark, str(src))
     planned, n_tasks, cached = plan_partitions(manifest, n_tasks=8)
     rows = planned.collect()
     cached.unpersist()
-    assert len(rows) == 200
+    files = sorted((r for r in rows if not r["is_dir"]), key=lambda r: r["src_path"])
+    assert len(files) == 200
     per_bin = {}
-    for r in rows:
+    for r in files:
         per_bin[r["bin"]] = per_bin.get(r["bin"], 0) + r["size"]
     total = sum(sizes)
     target = -(-total // 8)
     assert set(per_bin) <= set(range(8))
     # greedy rule: a bin exceeds target by at most one file
     assert max(per_bin.values()) <= target + max(sizes)
+    # directory rows (size 0) move no file: each bin is the formula over
+    # the files alone
+    before = 0
+    for r in files:
+        assert r["bin"] == min(before // target, 7), r
+        before += r["size"]
+
+    # the default task count counts files only: 3 files beside 6 dirs
+    few = tmp_path / "few"
+    for d in ("a", "b", "c/d", "c/e"):
+        (few / d).mkdir(parents=True)
+    for name in ("x", "a/y", "c/d/z"):
+        (few / name).write_bytes(b"q")
+    planned, n_tasks, cached = plan_partitions(build_manifest(spark, str(few)))
+    assert planned.count() == 9
+    cached.unpersist()
+    assert n_tasks == 3
 
 
 def test_flat_manifest_replans_at_full_width(spark, tmp_path, monkeypatch):
@@ -442,9 +516,10 @@ def test_flat_manifest_replans_at_full_width(spark, tmp_path, monkeypatch):
     rows = planned.collect()
     n_parts = cached.rdd.getNumPartitions()
     cached.unpersist()
-    assert len(rows) == 120
-    # 120 rows / 10 per partition => min(defaultParallelism, 12)
-    assert n_parts == min(spark.sparkContext.defaultParallelism, 12)
+    # the 120 files plus the root directory's row
+    assert len(rows) == 121 and sum(r["is_dir"] for r in rows) == 1
+    # 121 rows / 10 per partition => min(defaultParallelism, 13)
+    assert n_parts == min(spark.sparkContext.defaultParallelism, 13)
     assert sum(r["size"] for r in rows) == sum(range(1, 121))
     assert set(r["bin"] for r in rows) <= set(range(4))
 
@@ -478,7 +553,10 @@ def test_split_plan_bins_contiguous_and_deterministic(spark, tmp_path):
     src_path order (each bin is a contiguous byte range of the ordered
     manifest) — pins the JVM-side window/offset-map assignment (round 8)
     to the exact semantics the Python mapPartitionsWithIndex pass had,
-    and that two plans of the same manifest agree row-for-row."""
+    and that two plans of the same manifest agree row-for-row. The pipe
+    map's ``repartitionById(n_tasks, "bin")`` puts bin b in partition b
+    under AQE, also when some bins are empty (one file spanning four
+    targets leaves bins with no row)."""
     import random
 
     from hadoop_distexec_spark.pipe.executor import plan_partitions
@@ -489,12 +567,19 @@ def test_split_plan_bins_contiguous_and_deterministic(spark, tmp_path):
     rng = random.Random(11)
     for i in range(150):
         (src / f"f{i:03d}.bin").write_bytes(b"x" * rng.randrange(1, 2048))
+    (src / "f075big.bin").write_bytes(b"x" * 150 * 1024)
     manifest = build_manifest(spark, str(src))
     planned, n_tasks, cached = plan_partitions(manifest, n_tasks=8)
     rows = sorted(planned.collect(), key=lambda r: r["src_path"])
     bins = [r["bin"] for r in rows]
     assert bins == sorted(bins), "bins must be contiguous in src_path order"
     assert bins[0] == 0 and max(bins) <= 7
+    assert len(set(bins)) < n_tasks
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    placed = planned.repartitionById(n_tasks, "bin").select(
+        "bin", F.spark_partition_id().alias("pid")
+    )
+    assert all(r["pid"] == r["bin"] for r in placed.collect())
     planned2, _, cached2 = plan_partitions(manifest, n_tasks=8)
     rows2 = sorted(planned2.collect(), key=lambda r: r["src_path"])
     assert [(r["src_path"], r["bin"]) for r in rows] == [
