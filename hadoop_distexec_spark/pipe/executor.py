@@ -4,13 +4,15 @@ command, mirroring the source layout at the destination.
 Semantics checklist, each with its reference citation
 (/root/reference/src/main/java/com/kadwa/hadoop/...):
 
-- per-file subprocess with three pump threads src->stdin, stdout->dst,
+- per-file subprocess whose three streams run src->stdin, stdout->dst,
   stderr->side file (distexec/ExecFilesMapper.java:82-154,
-  distexec/SingleExecution.java:21-112);
+  distexec/SingleExecution.java:21-112). Each stream is wired on its own:
+  a handle with an OS descriptor goes straight to the child, any other
+  gets a pipe and a pump thread (``_exec_one``);
 - **lazy destination creation**: a command producing no stdout yields no
   destination file at all (LazyCreateOutputStream,
   distexec/ExecFilesMapper.java:46-80; rename guarded on tmp existence at
-  :162);
+  :162) — here the tmp sink still empty at exit is removed before commit;
 - per-file ``<rel_dst>.stderr`` side files, same lazy semantics
   (distexec/ExecFilesMapper.java:86,108,119,148);
 - atomic commit: write to tmp, delete-if-exists, rename; tmp cleanup with
@@ -97,6 +99,11 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("rel_dst", T.StringType(), True),
         T.StructField("status", T.StringType(), False),  # EXECUTED | FAIL | SKIPPED
         T.StructField("exit_code", T.IntegerType(), True),
+        # source bytes handed to the child. On a descriptor stdin: the file
+        # offset at exit, what the child consumed (GNU `wc -c` sizes a
+        # regular stdin with fstat and, unless the size is a page multiple,
+        # reads nothing, so it reports 0). On a pumped stdin: the bytes the
+        # pipe accepted, which can exceed what an early-exiting child read.
         T.StructField("bytes_in", T.LongType(), False),
         T.StructField("bytes_out", T.LongType(), False),
         T.StructField("bytes_err", T.LongType(), False),
@@ -124,75 +131,38 @@ def _result(src_path, rel_dst, status, rc, b_in, b_out, b_err, err, md5) -> dict
 
 
 class _Pump(threading.Thread):
-    """Stream pump between a file object and a (lazily created) sink —
-    reference SingleExecution.java:65-112. The lazy sink preserves the
-    reference's no-stdout => no-destination-file rule."""
+    """Copy ``src`` to ``sink`` in BUF_SIZE chunks, then close both — the
+    reference's stream pumps (SingleExecution.java:21-112). Closing a
+    child's stdin is its EOF. ``count`` is the bytes ``sink`` accepted: a
+    child's stdin is an unbuffered pipe, whose ``write`` returns what the
+    kernel took, so bytes parked in a Python buffer are never counted."""
 
-    def __init__(self, src, sink_path: str | None, fs: FileSystem, sink_file=None):
+    def __init__(self, src, sink):
         super().__init__(daemon=True)
         self.src = src
-        self.sink_path = sink_path
-        self.fs = fs
-        self.sink = sink_file
+        self.sink = sink
         self.count = 0
         self.error: Exception | None = None
 
     def run(self):
-        out = self.sink
         try:
-            while True:
-                chunk = self.src.read(BUF_SIZE)
-                if not chunk:
-                    break
-                if out is None:  # lazy create on first byte
-                    out = self.fs.open(self.sink_path, "wb", buffering=BUF_SIZE)
-                out.write(chunk)
-                self.count += len(chunk)
+            while chunk := self.src.read(BUF_SIZE):
+                while chunk:
+                    n = self.sink.write(chunk)
+                    self.count += n
+                    chunk = chunk[n:]
+        except BrokenPipeError:
+            pass  # child exited early (e.g. head); not an error by itself
         except Exception as e:  # recorded, surfaced by the caller
             self.error = e
         finally:
-            try:
-                if out is not None and out is not self.sink:
-                    out.close()
-                elif out is not None:
-                    out.flush()
-            except Exception as e:
-                self.error = self.error or e
-            try:
-                self.src.close()
-            except Exception:
-                pass
-
-
-class _StdinPump(threading.Thread):
-    """src file -> child stdin (reference SingleExecution.java:21-38)."""
-
-    def __init__(self, src_path: str, stdin, fs: FileSystem):
-        super().__init__(daemon=True)
-        self.src_path = src_path
-        self.stdin = stdin
-        self.fs = fs
-        self.count = 0
-        self.error: Exception | None = None
-
-    def run(self):
-        try:
-            with self.fs.open(self.src_path, "rb", buffering=BUF_SIZE) as f:
-                while True:
-                    chunk = f.read(BUF_SIZE)
-                    if not chunk:
-                        break
-                    self.stdin.write(chunk)
-                    self.count += len(chunk)
-        except BrokenPipeError:
-            pass  # child exited early (e.g. head); not an error by itself
-        except Exception as e:
-            self.error = e
-        finally:
-            try:
-                self.stdin.close()
-            except Exception:
-                pass
+            for f in (self.src, self.sink):
+                try:
+                    f.close()
+                except BrokenPipeError:
+                    pass
+                except Exception as e:
+                    self.error = self.error or e
 
 
 def _cleanup(paths: Iterable[str], fs: FileSystem) -> None:
@@ -209,42 +179,21 @@ def _cleanup(paths: Iterable[str], fs: FileSystem) -> None:
                     time.sleep(CLEANUP_SLEEP)
 
 
-def _fd_handles(
-    src_fs: FileSystem,
-    src_path: str,
-    dst_fs: FileSystem,
-    tmp_out: str,
-    tmp_err: str,
-    redirect_err_to_out: bool,
-):
-    """Open (src, tmp_out[, tmp_err]) and return the handles IF every one
-    is a real OS file (has a working fileno()) — the precondition for the
-    kernel-direct child wiring below. Returns None when any side is not
-    fd-backed (e.g. an fsspec object store) or fails to open; the caller
-    then takes the thread-pump path, which also owns error reporting for
-    unopenable sources."""
-    handles = []
+def _close(handles: Iterable) -> None:
+    for h in handles:
+        try:
+            h.close()
+        except Exception:
+            pass
+
+
+def _has_fd(f) -> bool:
+    """True when ``f`` is backed by an OS descriptor a child can inherit."""
     try:
-        fin = src_fs.open(src_path, "rb")
-        handles.append(fin)
-        fin.fileno()
-        fout = dst_fs.open(tmp_out, "wb")
-        handles.append(fout)
-        fout.fileno()
-        ferr = None
-        if not redirect_err_to_out:
-            ferr = dst_fs.open(tmp_err, "wb")
-            handles.append(ferr)
-            ferr.fileno()
-        return fin, fout, ferr
-    except Exception:
-        for h in handles:
-            try:
-                h.close()
-            except Exception:
-                pass
-        _cleanup([tmp_out, tmp_err], dst_fs)
-        return None
+        f.fileno()
+        return True
+    except (AttributeError, OSError):  # io.UnsupportedOperation is an OSError
+        return False
 
 
 def _preserve_attrs(src_fs: FileSystem, src_path: str, dst_fs: FileSystem, final: str) -> None:
@@ -282,67 +231,79 @@ def _exec_one(
     tmp_dir: str,
     argv: list[str],
     redirect_err_to_out: bool,
-    timeout: float | None = None,
-    src_fs: FileSystem | None = None,
-    dst_fs: FileSystem | None = None,
-    preserve: bool = False,
+    timeout: float | None,
+    src_fs: FileSystem,
+    dst_fs: FileSystem,
+    preserve: bool,
 ) -> tuple[str, int | None, int, int, int, str | None]:
     """Run one file through the child process.
 
     Returns (status, exit_code, bytes_in, bytes_out, bytes_err, error).
     Orchestration mirrors ExecFilesMapper.execution()
-    (ExecFilesMapper.java:82-154). ``timeout`` (seconds) is a straggler
-    guard the reference doesn't have (it relied on the MR task timeout):
-    on expiry the child is killed and the file FAILs, job continues.
-
-    File bytes stream src_fs -> child -> dst_fs on the executor — any
+    (ExecFilesMapper.java:82-154): open the source and the tmp sinks,
+    spawn, move the three streams, wait, then commit or clean up. The
+    source opens before any child exists, so an unopenable source FAILs
+    without running the command (the reference opens at :114 and execs at
+    :121-123). File bytes go src_fs -> child -> dst_fs on the executor, any
     FileSystem on either side, like the reference's
-    ``srcstat.getPath().getFileSystem(job).open(...)``
-    (ExecFilesMapper.java:114).
+    ``srcstat.getPath().getFileSystem(job).open(...)``.
+
+    Each stream is wired on its own. A handle with a working ``fileno()``
+    (local or mapped files) goes straight to the child, so the kernel
+    moves its bytes; a Python pump (128 KiB read/write loop, GIL-shared)
+    caps a stream at a few hundred MB/s, measured 2.56s vs 0.36s bare-cat
+    on a 1 GiB tree. Any other handle (an fsspec object) gets a pipe and a
+    ``_Pump`` thread. A descriptor's count is read from the file after the
+    child exits: the stdin offset it shares with us, the sink's size.
+
+    Lazy create (no stdout => no destination file, LazyCreateOutputStream,
+    ExecFilesMapper.java:46-80): both tmp sinks exist from the start, and
+    one still empty at exit is removed before commit, so on an object
+    store a silent file costs one empty create and one delete.
+
+    ``timeout`` (seconds) is a straggler guard the reference doesn't have
+    (it relied on the MR task timeout): on expiry the child is killed and
+    the file FAILs, job continues.
     """
-    src_fs = resolve_fs(src_path, src_fs)
-    dst_fs = resolve_fs(dst_root, dst_fs)
     final = dst_fs.join(dst_root, rel_dst) if rel_dst != "." else dst_root
     uniq = uuid.uuid4().hex[:12]
     tmp_out = dst_fs.join(tmp_dir, f"{uniq}.out")
-    tmp_err = dst_fs.join(tmp_dir, f"{uniq}.err")
-    # FD-DIRECT FAST PATH: when both filesystems hand real OS descriptors
-    # (local/mapped — the common case), wire the child straight to them
-    # and let the KERNEL move every byte; the Python thread pumps below
-    # (128 KiB read/write loops, GIL-shared) cap per-stream throughput at
-    # a few hundred MB/s, measured 2.56s vs 0.36s bare-cat on the 1 GiB
-    # bench. Observable semantics are identical: the lazy no-stdout =>
-    # no-destination-file rule becomes "0-byte tmp is removed before
-    # commit" (a pump would never have created it), and bytes_in is read
-    # from the shared file-description offset after the child exits —
-    # exact for early-exiting children (head/grep -q), where a pump's
-    # count includes bytes parked in the pipe buffer.
-    fd = _fd_handles(src_fs, src_path, dst_fs, tmp_out, tmp_err, redirect_err_to_out)
-    if fd is not None:
-        return _exec_one_fd(
-            fd, src_path, final, tmp_out, tmp_err, argv,
-            redirect_err_to_out, timeout, src_fs, dst_fs, preserve,
-        )
+    # the reference *parsed* -redirectErrorToOut but never applied it
+    # (ExecFilesMapper.java:31,232); implemented for real here
+    tmp_err = None if redirect_err_to_out else dst_fs.join(tmp_dir, f"{uniq}.err")
+    tmps = [t for t in (tmp_out, tmp_err) if t]
+    opened = []
+    try:
+        opened.append(src_fs.open(src_path, "rb"))
+        for t in tmps:
+            opened.append(dst_fs.open(t, "wb"))
+    except Exception as e:
+        _close(opened)
+        _cleanup(tmps, dst_fs)
+        return ("FAIL", None, 0, 0, 0, f"open failed: {e}")
+    fin, fout = opened[0], opened[1]
+    ferr = opened[2] if tmp_err else None
+
+    def wire(f):
+        return f if _has_fd(f) else subprocess.PIPE
+
     try:
         proc = subprocess.Popen(
             argv,
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            # the reference *parsed* -redirectErrorToOut but never applied it
-            # (ExecFilesMapper.java:31,232); implemented for real here.
-            stderr=subprocess.STDOUT if redirect_err_to_out else subprocess.PIPE,
-            bufsize=BUF_SIZE,
+            stdin=wire(fin),
+            stdout=wire(fout),
+            stderr=subprocess.STDOUT if ferr is None else wire(ferr),
+            bufsize=0,
         )
     except OSError as e:
+        _close(opened)
+        _cleanup(tmps, dst_fs)
         return ("FAIL", None, 0, 0, 0, f"spawn failed: {e}")
-
-    pin = _StdinPump(src_path, proc.stdin, src_fs)
-    pout = _Pump(proc.stdout, tmp_out, dst_fs)
-    pumps = [pin, pout]
-    perr = None
-    if not redirect_err_to_out:
-        perr = _Pump(proc.stderr, tmp_err, dst_fs)
-        pumps.append(perr)
+    # Popen opened a pipe exactly for the streams wired to PIPE
+    pin = _Pump(fin, proc.stdin) if proc.stdin else None
+    pout = _Pump(proc.stdout, fout) if proc.stdout else None
+    perr = _Pump(proc.stderr, ferr) if proc.stderr else None
+    pumps = [p for p in (pin, pout, perr) if p]
     for p in pumps:
         p.start()
     try:
@@ -350,108 +311,29 @@ def _exec_one(
     except subprocess.TimeoutExpired:
         proc.kill()
         proc.wait()
-        for p in pumps:
-            p.join(PUMP_JOIN_TIMEOUT)
-        _cleanup([tmp_out, tmp_err], dst_fs)
-        return ("FAIL", None, pin.count, pout.count, 0, f"timeout after {timeout}s, killed")
+        rc = None
     for p in pumps:
         p.join(PUMP_JOIN_TIMEOUT)
-
-    errors = [p.error for p in pumps if p.error]
-    ok = exit_ok(argv, rc) and not errors
-    bytes_err = perr.count if perr else 0
-    if ok:
-        try:
-            _commit(tmp_out, final, dst_fs)
-            if perr:
-                _commit(tmp_err, final + ".stderr", dst_fs)
-            if preserve:
-                _preserve_attrs(src_fs, src_path, dst_fs, final)
-            return ("EXECUTED", rc, pin.count, pout.count, bytes_err, None)
-        except OSError as e:
-            errors.append(e)
-    _cleanup([tmp_out, tmp_err], dst_fs)
-    msg = f"exit={rc}" + ("; " + "; ".join(map(str, errors)) if errors else "")
-    return ("FAIL", rc, pin.count, pout.count, bytes_err, msg)
-
-
-def _exec_one_fd(
-    fd,
-    src_path: str,
-    final: str,
-    tmp_out: str,
-    tmp_err: str,
-    argv: list[str],
-    redirect_err_to_out: bool,
-    timeout: float | None,
-    src_fs: FileSystem,
-    dst_fs: FileSystem,
-    preserve: bool,
-) -> tuple[str, int | None, int, int, int, str | None]:
-    """The fd-direct arm of _exec_one: child stdio wired straight to the
-    source file and tmp sinks (no pump threads, no Python in the byte
-    path). Same return contract and commit/cleanup protocol."""
-    fin, fout, ferr = fd
-
-    def _close_all():
-        for h in (fin, fout, ferr):
-            if h is not None:
-                try:
-                    h.close()
-                except Exception:
-                    pass
-
-    try:
-        proc = subprocess.Popen(
-            argv,
-            stdin=fin,
-            stdout=fout,
-            stderr=subprocess.STDOUT if redirect_err_to_out else ferr,
-        )
-    except OSError as e:
-        _close_all()
-        _cleanup([tmp_out, tmp_err], dst_fs)
-        return ("FAIL", None, 0, 0, 0, f"spawn failed: {e}")
-    try:
-        rc = proc.wait(timeout=timeout)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.wait()
-        bytes_in = os.lseek(fin.fileno(), 0, os.SEEK_CUR)
-        _close_all()
-        _cleanup([tmp_out, tmp_err], dst_fs)
+    bytes_in = pin.count if pin else os.lseek(fin.fileno(), 0, os.SEEK_CUR)
+    bytes_out = pout.count if pout else os.fstat(fout.fileno()).st_size
+    bytes_err = 0 if ferr is None else perr.count if perr else os.fstat(ferr.fileno()).st_size
+    _close(opened)
+    if rc is None:
+        _cleanup(tmps, dst_fs)
         return ("FAIL", None, bytes_in, 0, 0, f"timeout after {timeout}s, killed")
-    # the child's stdin fd shares our open file description, so the
-    # current offset IS the byte count it consumed
-    bytes_in = os.lseek(fin.fileno(), 0, os.SEEK_CUR)
-    _close_all()
-
-    def _size(p: str) -> int:
-        try:
-            return dst_fs.stat(p).size if dst_fs.exists(p) else 0
-        except OSError:
-            return 0
-
-    bytes_out = _size(tmp_out)
-    bytes_err = _size(tmp_err) if ferr is not None else 0
-    # lazy-create equivalence: a child that wrote nothing must leave no
-    # destination file (Executor.java:33-51 / SingleExecution lazy sink)
-    if bytes_out == 0:
-        _cleanup([tmp_out], dst_fs)
-    if ferr is not None and bytes_err == 0:
-        _cleanup([tmp_err], dst_fs)
-    errors: list[Exception] = []
-    if exit_ok(argv, rc):
+    _cleanup([t for t, n in ((tmp_out, bytes_out), (tmp_err, bytes_err)) if t and n == 0], dst_fs)
+    errors = [p.error for p in pumps if p.error]
+    if exit_ok(argv, rc) and not errors:
         try:
             _commit(tmp_out, final, dst_fs)
-            if ferr is not None:
+            if tmp_err:
                 _commit(tmp_err, final + ".stderr", dst_fs)
             if preserve:
                 _preserve_attrs(src_fs, src_path, dst_fs, final)
             return ("EXECUTED", rc, bytes_in, bytes_out, bytes_err, None)
         except OSError as e:
             errors.append(e)
-    _cleanup([tmp_out, tmp_err], dst_fs)
+    _cleanup(tmps, dst_fs)
     msg = f"exit={rc}" + ("; " + "; ".join(map(str, errors)) if errors else "")
     return ("FAIL", rc, bytes_in, bytes_out, bytes_err, msg)
 

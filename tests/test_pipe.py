@@ -606,69 +606,19 @@ def test_tmp_dir_removed_when_job_raises(spark, tree, tmp_path, monkeypatch):
     assert not (dst / "_distexec_tmp").exists()
 
 
-@pytest.fixture(params=["fd_direct", "thread_pump"])
-def fault_tree(request, tmp_path):
-    """A small tree (one file bigger than a pipe buffer) behind one of the
-    two exec paths. ``fd_direct``: plain local paths, whose handles carry
-    OS descriptors the child is wired to. ``thread_pump``: a MappedFS
-    whose handles hide their descriptor, so ``_fd_handles`` declines and
-    the pump threads move the bytes. Yields (src, dst, fs, dst_local)."""
-    import io
-
-    from hadoop_distexec_spark.fs import MappedFS
-
-    store = tmp_path / "store"
-    t = store / "tree"
-    (t / "sub").mkdir(parents=True)
-    (t / "a.txt").write_text("Hello this is my string")
-    (t / "sub" / "b.txt").write_text("line one\nline two with pattern\n")
-    (t / "sub" / "big.bin").write_bytes(bytes(range(256)) * 800)
-    (t / "tiny.txt").write_text("x")
-    if request.param == "fd_direct":
-        return str(t), str(store / "out"), None, store / "out"
-
-    class NoFd:
-        def __init__(self, f):
-            self._f = f
-
-        def fileno(self):
-            raise io.UnsupportedOperation("fileno")
-
-        def __getattr__(self, name):
-            return getattr(self._f, name)
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *exc):
-            self._f.close()
-
-    class PumpFS(MappedFS):
-        def open(self, path, mode="rb", buffering=-1):
-            return NoFd(super().open(path, mode, buffering))
-
-    fs = PumpFS("mock", str(store))
-    from hadoop_distexec_spark.pipe import executor
-
-    probe = executor._fd_handles(
-        fs, "mock://tree/a.txt", fs, "mock://probe.out", "mock://probe.err", False
-    )
-    assert probe is None, "thread_pump fixture must not take the fd-direct path"
-    return "mock://tree", "mock://out", fs, store / "out"
-
-
-def test_child_killed_mid_stream(spark, fault_tree):
+def test_child_killed_mid_stream(spark, wired_tree):
     """A child killed by a signal after reading part of its input FAILs
     that file with the negative signal as exit code, commits nothing
     (no destination, no .stderr, no tmp leftovers), logs one FAIL line
     per file, and the job still returns every file
     (ExecFilesMapper.java:173-208)."""
-    src, dst, fs, dst_local = fault_tree
-    res = distexec(spark, src, dst, "sh -c 'head -c 16 >/dev/null; kill -9 $$'", fs=fs)
+    w = wired_tree
+    res = distexec(spark, w.src, w.dst, "sh -c 'head -c 16 >/dev/null; kill -9 $$'", fs=w.fs)
     rows = res.collect()
     assert sorted(r["rel_dst"] for r in rows) == ["a.txt", "sub/b.txt", "sub/big.bin", "tiny.txt"]
     assert all(r["status"] == "FAIL" and r["exit_code"] == -9 for r in rows), rows
 
+    dst_local = w.store / "out"
     assert _output_files(dst_local) == []
     assert not (dst_local / "_distexec_tmp").exists()
     assert _fail_log_lines(dst_local) == sorted(
@@ -676,17 +626,17 @@ def test_child_killed_mid_stream(spark, fault_tree):
     )
 
 
-def test_timeout_fails_only_the_hung_file(spark, fault_tree):
+def test_timeout_fails_only_the_hung_file(spark, wired_tree):
     """A child past cmd_timeout is killed and FAILs its file with
     "timeout" in the error; it leaves no destination, .stderr or tmp file
     and one FAIL-log line, while the other files EXECUTE. ``exec sleep``
     replaces the shell, so the kill closes the child's pipes."""
     import time as _time
 
-    src, dst, fs, dst_local = fault_tree
+    w = wired_tree
     cmd = """sh -c 'n=$(wc -c); [ "$n" -eq 1 ] && exec sleep 300; echo "$n"'"""
     t0 = _time.time()
-    rows = distexec(spark, src, dst, cmd, cmd_timeout=2.0, fs=fs).collect()
+    rows = distexec(spark, w.src, w.dst, cmd, cmd_timeout=2.0, fs=w.fs).collect()
     assert _time.time() - t0 < 60  # did not wait out the sleep
     by_rel = {r["rel_dst"]: r for r in rows}
     assert sorted(by_rel) == ["a.txt", "sub/b.txt", "sub/big.bin", "tiny.txt"]
@@ -694,11 +644,136 @@ def test_timeout_fails_only_the_hung_file(spark, fault_tree):
     assert hung["status"] == "FAIL" and "timeout" in hung["error"], hung
     assert all(r["status"] == "EXECUTED" for r in by_rel.values()), rows
     sizes = {"a.txt": 23, "sub/b.txt": 31, "sub/big.bin": 256 * 800}
+    dst_local = w.store / "out"
     assert _output_files(dst_local) == sorted(sizes)
     for rel, n in sizes.items():
         assert (dst_local / rel).read_text() == f"{n}\n"
     assert not (dst_local / "_distexec_tmp").exists()
     assert _fail_log_lines(dst_local) == [f"FAIL tiny.txt : {hung['error']}"]
+
+
+def test_cat_counters_every_wiring(spark, wired_tree):
+    """cat copies every file byte for byte; bytes_in and bytes_out equal
+    the source size, bytes_err is 0, and no tmp file is left."""
+    w = wired_tree
+    rows = distexec(spark, w.src, w.dst, "cat", fs=w.fs).collect()
+    tree, out = w.store / "tree", w.store / "out"
+    assert len(rows) == 4
+    for r in rows:
+        size = (tree / r["rel_dst"]).stat().st_size
+        assert r["status"] == "EXECUTED", r
+        assert (r["bytes_in"], r["bytes_out"], r["bytes_err"]) == (size, size, 0), r
+        assert (out / r["rel_dst"]).read_bytes() == (tree / r["rel_dst"]).read_bytes()
+    assert _output_files(out) == ["a.txt", "sub/b.txt", "sub/big.bin", "tiny.txt"]
+    assert not (out / "_distexec_tmp").exists()
+
+
+def test_grep_lazy_create_every_wiring(spark, wired_tree):
+    """grep exit 1 (no match) EXECUTEs and leaves neither a destination
+    nor a .stderr file: a tmp sink still empty at exit is removed before
+    commit (Executor.java:33-35,50-51; LazyCreateOutputStream
+    ExecFilesMapper.java:46-80)."""
+    w = wired_tree
+    rows = {r["rel_dst"]: r for r in distexec(spark, w.src, w.dst, "grep pattern", fs=w.fs).collect()}
+    assert all(r["status"] == "EXECUTED" for r in rows.values()), rows
+    assert {rel: r["exit_code"] for rel, r in rows.items()} == {
+        "a.txt": 1, "sub/b.txt": 0, "sub/big.bin": 1, "tiny.txt": 1,
+    }
+    out = w.store / "out"
+    assert _output_files(out) == ["sub/b.txt"]
+    assert (out / "sub" / "b.txt").read_text() == "line two with pattern\n"
+    assert rows["sub/b.txt"]["bytes_out"] == 22
+    assert not (out / "_distexec_tmp").exists()
+
+
+def test_stderr_side_file_every_wiring(spark, wired_tree):
+    """stderr lands in <rel_dst>.stderr beside the output
+    (ExecFilesMapper.java:86,108,119,148)."""
+    w = wired_tree
+    rows = distexec(spark, w.src, w.dst, "sh -c 'echo eee 1>&2; cat'", fs=w.fs).collect()
+    assert all(r["status"] == "EXECUTED" and r["bytes_err"] == 4 for r in rows), rows
+    out = w.store / "out"
+    rels = ["a.txt", "sub/b.txt", "sub/big.bin", "tiny.txt"]
+    assert _output_files(out) == sorted(rels + [rel + ".stderr" for rel in rels])
+    assert (out / "a.txt.stderr").read_text() == "eee\n"
+    assert (out / "a.txt").read_text() == "Hello this is my string"
+
+
+def test_redirect_err_to_out_every_wiring(spark, wired_tree):
+    """-redirectErrorToOut sends stderr into the output file and writes no
+    .stderr (the reference parsed but never applied it,
+    ExecFilesMapper.java:31,232)."""
+    w = wired_tree
+    rows = distexec(
+        spark, w.src + "/a.txt", w.dst, "sh -c 'echo eee 1>&2; cat'",
+        redirect_err_to_out=True, fs=w.fs,
+    ).collect()
+    assert [(r["status"], r["bytes_out"], r["bytes_err"]) for r in rows] == [("EXECUTED", 27, 0)]
+    out = w.store / "out"
+    assert (out / "a.txt").read_text() == "eee\nHello this is my string"
+    assert _output_files(out) == ["a.txt"]
+
+
+def test_preserve_every_wiring(spark, wired_tree):
+    """-p copies the source's permission bits and mtime onto the committed
+    output (DistCp heritage, src/reference/DistCp.java:662-712)."""
+    w = wired_tree
+    src_file = w.store / "tree" / "a.txt"
+    os.chmod(src_file, 0o750)
+    os.utime(src_file, (1_600_000_000, 1_600_000_000))
+    rows = distexec(spark, w.src, w.dst, "cat", preserve=True, fs=w.fs).collect()
+    assert all(r["status"] == "EXECUTED" for r in rows), rows
+    st = (w.store / "out" / "a.txt").stat()
+    assert st.st_mode & 0o7777 == 0o750
+    assert abs(st.st_mtime - 1_600_000_000) < 1
+
+
+def test_bytes_in_every_wiring(spark, wired_tree):
+    """bytes_in is the source bytes handed to the child. A descriptor
+    stdin reports its file offset, what ``head -c 10`` consumed; a pumped
+    stdin reports what the pipe accepted, at least that and at most the
+    file. ``cat`` reads everything on every wiring."""
+    w = wired_tree
+    size = 1 << 20
+    big = w.store / "big"
+    big.mkdir()
+    (big / "m.bin").write_bytes(bytes(range(256)) * (size // 256))
+    for cmd, out in (("head -c 10", 10), ("cat", size)):
+        dst = "mock://out_" + cmd.split()[0]
+        rows = distexec(spark, "mock://big", dst, cmd, fs=w.fs).collect()
+        assert [(r["status"], r["bytes_out"]) for r in rows] == [("EXECUTED", out)], rows
+        b_in = rows[0]["bytes_in"]
+        if cmd == "cat" or w.wiring in ("fd", "dst_pump"):
+            assert b_in == out, rows
+        assert out <= b_in <= size, rows
+
+
+def test_unreadable_source_fails_only_that_file(spark, wired_tree):
+    """A source that cannot be opened FAILs that file before any child is
+    spawned (the reference opens at ExecFilesMapper.java:114 and execs at
+    :121-123), with its error in the FAIL log once and no destination,
+    .stderr or tmp file; the other files EXECUTE."""
+    w = wired_tree
+
+    class Unreadable(type(w.fs)):
+        def open(self, path, mode="rb", buffering=-1):
+            if path.endswith("/sub/b.txt") and "r" in mode:
+                raise PermissionError(13, "Permission denied", path)
+            return super().open(path, mode, buffering)
+
+    fs = Unreadable("mock", str(w.store))
+    spawned = w.store / "spawned"
+    cmd = f"sh -c 'echo x >> {spawned}; cat'"
+    rows = {r["rel_dst"]: r for r in distexec(spark, w.src, w.dst, cmd, fs=fs).collect()}
+    bad = rows.pop("sub/b.txt")
+    assert (bad["status"], bad["exit_code"], bad["bytes_in"]) == ("FAIL", None, 0), bad
+    assert "Permission denied" in bad["error"]
+    assert all(r["status"] == "EXECUTED" for r in rows.values()), rows
+    assert len(spawned.read_text().splitlines()) == 3  # no child for the bad file
+    out = w.store / "out"
+    assert _output_files(out) == ["a.txt", "sub/big.bin", "tiny.txt"]
+    assert not (out / "_distexec_tmp").exists()
+    assert _fail_log_lines(out) == [f"FAIL sub/b.txt : {bad['error']}"]
 
 
 def _output_files(dst_local):
