@@ -102,7 +102,9 @@ class FileSystem:
         return posixpath.join(base, *parts)
 
     def dirname(self, path: str) -> str:
-        return posixpath.dirname(path)
+        parent = posixpath.dirname(path)
+        # a top-level URI entry's parent is the scheme root: "mock://", not "mock:"
+        return parent + "//" if parent.endswith(":") and "://" in path else parent
 
     def normalize(self, path: str) -> str:
         """Absolutize/canonicalize driver-supplied paths."""
@@ -323,17 +325,6 @@ class FsspecFS(FileSystem):
             self._fs().rm(path, recursive=True)
         except FileNotFoundError:
             pass
-
-
-def executor_mutation_safe(spark, fs: FileSystem) -> bool:
-    """True when executor-side mutations (mkdir/remove) through ``fs`` hit
-    the same store the driver sees: always for remote filesystems, and for
-    LocalFS only under a local[*] master — on a real cluster executor-local
-    ``os.*`` writes would target worker disks (ADVICE r01 #5). Callers fall
-    back to driver-side application when this is False."""
-    if not isinstance(fs, LocalFS):
-        return True
-    return spark.sparkContext.master.startswith("local")
 
 
 def resolve_fs(path: str, fs: FileSystem | None = None) -> FileSystem:

@@ -415,7 +415,7 @@ def connected_components_jump(
             F.col("doc_id").alias("j_id"), F.col("c1").alias("j_c")
         )
         # convergence count piggybacks the checkpoint materialization
-        # via Observation (the pipe executor's FAIL-count idiom) — one
+        # via Observation — one
         # job instead of a checkpoint + a separate count per round
         obs = Observation()
         new = (

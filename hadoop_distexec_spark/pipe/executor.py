@@ -28,7 +28,8 @@ Semantics checklist, each with its reference citation
   (distexec/ExecFilesMapper.java:27) — here per-row result columns
   aggregated relationally by ``metrics()`` (bytes on success only, like
   the reference);
-- FAIL log records written under the destination
+- FAIL log records written by the map itself: each task commits its
+  FAIL lines as one part file, ``<dst>/_distexec_logs/part-<bin>``
   (distexec/ExecFilesMapper.java:184-187; log path defaulting
   DistExec.java:507-521).
 
@@ -75,9 +76,9 @@ from hadoop_distexec_spark.functions import prefix_sum
 from hadoop_distexec_spark.pipe.cmdline import exit_ok, tokenize
 from hadoop_distexec_spark.sources.manifest import build_manifest
 
-# Schemes Spark's own Hadoop FS layer can read/write (results parquet, FAIL
-# text logs). Anything else — e.g. a custom FileSystem implementation —
-# gets the fs-routed fallback paths below.
+# Schemes Spark's own Hadoop FS layer can read/write (the results ledger,
+# the hash state). Anything else — e.g. a custom FileSystem implementation —
+# gets its results pinned with a localCheckpoint and no hash state.
 _SPARK_NATIVE_SCHEMES = {
     "", "file", "hdfs", "viewfs", "s3", "s3a", "s3n",
     "gs", "wasb", "wasbs", "abfs", "abfss", "oss", "o3fs",
@@ -112,6 +113,8 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("src_md5", T.StringType(), True),
     ]
 )
+# the update="hash" state under <dst>/_distexec_state
+_STATE_SCHEMA = T.StructType([RESULT_SCHEMA[c] for c in ("src_path", "rel_dst", "src_md5")])
 
 
 def _md5_of(fs: FileSystem, path: str) -> str:
@@ -411,11 +414,9 @@ def distexec(
     *,
     redirect_err_to_out: bool = False,
     n_tasks: int | None = None,
-    log_dir: str | None = None,
     update: bool | str = False,
     cmd_timeout: float | None = None,
     fs: FileSystem | None = None,
-    state_dir: str | None = None,
     filelimit: int | None = None,
     sizelimit: int | None = None,
     preserve: bool = False,
@@ -423,9 +424,11 @@ def distexec(
     """Distributed per-file command execution — `hadoop distexec src dst cmd`
     (reference README.md:9-10) as a Spark job.
 
-    Returns the per-file results DataFrame (RESULT_SCHEMA); FAIL rows are
-    also written as text logs under ``log_dir`` (default
-    ``<dst>/_distexec_logs``, reference DistExec.java:507-521).
+    Returns the per-file results DataFrame (RESULT_SCHEMA). Each map task
+    that FAILs a file also writes its ``FAIL <rel_dst> : <error>`` lines
+    to ``<dst>/_distexec_logs/part-<bin>``, committed like any output; the
+    log directory is cleared at the start of every run (reference
+    ExecFilesMapper.java:184-187, log path DistExec.java:507-521).
 
     ``update=True`` (or ``"mtime"``) restores the incremental mode the
     reference dropped from DistCp (src/reference/DistCp.java:1192-1237): a
@@ -438,10 +441,10 @@ def distexec(
     ``update="hash"`` is the content-true variant of DistCp's
     ``needsUpdate`` length+CRC compare (DistCp.java:333-337,1192-1237): the
     run persists each source's md5 in a ``_distexec_state`` parquet under
-    dst (override with ``state_dir``; required for filesystems Spark can't
-    write), and a re-run SKIPs a file whose *content* hash is unchanged and
-    whose destination exists — a touched-but-unchanged source does not
-    re-execute. Costs one extra read of each source per run.
+    dst, so dst must be a scheme Spark can write; a re-run SKIPs a file
+    whose *content* hash is unchanged and whose destination exists — a
+    touched-but-unchanged source does not re-execute. Costs one extra read
+    of each source per run.
 
     ``fs`` overrides filesystem resolution for both sides; by default each
     path's URI scheme picks the FS (local, or fsspec for remote schemes),
@@ -464,22 +467,17 @@ def distexec(
         srcs = [srcs]
     dst_fs = resolve_fs(dst, fs)
 
+    prev_state = None
     if update_mode == "hash":
-        if state_dir is None:
-            if not _spark_native(dst):
-                raise ValueError(
-                    "update='hash' needs a Spark-writable state_dir when dst "
-                    f"scheme is not Spark-native ({dst!r})"
-                )
-            state_dir = dst_fs.join(dst, "_distexec_state")
-        try:
-            prev_state = spark.read.parquet(state_dir).select(
+        if not _spark_native(dst):
+            raise ValueError(
+                f"update='hash' keeps its state under dst, which Spark cannot write: {dst!r}"
+            )
+        state_dir = dst_fs.join(dst, "_distexec_state")
+        if dst_fs.exists(state_dir):  # absent on the first run
+            prev_state = spark.read.schema(_STATE_SCHEMA).parquet(state_dir).select(
                 "rel_dst", F.col("src_md5").alias("prev_md5")
             )
-        except Exception:  # first run: no state yet
-            prev_state = None
-    else:
-        prev_state = None
     # -update re-runs must target the same layout as the first run, so the
     # contents-into-dst root rule applies regardless of dst existence
     # (DistCp -update semantics).
@@ -516,6 +514,8 @@ def distexec(
         dst_fs.mkdirs(dst)
         tmp_dir = dst_fs.join(dst, "_distexec_tmp")  # tmp placement: DistExec.java:633-636
         dst_fs.mkdirs(tmp_dir)
+        log_dir = dst_fs.join(dst, "_distexec_logs")
+        dst_fs.rmtree(log_dir)  # this run's tasks write the whole log
 
         planned, n_tasks, plan_cache = plan_partitions(manifest, n_tasks)
         to_run = planned.select("bin", "src_path", "rel_dst", "is_dir", "mtime_epoch")
@@ -587,10 +587,23 @@ def distexec(
                 return _result(src_path, rel_dst, *out, src_md5)
 
             # one result batch per input batch; directory rows add none
+            log, bin_ = [], None
             for batch in batches:
-                out = [r for r in map(run_one, batch.to_pylist()) if r is not None]
+                rows = batch.to_pylist()
+                bin_ = rows[0]["bin"] if rows else bin_
+                out = [r for r in map(run_one, rows) if r is not None]
+                log += [
+                    f"FAIL {r['rel_dst']} : {r['error']}\n" for r in out if r["status"] == "FAIL"
+                ]
                 if out:
                     yield pa.RecordBatch.from_pylist(out, schema=result_arrow)
+            if log:
+                # FAIL records (ExecFilesMapper.java:184-187): one part per
+                # map task, named by its bin, so a retried task rewrites it
+                tmp = dst_fs.join(tmp_dir, f"{uuid.uuid4().hex[:12]}.log")
+                with dst_fs.open(tmp, "wb") as f:
+                    f.write("".join(log).encode("utf-8"))
+                _commit(tmp, dst_fs.join(log_dir, f"part-{bin_:05d}"), dst_fs)
 
         # one task per bin, exactly: repartitionById sends bin b to partition
         # b (a hash repartition would collide bins into one task and leave
@@ -605,23 +618,9 @@ def distexec(
         # a driver-local scratch dir, so a parquet round-trip through
         # tempfile.mkdtemp would land the parts on worker disks and the
         # driver's read-back would see an empty directory.
-        n_fails: int | None = None
         if _spark_native(dst):
-            # piggyback the FAIL count on the durability write (Observation
-            # fills from the write action) — the former fails.limit(1).count()
-            # was a whole extra job just to decide whether to write a log
-            from pyspark.sql import Observation
-
-            # unique per call: Spark resolves observations by NAME from query
-            # end events, so two concurrent distexec() calls on one session
-            # sharing a name could latch each other's counts
-            obs = Observation(f"distexec_metrics_{uuid.uuid4().hex[:12]}")
             results_dir = dst_fs.join(dst, "_distexec_results")
-            observed = results.observe(
-                obs, F.sum(F.when(F.col("status") == "FAIL", 1).otherwise(0)).alias("n_fails")
-            )
-            observed.write.mode("overwrite").parquet(results_dir)
-            n_fails = obs.get["n_fails"] or 0
+            results.write.mode("overwrite").parquet(results_dir)
             results = spark.read.schema(RESULT_SCHEMA).parquet(results_dir)
         else:
             results = results.localCheckpoint(eager=True)
@@ -646,41 +645,7 @@ def distexec(
         # one; FAIL rows are dropped so they re-execute next time
         results.filter(
             F.col("src_md5").isNotNull() & (F.col("status") != "FAIL")
-        ).select("src_path", "rel_dst", "src_md5").write.mode("overwrite").parquet(state_dir)
-
-    # FAIL log records (ExecFilesMapper.java:184-187)
-    log_dir = log_dir or dst_fs.join(dst, "_distexec_logs")
-    fails = results.filter(F.col("status") == "FAIL")
-    if n_fails is None:
-        n_fails = fails.limit(1).count()
-    if n_fails > 0:
-        log_lines = fails.select(
-            F.concat(F.lit("FAIL "), "rel_dst", F.lit(" : "), F.coalesce("error", F.lit("?"))).alias(
-                "value"
-            )
-        )
-        if _spark_native(log_dir):
-            log_lines.write.mode("overwrite").text(log_dir)
-        else:
-            # fs-routed distributed text sink: one part file per partition,
-            # written executor-side through the FileSystem interface.
-            # Clear prior parts first — the uuid-named append would
-            # otherwise accumulate stale FAIL records across runs, where
-            # the Spark-native branch's mode("overwrite") replaces them.
-            try:
-                dst_fs.rmtree(log_dir)
-            except (FileNotFoundError, OSError):
-                pass
-            dst_fs.mkdirs(log_dir)
-
-            def _write_log(rows) -> None:
-                buf = "".join(r["value"] + "\n" for r in rows)
-                if buf:
-                    part = dst_fs.join(log_dir, f"part-{uuid.uuid4().hex[:12]}.txt")
-                    with dst_fs.open(part, "wb") as f:
-                        f.write(buf.encode("utf-8"))
-
-            log_lines.foreachPartition(_write_log)
+        ).select(*_STATE_SCHEMA.names).write.mode("overwrite").parquet(state_dir)
 
     return results
 

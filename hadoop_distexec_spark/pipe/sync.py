@@ -9,14 +9,11 @@ of DistCp's sorted-merge compare (an anti-join IS delete-nonexisting,
 SURVEY.md §2.5).
 
 Scale shape: both sides are manifests from ``build_manifest`` (see its
-docstring for where the walk runs), the anti-join shuffles on rel_dst
-once, and deletions run executor-side via foreachPartition when the
-filesystem is mutation-safe from executors
-(remote FS, or local FS under a local master — fs.executor_mutation_safe);
-otherwise they fall back to the driver (ADVICE r01 #5: executor-local
-``os.remove`` on a real cluster would target worker disks). The driver
-only ever materializes the (tiny) directory records for the deepest-first
-rmdir pass.
+docstring for where the walk runs) and the anti-join shuffles on rel_dst
+once. Its result, the diff, comes to the driver in one collect, which
+freezes it before dst changes; the driver then deletes files, then dirs
+deepest-first, like DistCp's client-side loop. A sync with very many
+extras on an object store therefore deletes serially (SCALE.md).
 """
 
 from __future__ import annotations
@@ -24,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_distexec_spark.fs import FileSystem, executor_mutation_safe, resolve_fs
+from hadoop_distexec_spark.fs import FileSystem, resolve_fs
 from hadoop_distexec_spark.sources.manifest import build_manifest
 
 # engine-internal paths under dst that a sync must never touch
@@ -66,38 +63,19 @@ def sync_deletes(
     )
 
     extras = actual.join(keep, "rel_dst", "left_anti").select("rel_dst", "is_dir")
-    extras = extras.localCheckpoint(eager=True)  # freeze the listing before mutating dst
-
+    # one collect freezes the listing before dst is mutated
+    extras = extras.toArrow()
     if not dry_run:
-        def _rm_one(rel: str) -> None:
+        rows = list(zip(extras["rel_dst"].to_pylist(), extras["is_dir"].to_pylist()))
+        for rel in (rel for rel, is_dir in rows if not is_dir):
             try:
                 dst_fs.remove(dst_fs.join(dst, rel))
             except FileNotFoundError:
                 pass  # race: already gone
-
-        if executor_mutation_safe(spark, dst_fs):
-            # files: distributed delete
-            def _rm(rows) -> None:
-                for r in rows:
-                    if not r["is_dir"]:
-                        _rm_one(r["rel_dst"])
-
-            extras.foreachPartition(_rm)
-        else:
-            # cluster + local paths: executors can't be trusted to share
-            # the driver's disk — apply driver-side (extras are the *diff*,
-            # small by the nature of an incremental sync)
-            for r in extras.filter(~F.col("is_dir")).toLocalIterator():
-                _rm_one(r["rel_dst"])
-
-        # dirs: deepest-first so children go before parents; tiny row count
-        dirs = sorted(
-            (r["rel_dst"] for r in extras.filter(F.col("is_dir")).collect()),
-            key=lambda p: -p.count("/"),
-        )
-        for rel in dirs:
+        # dirs deepest-first so children go before parents
+        for rel in sorted((rel for rel, is_dir in rows if is_dir), key=lambda p: -p.count("/")):
             try:
                 dst_fs.rmdir(dst_fs.join(dst, rel))
             except OSError:
                 pass  # non-empty (kept child) or already gone
-    return extras
+    return spark.createDataFrame(extras)

@@ -56,15 +56,14 @@ _WALK_ARROW_SCHEMA = to_arrow_schema(_WALK_SCHEMA)
 def make_relative(root: str, path: str) -> str | None:
     """Strip ``root`` from ``path`` (reference makeRelative,
     DistExec.java:388-410): returns "." when path == root, None when path is
-    not a descendant of root."""
-    root = root.rstrip("/") or "/"
-    path = path.rstrip("/") or "/"
-    if path == root:
+    not a descendant of root. A root ending in "/" ("/", "mock://") is
+    already its own prefix."""
+    prefix = root if root.endswith("/") else root + "/"
+    if path == root or path.rstrip("/") + "/" == prefix:
         return "."
-    prefix = "/" if root == "/" else root + "/"
     if not path.startswith(prefix):
         return None
-    return path[len(prefix) :]
+    return path[len(prefix) :].rstrip("/")
 
 
 def _stat_entry(
@@ -240,12 +239,13 @@ def _walk_batch(rows: list[tuple]) -> pa.RecordBatch:
 
 
 def _rel_expr():
-    """Column twin of ``make_relative``: strip root + '/' (just '/' when
-    the root IS '/'), '.' for the root itself. Pure string expression, so
-    the projection stays in codegen."""
+    """Column twin of ``make_relative``: strip root + '/' (just the root
+    when it already ends in '/', as '/' and 'mock://' do), '.' for the
+    root itself. Pure string expression, so the projection stays in
+    codegen."""
     return F.when(F.col("src_path") == F.col("root"), F.lit(".")).otherwise(
         F.expr(
-            "substring(src_path, length(root) + (CASE WHEN root = '/' THEN 1 ELSE 2 END))"
+            "substring(src_path, length(root) + (CASE WHEN root LIKE '%/' THEN 1 ELSE 2 END))"
         )
     )
 

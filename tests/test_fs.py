@@ -204,3 +204,11 @@ def test_resolve_fs_explicit_remote_fs_wins():
     assert isinstance(got, FsspecFS) and got.protocol == "hdfs"
     # local paths always route local, explicit fs or not
     assert isinstance(resolve_fs("/tmp/x", creds), LocalFS)
+
+
+def test_update_hash_needs_spark_writable_dst(spark, mockfs):
+    """update='hash' keeps its state under dst, so a dst Spark cannot
+    write is refused before anything is created there."""
+    with pytest.raises(ValueError, match="update='hash'"):
+        distexec(spark, "mock://tree", "mock://out", "cat", update="hash", fs=mockfs)
+    assert not mockfs.exists("mock://out")

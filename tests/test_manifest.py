@@ -244,3 +244,41 @@ def test_uri_list_source(spark, tmp_path):
     lst.write_text("/data/a.txt\n/data/b.txt\n\n  /data/c.txt \n")
     df = read_uri_list(spark, str(lst))
     assert [r["src_path"] for r in df.collect()] == ["/data/a.txt", "/data/b.txt", "/data/c.txt"]
+
+
+def test_source_under_uri_root_stays_inside_dst(spark, tmp_path):
+    """A source directly under a URI root rebases against the scheme root
+    ("mock://", not "mock:"): once dst exists, a second run into it lands
+    under dst/big/ instead of at an absolute path outside dst."""
+    from hadoop_distexec_spark import distexec
+
+    store = tmp_path / "store"
+    (store / "big" / "sub").mkdir(parents=True)
+    (store / "big" / "a.txt").write_text("alpha\n")
+    (store / "big" / "sub" / "b.txt").write_text("beta\n")
+    fs = MappedFS("mock", str(store))
+    assert fs.dirname("mock://big") == "mock://"
+    assert make_relative("mock://", "mock://big/a.txt") == "big/a.txt"
+    for _ in range(2):
+        res = distexec(spark, "mock://big", "mock://out", "cat", fs=fs)
+        assert res.filter(F.col("status") != "EXECUTED").count() == 0
+    out = store / "out"
+    assert (out / "a.txt").read_text() == "alpha\n"  # first run: dst was new
+    assert (out / "big" / "a.txt").read_text() == "alpha\n"
+    assert (out / "big" / "sub" / "b.txt").read_text() == "beta\n"
+    m = build_manifest(spark, "mock://big", "mock://out", fs=fs)
+    assert sorted(r["rel_dst"] for r in m.collect()) == [
+        "big", "big/a.txt", "big/sub", "big/sub/b.txt",
+    ]
+
+
+def test_root_with_trailing_slash_keeps_whole_names(spark, tmp_path):
+    """A source root given with a trailing slash on a filesystem that does
+    not normalize it ("mock://tree/") is already its own prefix: the
+    column rebase must not eat the first character of each name."""
+    store = tmp_path / "store"
+    (store / "tree" / "sub").mkdir(parents=True)
+    (store / "tree" / "a.txt").write_text("a")
+    (store / "tree" / "sub" / "b.txt").write_text("b")
+    m = build_manifest(spark, "mock://tree/", None, fs=MappedFS("mock", str(store)))
+    assert sorted(r["rel_dst"] for r in m.collect()) == [".", "a.txt", "sub", "sub/b.txt"]

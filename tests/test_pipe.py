@@ -795,3 +795,83 @@ def _fail_log_lines(dst_local):
         for line in p.read_text().splitlines()
         if line
     )
+
+
+def test_corrupt_hash_state_raises(spark, tree, tmp_path):
+    """The hash state is read with its known schema when it exists; a
+    state that is not parquet fails the run instead of silently
+    re-executing every file."""
+    import shutil
+
+    dst = tmp_path / "out"
+    distexec(spark, str(tree), str(dst), "cat", update="hash")
+    state = dst / "_distexec_state"
+    shutil.rmtree(state)
+    state.mkdir()
+    (state / "part-00000.parquet").write_bytes(b"not parquet at all")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        distexec(spark, str(tree), str(dst), "cat", update="hash")
+
+
+def _log_parts(dst_local):
+    """{part file name: its lines} under ``<dst>/_distexec_logs``, hidden
+    files ("." and "_") skipped as every reader of the log does."""
+    log_dir = dst_local / "_distexec_logs"
+    if not log_dir.is_dir():
+        return {}
+    return {
+        p.name: p.read_text().splitlines()
+        for p in log_dir.iterdir()
+        if not p.name.startswith((".", "_"))
+    }
+
+
+@pytest.mark.parametrize("fs_kind", ["local", "mapped"])
+def test_clean_rerun_clears_fail_log(spark, tree, tmp_path, fs_kind):
+    """The FAIL log describes the latest run only: a re-run into the same
+    dst that FAILs nothing leaves no FAIL line behind."""
+    from hadoop_distexec_spark.fs import MappedFS
+
+    (tree / "latin1.txt").write_bytes("café\n".encode("latin-1"))
+    if fs_kind == "local":
+        src, dst, fs = str(tree), str(tmp_path / "out"), None
+    else:
+        src, dst, fs = "mock://tree", "mock://out", MappedFS("mock", str(tmp_path))
+    def log_lines():
+        return [line for part in _log_parts(tmp_path / "out").values() for line in part]
+
+    r1 = distexec(spark, src, dst, "iconv -f UTF-8 -t ASCII", update=True, fs=fs)
+    assert [r["rel_dst"] for r in r1.filter(F.col("status") == "FAIL").collect()] == ["latin1.txt"]
+    assert [line[: len("FAIL latin1.txt : ")] for line in log_lines()] == ["FAIL latin1.txt : "]
+    r2 = distexec(spark, src, dst, "cat", update=True, fs=fs)
+    assert r2.filter(F.col("status") == "FAIL").count() == 0
+    assert not [line for line in log_lines() if line.startswith("FAIL")]
+
+
+def test_fail_log_one_part_per_task(spark, tmp_path):
+    """Each map task that FAILs a file commits one ``part-<bin>`` holding
+    exactly its FAIL lines; the union is the run's FAIL set."""
+    import re
+
+    from hadoop_distexec_spark.pipe.executor import plan_partitions
+    from hadoop_distexec_spark.sources.manifest import build_manifest
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(24):
+        body = "café\n".encode("latin-1") if i % 5 == 0 else f"ok {i}\n".encode()
+        (src / f"f{i:02d}.txt").write_bytes(body)
+    dst = tmp_path / "out"
+    planned, _, pinned = plan_partitions(build_manifest(spark, str(src), str(dst)), 4)
+    bin_of = {r["rel_dst"]: r["bin"] for r in planned.collect()}
+    pinned.unpersist()
+
+    res = distexec(spark, str(src), str(dst), "iconv -f UTF-8 -t ASCII", n_tasks=4)
+    fails = res.filter(F.col("status") == "FAIL").collect()
+    assert len(fails) == 5
+    parts = _log_parts(dst)
+    assert all(re.fullmatch(r"part-\d{5}", name) for name in parts), parts
+    assert {int(name[5:]) for name in parts} == {bin_of[r["rel_dst"]] for r in fails}
+    lines = [line for part in parts.values() for line in part]
+    assert sorted(lines) == sorted(f"FAIL {r['rel_dst']} : {r['error']}" for r in fails)
+    assert not list(dst.glob("_distexec_tmp/*.log"))

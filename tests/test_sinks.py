@@ -52,3 +52,29 @@ def test_sync_deletes_removes_extras_keeps_outputs(spark, tmp_path):
     assert any(n.startswith("_distexec_") for n in os.listdir(dst))
     # idempotent: second sync deletes nothing
     assert sync_deletes(spark, str(src), dst).count() == 0
+
+
+def test_sync_deletes_returns_a_frozen_frame(spark, tmp_path):
+    """The returned frame is the deleted set as it was found: a stray
+    planted afterwards does not appear in it, and a dry run returns the
+    same set without deleting anything."""
+    from hadoop_distexec_spark import distexec
+    from hadoop_distexec_spark.pipe.sync import sync_deletes
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.txt").write_text("alpha\n")
+    dst = tmp_path / "dst"
+    distexec(spark, str(src), str(dst), "cat")
+    (dst / "stray.txt").write_text("x")
+    (dst / "straydir").mkdir()
+
+    dry = sorted(tuple(r) for r in sync_deletes(spark, str(src), str(dst), dry_run=True).collect())
+    assert dry == [("stray.txt", False), ("straydir", True)]
+    assert (dst / "stray.txt").exists() and (dst / "straydir").is_dir()
+
+    extras = sync_deletes(spark, str(src), str(dst))
+    assert sorted(tuple(r) for r in extras.collect()) == dry
+    assert not (dst / "stray.txt").exists() and not (dst / "straydir").exists()
+    (dst / "late.txt").write_text("y")
+    assert sorted(tuple(r) for r in extras.collect()) == dry
