@@ -4,9 +4,9 @@ The reference's only metrics are four MR counters incremented per record
 (Counter enum, reference ExecFilesMapper.java:27). The Spark-native
 equivalent is ``df.observe``: metrics are computed inside the existing
 job — no second pass over the data — and read back after the action.
-``distexec`` additionally uses accumulators for its per-file counters;
-this helper is the engine's general-purpose counterpart for relational
-pipelines.
+``distexec``'s per-file counters are ``pipe.executor.metrics``, one
+aggregate over its result rows; this helper is the engine's
+general-purpose counterpart for relational pipelines.
 """
 
 from __future__ import annotations

@@ -40,7 +40,8 @@ def running_sums(
 
     Returns ``(out, totals, pinned)``: ``out`` is ``df``'s columns plus the
     ``_before`` columns; ``totals`` holds each column's total and ``rows``;
-    ``pinned`` is the checkpointed frame ``out`` reads."""
+    ``pinned`` is the local checkpoint ``out`` reads, freed when it is
+    garbage-collected (``unpersist`` does not release it)."""
     sc = df.sparkSession.sparkContext
     width = max(1, min(sc.defaultParallelism, -(-df.count() // ROWS_PER_PART)))
     pinned = (

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hadoop_distexec_spark.functions import group_local
+from hadoop_distexec_spark.functions.cache import cached, cached_totals
 from hadoop_distexec_spark.registry import register
 from hadoop_distexec_spark.sources.tables import table
 
@@ -126,14 +127,10 @@ _PAIR_COUNTS_SQL = f"""
 """
 
 
-def _shingle_pair_stats(spark: SparkSession, sf_dir: str):
-    """Spark twin of _PAIR_COUNTS_SQL: persisted shingle set -> capped
-    equi-self-join pair intersection counts plus per-doc sizes aliased
-    for the doc_a/doc_b joins. Returns ``(base, pairs, sa, sb)``; the
-    caller must ``base.unpersist()`` after materializing (checkpointing)
-    its result — the q_dedup_ngram cache lifecycle."""
-    base = _shingles_df(spark, sf_dir).persist()
-    base.count()
+def _shingle_pair_stats(base: DataFrame):
+    """Spark twin of _PAIR_COUNTS_SQL: the cached shingle set ``base`` ->
+    capped equi-self-join pair intersection counts plus per-doc sizes
+    aliased for the doc_a/doc_b joins. Returns ``(pairs, sa, sb)``."""
     s = _drop_hot_shingles(base)
     sizes = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = s.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -146,7 +143,7 @@ def _shingle_pair_stats(spark: SparkSession, sf_dir: str):
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("_na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("_nb"))
-    return base, pairs, sa, sb
+    return pairs, sa, sb
 
 
 # ---------------------------------------------------------------------------
@@ -197,25 +194,19 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> equi-self-join -> per-pair intersection counts -> Jaccard. The
     document-frequency cap bounds the join fan-out on hot shingles (part of
     the operator contract, mirrored in the oracle). The shingle set has 4
-    consumers in one action (keep-filter, sizes, both join sides) -> eager
-    persist, same reasoning as q_dedup_minhash; the pair result is
-    checkpointed so the cache can be released before returning (no leaked
-    executor storage across invocations, ADVICE r01 #3)."""
-    base, pairs, sa, sb = _shingle_pair_stats(spark, sf_dir)
-    jac = F.col("n_common").cast("double") / (F.col("_na") + F.col("_nb") - F.col("n_common"))
-    result = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.1)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
-        # materialize while the shingle cache is hot, then release it —
-        # the pair set is small (it's a near-dup list), the shingle set
-        # is not; without this the cache outlives the call
-        .localCheckpoint(eager=True)
-    )
-    base.unpersist()
-    return result
+    consumers in one action (keep-filter, sizes, both join sides), so it
+    is ``cached`` while the pair result is checkpointed."""
+    with cached(_shingles_df(spark, sf_dir)) as base:
+        pairs, sa, sb = _shingle_pair_stats(base)
+        jac = F.col("n_common").cast("double") / (F.col("_na") + F.col("_nb") - F.col("n_common"))
+        return (
+            pairs.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= 0.1)
+            .select("doc_a", "doc_b", "n_common", "jaccard")
+            .localCheckpoint(eager=True)
+        )
 
 
 PREFIX_BLOCK = 64  # block-key length = minimum detectable prefix length
@@ -379,23 +370,15 @@ def minhash_pairs(spark: SparkSession, sf_dir: str, hash: str = "md5") -> DataFr
     as a '|'-joined string instead of re-hashing them — the hash
     compressed the key but never changed the collision set."""
     # The shingle set feeds signatures AND the exact-verify joins (4
-    # consumers). A lazy persist is not enough: all 4 branches live in ONE
-    # action, and stages racing on a cold cache each recompute the
-    # interpreted higher-order-function explode (~4x the dominant cost).
-    # Materialize eagerly so every branch reads the cache; the verified
-    # pair result is checkpointed below so the cache is released before
-    # returning (ADVICE r01 #3).
-    s = _shingles_df(spark, sf_dir).persist()
-    s.count()
-    result = _minhash_plan(s, hash).localCheckpoint(eager=True)
-    s.unpersist()
-    return result
+    # consumers in one action), so it is cached before the plan runs.
+    with cached(_shingles_df(spark, sf_dir)) as s:
+        return _minhash_plan(s, hash).localCheckpoint(eager=True)
 
 
 def _minhash_plan(s: DataFrame, hash: str = "md5") -> DataFrame:
     """The minhash pair plan over a (doc_id, shingle) frame,
-    un-checkpointed (plan-shape tests inspect this; minhash_pairs wraps it
-    in the cache-release checkpoint)."""
+    un-checkpointed (plan-shape tests inspect this; minhash_pairs
+    checkpoints it inside its ``cached`` scope)."""
     _cand, verified = _minhash_parts(s, hash)
     return verified
 
@@ -571,50 +554,48 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled docs), so the truth arm's cost is CONSTANT in corpus size —
     the estimator's variance depends on sampled-truth count, not corpus
     size."""
-    s = _shingles_df(spark, sf_dir).persist()
-    s.count()
-    # each arm materializes ONCE (eager checkpoint) before the metric
-    # fusion — the four scalar counts otherwise sit in ONE action whose
-    # branches re-run the 64-permutation signature aggregate and both
-    # verify pipelines up to 3x (measured at sf0.1: 20.3s naive -> 14.7s
-    # with these pins; the truth-arm doc sample then took it to 8.1s)
-    cand, _lazy_ver = _minhash_parts(s, "md5")  # re-derive ver from the pin
-    cand = cand.localCheckpoint(eager=True)
-    ver = _pair_jaccard(s, cand).localCheckpoint(eager=True)
+    with cached(_shingles_df(spark, sf_dir)) as s:
+        # each arm materializes ONCE (eager checkpoint) before the metric
+        # fusion — the four scalar counts otherwise sit in ONE action whose
+        # branches re-run the 64-permutation signature aggregate and both
+        # verify pipelines up to 3x (measured at sf0.1: 20.3s naive -> 14.7s
+        # with these pins; the truth-arm doc sample then took it to 8.1s)
+        cand, _lazy_ver = _minhash_parts(s, "md5")  # re-derive ver from the pin
+        cand = cand.localCheckpoint(eager=True)
+        ver = _pair_jaccard(s, cand).localCheckpoint(eager=True)
 
-    # corpus-derived sample modulus: one cheap parquet count (metadata-only
-    # at scan time), mirrored by the oracle's scalar COUNT subquery —
-    # identical integer ceil-division on both sides
-    mod = _truth_sample_mod(table(spark, sf_dir, "documents").count())
+        # corpus-derived sample modulus: one cheap parquet count (metadata-only
+        # at scan time), mirrored by the oracle's scalar COUNT subquery —
+        # identical integer ceil-division on both sides
+        mod = _truth_sample_mod(table(spark, sf_dir, "documents").count())
 
-    def in_sample(col: str):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.encode(F.concat(F.lit("rcl:"), F.col(col).cast("string")), "UTF-8")),
-                    1, 15,
-                ),
-                16, 10,
-            ).cast("long")
-            % mod
-            == 0
+        def in_sample(col: str):
+            return (
+                F.conv(
+                    F.substring(
+                        F.md5(F.encode(F.concat(F.lit("rcl:"), F.col(col).cast("string")), "UTF-8")),
+                        1, 15,
+                    ),
+                    16, 10,
+                ).cast("long")
+                % mod
+                == 0
+            )
+
+        sc_ = _drop_hot_shingles(s).where(in_sample("doc_id"))
+        a = sc_.select(F.col("doc_id").alias("doc_a"), "shingle")
+        b = sc_.select(F.col("doc_id").alias("doc_b"), "shingle")
+        tcand = (
+            a.join(b, "shingle")
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
+            .distinct()
         )
-
-    sc_ = _drop_hot_shingles(s).where(in_sample("doc_id"))
-    a = sc_.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sc_.select(F.col("doc_id").alias("doc_b"), "shingle")
-    tcand = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    truth = (
-        _pair_jaccard(s, tcand)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    s.unpersist()
+        truth = (
+            _pair_jaccard(s, tcand)
+            .select("doc_a", "doc_b")
+            .localCheckpoint(eager=True)
+        )
     ver_s = ver.where(in_sample("doc_a") & in_sample("doc_b"))
     hits = truth.join(ver.select("doc_a", "doc_b"), ["doc_a", "doc_b"])
     # 1-row scalar aggregates fused with broadcast crossJoins (each side
@@ -1739,34 +1720,30 @@ def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark suite — MBs, not TBs — so its distinct-shingle set is
     broadcast and the 100 TB training side never shuffles for the join
     (plan: Exchange only for the two doc_id aggregates, which share
-    partitioning). The shingle set feeds both sides in one action ->
-    eager persist, released after a localCheckpoint of the (small)
-    flagged-doc result, same lifecycle as q_dedup_ngram."""
-    base = _shingles_df(spark, sf_dir).persist()
-    base.count()
-    is_eval = F.col("doc_id") % DECONTAM_MOD == 0
-    ev = base.filter(is_eval).select("shingle").distinct()
-    tr = base.filter(~is_eval)
-    tot = tr.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    hits = (
-        tr.join(F.broadcast(ev), "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_contaminated"))
-    )
-    result = (
-        hits.join(tot, "doc_id")
-        .select(
-            "doc_id",
-            "n_contaminated",
-            "n_shingles",
-            (F.col("n_contaminated").cast("double") / F.col("n_shingles")).alias(
-                "contamination"
-            ),
+    partitioning). The shingle set feeds both sides in one action, so
+    it is ``cached`` while the flagged-doc result is checkpointed."""
+    with cached(_shingles_df(spark, sf_dir)) as base:
+        is_eval = F.col("doc_id") % DECONTAM_MOD == 0
+        ev = base.filter(is_eval).select("shingle").distinct()
+        tr = base.filter(~is_eval)
+        tot = tr.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+        hits = (
+            tr.join(F.broadcast(ev), "shingle")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_contaminated"))
         )
-        .localCheckpoint(eager=True)
-    )
-    base.unpersist()
-    return result
+        return (
+            hits.join(tot, "doc_id")
+            .select(
+                "doc_id",
+                "n_contaminated",
+                "n_shingles",
+                (F.col("n_contaminated").cast("double") / F.col("n_shingles")).alias(
+                    "contamination"
+                ),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 @register(
@@ -1913,36 +1890,32 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     toks = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
     # (doc_id, tok, c) feeds three branches (tf/rank path, document
-    # frequency, corpus doc count): eager persist so the scan + explode +
-    # first aggregate run once, not three times (lazy persist recomputes
-    # under one action); released after the small top-N result is
-    # checkpointed — the q_dedup_ngram lifecycle.
-    cnt = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c")).persist()
-    cnt.count()
-    dfreq = cnt.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    nd = cnt.agg(F.countDistinct("doc_id").alias("n_docs"))
-    tf = F.col("c").cast("double") / F.sum("c").over(W.partitionBy("doc_id"))
-    idf = F.log(F.col("n_docs").cast("double") / F.col("df"))
-    scored = (
-        cnt.withColumn("tf", tf)
-        # vocabulary-sized side: no static broadcast hint (Heap's-law
-        # growth is sublinear but unbounded at 100 TB) — AQE broadcasts
-        # at runtime when it fits (VERDICT r05 #1 sweep)
-        .join(dfreq, "tok")
-        .crossJoin(F.broadcast(nd))
-        .select("doc_id", "tok", (F.col("tf") * idf).alias("tfidf"))
-    )
-    rnk = F.row_number().over(
-        W.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "tok")
-    )
-    result = (
-        scored.withColumn("rnk", rnk)
-        .filter(F.col("rnk") <= TFIDF_TOPN)
-        .select("doc_id", "tok", "rnk", "tfidf")
-        .localCheckpoint(eager=True)
-    )
-    cnt.unpersist()
-    return result
+    # frequency, corpus doc count), so the scan + explode + first
+    # aggregate run once
+    counts = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
+    with cached(counts) as cnt:
+        dfreq = cnt.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+        nd = cnt.agg(F.countDistinct("doc_id").alias("n_docs"))
+        tf = F.col("c").cast("double") / F.sum("c").over(W.partitionBy("doc_id"))
+        idf = F.log(F.col("n_docs").cast("double") / F.col("df"))
+        scored = (
+            cnt.withColumn("tf", tf)
+            # vocabulary-sized side: no static broadcast hint (Heap's-law
+            # growth is sublinear but unbounded at 100 TB) — AQE broadcasts
+            # at runtime when it fits (VERDICT r05 #1 sweep)
+            .join(dfreq, "tok")
+            .crossJoin(F.broadcast(nd))
+            .select("doc_id", "tok", (F.col("tf") * idf).alias("tfidf"))
+        )
+        rnk = F.row_number().over(
+            W.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "tok")
+        )
+        return (
+            scored.withColumn("rnk", rnk)
+            .filter(F.col("rnk") <= TFIDF_TOPN)
+            .select("doc_id", "tok", "rnk", "tfidf")
+            .localCheckpoint(eager=True)
+        )
 
 
 @register(
@@ -2055,44 +2028,41 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the shingle equi-join; no full-history shuffle. Source labels
     ride the doc_id-partitioned shingle build (one extra co-partitioned
     join)."""
-    base = _shingles_df(spark, sf_dir).persist()
-    base.count()
-    s = _drop_hot_shingles(base)
-    src = table(spark, sf_dir, "documents").select("doc_id", "source")
-    s = s.join(src, "doc_id")
-    is_new = F.col("source") == INCR_NEW_SOURCE
-    sizes = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    new_s = s.filter(is_new).select(F.col("doc_id").alias("new_id"), "shingle")
-    hist_s = s.filter(~is_new).select(F.col("doc_id").alias("hist_id"), "shingle")
-    pairs = (
-        new_s.join(hist_s, "shingle")
-        .groupBy("new_id", "hist_id")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sn = sizes.select(F.col("doc_id").alias("new_id"), F.col("n_sh").alias("_na"))
-    sh2 = sizes.select(F.col("doc_id").alias("hist_id"), F.col("n_sh").alias("_nb"))
-    jac = F.col("n_shared").cast("double") / (
-        F.col("_na") + F.col("_nb") - F.col("n_shared")
-    )
-    rnk = F.row_number().over(
-        W.partitionBy("new_id").orderBy(F.col("jaccard").desc(), "hist_id")
-    )
-    result = (
-        pairs.join(sn, "new_id")
-        .join(sh2, "hist_id")
-        .withColumn("jaccard", jac)
-        .withColumn("rnk", rnk)
-        .filter(F.col("rnk") == 1)
-        .select(
-            F.col("new_id").alias("doc_id"),
-            F.col("hist_id").alias("match_doc_id"),
-            "n_shared",
-            "jaccard",
+    with cached(_shingles_df(spark, sf_dir)) as base:
+        s = _drop_hot_shingles(base)
+        src = table(spark, sf_dir, "documents").select("doc_id", "source")
+        s = s.join(src, "doc_id")
+        is_new = F.col("source") == INCR_NEW_SOURCE
+        sizes = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+        new_s = s.filter(is_new).select(F.col("doc_id").alias("new_id"), "shingle")
+        hist_s = s.filter(~is_new).select(F.col("doc_id").alias("hist_id"), "shingle")
+        pairs = (
+            new_s.join(hist_s, "shingle")
+            .groupBy("new_id", "hist_id")
+            .agg(F.count(F.lit(1)).alias("n_shared"))
         )
-        .localCheckpoint(eager=True)
-    )
-    base.unpersist()
-    return result
+        sn = sizes.select(F.col("doc_id").alias("new_id"), F.col("n_sh").alias("_na"))
+        sh2 = sizes.select(F.col("doc_id").alias("hist_id"), F.col("n_sh").alias("_nb"))
+        jac = F.col("n_shared").cast("double") / (
+            F.col("_na") + F.col("_nb") - F.col("n_shared")
+        )
+        rnk = F.row_number().over(
+            W.partitionBy("new_id").orderBy(F.col("jaccard").desc(), "hist_id")
+        )
+        return (
+            pairs.join(sn, "new_id")
+            .join(sh2, "hist_id")
+            .withColumn("jaccard", jac)
+            .withColumn("rnk", rnk)
+            .filter(F.col("rnk") == 1)
+            .select(
+                F.col("new_id").alias("doc_id"),
+                F.col("hist_id").alias("match_doc_id"),
+                "n_shared",
+                "jaccard",
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 RAG_TOPN = 3  # retrieved docs per query
@@ -2213,40 +2183,37 @@ def q_cooc_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(1, PMI_WINDOW + 1):
         p = raw.filter(F.col(f"b{i}").isNotNull()).select("a", F.col(f"b{i}").alias("b"))
         pairs = p if pairs is None else pairs.unionByName(p)
-    # toks feeds pair mining AND unigram counts AND the token total:
-    # persist once, release after the (tiny, top-N) result is
-    # checkpointed; the count doubles as the eager materializer
-    toks = toks.persist()
-    n_toks = toks.count()
-    # The window-lead pair derivation is the expensive stage — run it
-    # exactly once: persist the (vocab²-bounded, far smaller) pair-count
-    # table and read both the PMI numerator and the pair total from it.
-    pc = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_ab")).persist()
-    n_pairs = pc.agg(F.sum("n_ab")).collect()[0][0]
-    uc = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n_tok"))
-    pmi = F.log(
-        (F.col("n_ab").cast("double") / F.lit(n_pairs))
-        / (
-            (F.col("_na").cast("double") / F.lit(n_toks))
-            * (F.col("_nb").cast("double") / F.lit(n_toks))
+    # toks feeds pair mining AND unigram counts AND the token total. The
+    # window-lead pair derivation is the expensive stage — run it exactly
+    # once: cache the (vocab²-bounded, far smaller) pair-count table and
+    # read both the PMI numerator and the pair total from it. Each total
+    # comes from its cache's fill.
+    pc = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_ab"))
+    with (
+        cached_totals(toks) as (toks, (n_toks,)),
+        cached_totals(pc, F.sum("n_ab")) as (pc, (_, n_pairs)),
+    ):
+        uc = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n_tok"))
+        pmi = F.log(
+            (F.col("n_ab").cast("double") / F.lit(n_pairs))
+            / (
+                (F.col("_na").cast("double") / F.lit(n_toks))
+                * (F.col("_nb").cast("double") / F.lit(n_toks))
+            )
         )
-    )
-    ua = uc.select(F.col("tok").alias("a"), F.col("n_tok").alias("_na"))
-    ub = uc.select(F.col("tok").alias("b"), F.col("n_tok").alias("_nb"))
-    result = (
-        pc.filter(F.col("n_ab") >= PMI_MIN_COUNT)
-        # unigram tables are vocabulary-sized: hint-free, AQE-sized
-        # (VERDICT r05 #1 sweep)
-        .join(ua, "a")
-        .join(ub, "b")
-        .select("a", "b", "n_ab", pmi.alias("pmi"))
-        .orderBy(F.col("pmi").desc(), "a", "b")
-        .limit(PMI_TOPN)
-        .localCheckpoint(eager=True)
-    )
-    pc.unpersist()
-    toks.unpersist()
-    return result
+        ua = uc.select(F.col("tok").alias("a"), F.col("n_tok").alias("_na"))
+        ub = uc.select(F.col("tok").alias("b"), F.col("n_tok").alias("_nb"))
+        return (
+            pc.filter(F.col("n_ab") >= PMI_MIN_COUNT)
+            # unigram tables are vocabulary-sized: hint-free, AQE-sized
+            # (VERDICT r05 #1 sweep)
+            .join(ua, "a")
+            .join(ub, "b")
+            .select("a", "b", "n_ab", pmi.alias("pmi"))
+            .orderBy(F.col("pmi").desc(), "a", "b")
+            .limit(PMI_TOPN)
+            .localCheckpoint(eager=True)
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -2322,20 +2289,18 @@ def q_dedup_contain(spark: SparkSession, sf_dir: str) -> DataFrame:
     document. Same distributed shape as q_dedup_ngram: shingle explode ->
     stop-shingle df cap -> equi-self-join -> per-pair intersection counts;
     only the final per-row ratio differs (min-size denominator instead of
-    the union). One extra consumer of the same persisted shingle set, same
-    cache lifecycle (checkpoint the small pair list, release the cache)."""
-    base, pairs, sa, sb = _shingle_pair_stats(spark, sf_dir)
-    cont = F.col("n_common").cast("double") / F.least("_na", "_nb")
-    result = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("containment", cont)
-        .filter(F.col("containment") >= CONTAIN_THRESHOLD)
-        .select("doc_a", "doc_b", "n_common", "containment")
-        .localCheckpoint(eager=True)
-    )
-    base.unpersist()
-    return result
+    the union)."""
+    with cached(_shingles_df(spark, sf_dir)) as base:
+        pairs, sa, sb = _shingle_pair_stats(base)
+        cont = F.col("n_common").cast("double") / F.least("_na", "_nb")
+        return (
+            pairs.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn("containment", cont)
+            .filter(F.col("containment") >= CONTAIN_THRESHOLD)
+            .select("doc_a", "doc_b", "n_common", "containment")
+            .localCheckpoint(eager=True)
+        )
 
 
 BM25_K1 = 1.2
@@ -2572,8 +2537,7 @@ def kmeans(
     assignment-heavy-round scale tier; see BENCH tiers) — the update step
     is one (cluster, dim) hash-aggregate shuffle whose output is k rows
     either way. Per-round localCheckpoint on the k-row centroid table keeps
-    the lineage O(1) deep; the input is persisted once and unpersisted by
-    the caller wrapper.
+    the lineage O(1) deep; the caller caches the input.
     """
     assign_fn = _ASSIGN_TIERS[scorer]
     w = W.partitionBy("label").orderBy("vec_id")
@@ -2692,19 +2656,12 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin tiebreaks. The Lloyd invariants (total assignment, cluster-id
     range, monotone inertia) remain asserted in tests/test_round2_ops.py."""
     # spread first: the fixture is one parquet file (one input partition);
-    # every Lloyd assignment pass would otherwise run as a single task
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist()
-    )
-    e.count()  # materialize once; iterations re-read the cache, not parquet
-    try:
+    # every Lloyd assignment pass would otherwise run as a single task.
+    # Iterations re-read the cache, not parquet.
+    e = table(spark, sf_dir, "embeddings").repartition(spark.sparkContext.defaultParallelism)
+    with cached(e) as e:
         assign, _ = kmeans(e)
-        assign = assign.localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
-    return assign
+        return assign.localCheckpoint(eager=True)
 
 
 @register("q_kmeans_vec", oracle=_kmeans_final_sql("SELECT vec_id, cluster FROM fin"))
@@ -2716,20 +2673,11 @@ def q_kmeans_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq_dist column is projected out because numpy's pairwise summation is
     ulp-different from the sequential fold (tier equivalence within 1e-9
     is asserted in tests/test_round3_ops.py instead)."""
-    # spread first: the fixture is one parquet file (one input partition);
-    # every Lloyd assignment pass would otherwise run as a single task
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist()
-    )
-    e.count()
-    try:
+    # spread first, as in q_kmeans
+    e = table(spark, sf_dir, "embeddings").repartition(spark.sparkContext.defaultParallelism)
+    with cached(e) as e:
         assign, _ = kmeans(e, scorer="pandas")
-        assign = assign.select("vec_id", "cluster").localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
-    return assign
+        return assign.select("vec_id", "cluster").localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2955,17 +2903,15 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast it), and the per-doc aggregate. The count tables are
     Zipf-skewed; the hot bigrams are exactly the high-count ones, so the
     join skew mirrors q_join_salted's remedy if AQE's skew split is off."""
-    bi = _bigrams_df(spark, sf_dir).persist()
-    bi.count()  # 4 consumers below (c12, c1, V, score join) — eager cache
-    result = _lm_score_plan(bi).localCheckpoint(eager=True)  # release cache after
-    bi.unpersist()
-    return result
+    # 4 consumers below (c12, c1, V, score join)
+    with cached(_bigrams_df(spark, sf_dir)) as bi:
+        return _lm_score_plan(bi).localCheckpoint(eager=True)
 
 
 def _lm_score_plan(bi: DataFrame) -> DataFrame:
     """The q_lm_score plan over a (doc_id, bigram) frame, un-checkpointed
-    (plan-shape tests inspect this; the registered query wraps it in the
-    cache-release checkpoint)."""
+    (plan-shape tests inspect this; the registered query checkpoints it
+    inside its ``cached`` scope)."""
     w1_of = lambda c: F.split_part(c, F.lit(" "), F.lit(1))  # noqa: E731
     c12 = bi.groupBy("bigram").agg(F.count(F.lit(1)).alias("c12"))
     c1 = bi.groupBy(w1_of(F.col("bigram")).alias("w1")).agg(
@@ -4502,32 +4448,25 @@ def q_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-or-shuffle join of the per-doc norms. No all-pairs join
     anywhere; candidate volume is sum_tok(df^2), the inverted-index
     bound."""
-    result, w, cnt = _tfidf_pairs_build(spark, sf_dir, materialize=True)
-    try:
-        return result.localCheckpoint(eager=True)
-    finally:
-        # released on every exit — an executor loss mid-checkpoint must
-        # not leave corpus-scale frames pinned for the session
-        w.unpersist()
-        cnt.unpersist()
+    with cached(_tfidf_counts(spark, sf_dir)) as cnt, cached(_tfidf_weights(cnt)) as w:
+        return _tfidf_cosine(w).localCheckpoint(eager=True)
 
 
-def _tfidf_pairs_build(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-):
-    """Build q_tfidf_pairs' LAZY result plan plus its two pinned
-    intermediates. ``materialize=False`` skips the persists so the
-    plan-shape gate can inspect the full analyzed plan — the public
-    query's eager localCheckpoint truncates lineage to a LogicalRDD,
-    which would make any hint assertion on the returned frame vacuous
-    (it can never contain a ResolvedHint)."""
+# q_tfidf_pairs' three lazy steps. The query caches the output of the
+# first two; the plan-shape gate composes them uncached, because the
+# query's eager localCheckpoint truncates lineage to a LogicalRDD, which
+# can never contain a ResolvedHint.
+def _tfidf_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, tok, c): per-document token counts."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     toks = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
-    cnt = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
-    if materialize:
-        cnt = cnt.persist()
-        cnt.count()
+    return toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
+
+
+def _tfidf_weights(cnt: DataFrame) -> DataFrame:
+    """(doc_id, tok, wt): decimal tf·idf weights over the df-capped
+    vocabulary."""
     length = cnt.groupBy("doc_id").agg(F.sum("c").alias("n_toks"))
     dfreq = (
         cnt.groupBy("tok")
@@ -4547,15 +4486,17 @@ def _tfidf_pairs_build(
     # hot-shingle-list lesson). The sole remaining hint is the provably
     # 1-row n_docs scalar. Plan-gated by
     # tests/test_round6_ops.py::test_tfidf_pairs_no_static_broadcast_on_corpus_sized_sides.
-    w = (
+    return (
         cnt.join(dfreq, "tok")
         .join(length, "doc_id")
         .crossJoin(F.broadcast(nd))
         .select("doc_id", "tok", wt.alias("wt"))
     )
-    if materialize:
-        w = w.persist()
-        w.count()
+
+
+def _tfidf_cosine(w: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, cosine) over the inverted-index self-join of ``w``,
+    at or above SPARSE_COS_THRESHOLD."""
     norms = w.groupBy("doc_id").agg(
         F.sum(F.col("wt") * F.col("wt")).cast("double").alias("norm2")
     )
@@ -4570,13 +4511,12 @@ def _tfidf_pairs_build(
     na = norms.select(F.col("doc_id").alias("doc_a"), F.col("norm2").alias("n2a"))
     nb = norms.select(F.col("doc_id").alias("doc_b"), F.col("norm2").alias("n2b"))
     cos = F.col("dot") / F.sqrt(F.col("n2a") * F.col("n2b"))
-    result = (
+    return (
         dots.join(na, "doc_a")
         .join(nb, "doc_b")
         .select("doc_a", "doc_b", cos.alias("cosine"))
         .where(F.col("cosine") >= SPARSE_COS_THRESHOLD)
     )
-    return result, w, cnt
 
 
 # ---------------------------------------------------------------------------
@@ -4839,7 +4779,7 @@ def source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (numeric rule 2); pairs keyed source_a < source_b.
 
     Shape at 100 TB: the (source, shingle) distinct is one shuffle whose
-    combine collapses per-doc repeats map-side — computed ONCE (persisted,
+    combine collapses per-doc repeats map-side — computed ONCE (cached,
     the q_dedup_recall_eval shared-scan rule: the sizes leg and both
     sides of the pair join otherwise re-run the corpus scan, tripling
     the dominant cost); the pair join fans out each shingle row at most
@@ -4847,18 +4787,14 @@ def source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale), so candidate volume is O(distinct shingles x sources),
     never doc-pair-shaped. No broadcast hints: the per-source size table
     is source-cardinality and AQE broadcasts it at runtime."""
-    ss = _source_overlap_ss(spark, sf_dir).persist()
-    ss.count()
-    try:
+    with cached(_source_overlap_ss(spark, sf_dir)) as ss:
         return _source_overlap_frame(ss).localCheckpoint(eager=True)
-    finally:
-        ss.unpersist()  # released on every exit, incl. a failed checkpoint
 
 
 def _source_overlap_ss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAZY (source, shingle) distinct frame — the shared scan. Split out
     so the plan-shape gate can drive the exact production frames without
-    re-deriving them (the public fn persists this and checkpoints the
+    re-deriving them (the public fn caches this and checkpoints the
     result, truncating its plan to a LogicalRDD)."""
     sh = _shingles_df(spark, sf_dir)
     src = table(spark, sf_dir, "documents").select("doc_id", "source")
@@ -5062,19 +4998,15 @@ def hapax_docs(spark: SparkSession, sf_dir: str, topn: int = HAPAX_TOPN) -> Data
     (ratio desc, doc_id) with a bounded limit.
 
     Shape at 100 TB: the (doc, token) agg is the full-volume shuffle
-    (map-side combinable), computed ONCE — persisted, because the global
+    (map-side combinable), computed ONCE — cached, because the global
     token counts, the hapax join leg and the per-doc totals all reuse it
     and would otherwise each re-run the corpus explode (the
     q_dedup_recall_eval shared-scan rule); a corpus hapax lives in
     exactly one document, so the hapax join's output is bounded by the
     hapax count and never fans out; the topn is TakeOrdered (partial
     per-partition top-k, no global sort)."""
-    tokc = _hapax_tokc(spark, sf_dir).persist()
-    tokc.count()
-    try:
+    with cached(_hapax_tokc(spark, sf_dir)) as tokc:
         return _hapax_docs_frame(tokc, topn).localCheckpoint(eager=True)
-    finally:
-        tokc.unpersist()  # released on every exit, incl. a failed checkpoint
 
 
 def _hapax_tokc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5763,17 +5695,13 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: exact bigint counts; novelty is one IEEE division;
     first-claim is MIN over a unique key.
 
-    Shape at 100 TB: ONE persisted shingle scan (the shared-scan rule)
+    Shape at 100 TB: ONE cached shingle scan (the shared-scan rule)
     feeds both legs — the (source, shingle) distinct and the per-shingle
     MIN(doc_id) agg (both map-side combinable); the first-claim join is
     shingle-count-sized against the pruned (doc_id, source) projection,
     hint-free so AQE sizes it. Output is source-catalog bounded."""
-    sh = _shingles_df(spark, sf_dir).persist()
-    sh.count()
-    try:
+    with cached(_shingles_df(spark, sf_dir)) as sh:
         return _ngram_novelty_frame(spark, sf_dir, sh).localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()  # released on every exit, incl. a failed checkpoint
 
 
 def _ngram_novelty_frame(
@@ -7008,17 +6936,17 @@ def dedup_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at 100 TB: pair volume is df-cap-bounded; the fan-out is x9 on
     pairs and x18 on endpoints, both tiny next to the shingle join that
     produced them."""
-    base, pairs, sa, sb = _shingle_pair_stats(spark, sf_dir)
-    jac = F.col("n_common").cast("double") / (
-        F.col("_na") + F.col("_nb") - F.col("n_common")
-    )
-    jp = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .localCheckpoint(eager=True)
-    )
-    base.unpersist()
+    with cached(_shingles_df(spark, sf_dir)) as base:
+        pairs, sa, sb = _shingle_pair_stats(base)
+        jac = F.col("n_common").cast("double") / (
+            F.col("_na") + F.col("_nb") - F.col("n_common")
+        )
+        jp = (
+            pairs.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .select("doc_a", "doc_b", jac.alias("jaccard"))
+            .localCheckpoint(eager=True)
+        )
     n_docs = table(spark, sf_dir, "documents").count()
     t = F.explode(F.sequence(F.lit(DEDUP_CURVE_MIN_T), F.lit(9))).alias("t10")
     fan = jp.select("doc_a", "doc_b", "jaccard", t).filter(
@@ -7140,39 +7068,37 @@ def lsh_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             == 0
         )
 
-    ss = s.where(in_sample("doc_id")).persist()
-    ss.count()
-    ids = ss.select("doc_id").distinct().withColumn("_k", F.lit(1))
-    pairs = (
-        ids.select(F.col("doc_id").alias("doc_a"), "_k")
-        .join(ids.select(F.col("doc_id").alias("doc_b"), "_k"), "_k")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .drop("_k")
-    )
-    sizes = ss.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        ss.select(F.col("doc_id").alias("doc_a"), "shingle")
-        .join(ss.select(F.col("doc_id").alias("doc_b"), "shingle"), "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    cand, _ = _minhash_parts(ss, "md5")
-    jac = F.coalesce(F.col("n_common"), F.lit(0)).cast("double") / (
-        F.col("_na") + F.col("_nb") - F.coalesce(F.col("n_common"), F.lit(0))
-    )
-    full = (
-        pairs.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("_na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("_nb")), "doc_b")
-        .join(inter, ["doc_a", "doc_b"], "left")
-        .join(cand.withColumn("_is_cand", F.lit(1)), ["doc_a", "doc_b"], "left")
-        .select(
-            F.least(F.floor(jac * 10).cast("int"), F.lit(9)).alias("decile"),
-            F.coalesce(F.col("_is_cand"), F.lit(0)).alias("is_cand"),
+    with cached(s.where(in_sample("doc_id"))) as ss:
+        ids = ss.select("doc_id").distinct().withColumn("_k", F.lit(1))
+        pairs = (
+            ids.select(F.col("doc_id").alias("doc_a"), "_k")
+            .join(ids.select(F.col("doc_id").alias("doc_b"), "_k"), "_k")
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .drop("_k")
         )
-        .localCheckpoint(eager=True)
-    )
-    ss.unpersist()
+        sizes = ss.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+        inter = (
+            ss.select(F.col("doc_id").alias("doc_a"), "shingle")
+            .join(ss.select(F.col("doc_id").alias("doc_b"), "shingle"), "shingle")
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+        )
+        cand, _ = _minhash_parts(ss, "md5")
+        jac = F.coalesce(F.col("n_common"), F.lit(0)).cast("double") / (
+            F.col("_na") + F.col("_nb") - F.coalesce(F.col("n_common"), F.lit(0))
+        )
+        full = (
+            pairs.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("_na")), "doc_a")
+            .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("_nb")), "doc_b")
+            .join(inter, ["doc_a", "doc_b"], "left")
+            .join(cand.withColumn("_is_cand", F.lit(1)), ["doc_a", "doc_b"], "left")
+            .select(
+                F.least(F.floor(jac * 10).cast("int"), F.lit(9)).alias("decile"),
+                F.coalesce(F.col("_is_cand"), F.lit(0)).alias("is_cand"),
+            )
+            .localCheckpoint(eager=True)
+        )
     theory = F.element_at(
         F.array(*[F.lit(_LSH_CURVE_THEORY[d]) for d in range(10)]),
         F.col("decile") + 1,
@@ -7289,9 +7215,7 @@ def _pos_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pos.select("doc_id", "p", sh.alias("shingle"))
 
 
-def substring_runs(
-    spark: SparkSession, sf_dir: str, _plan_only: bool = False
-) -> DataFrame:
+def substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring duplication detector (the SQL-expressible core of
     Lee et al.'s suffix-array dedup, arXiv:2107.06499): for every doc
     pair sharing positional shingles, the LONGEST run of consecutive
@@ -7309,8 +7233,12 @@ def substring_runs(
     rule); the islands windows partition by (pair, diagonal) — millions
     of small partitions, no global sort; output is near-dup-pair sized.
     Everything is integer arithmetic, so the DuckDB twin is bit-exact."""
-    base = _pos_shingles(spark, sf_dir).persist()
-    base.count()
+    with cached(_pos_shingles(spark, sf_dir)) as base:
+        return _substring_runs_frame(base).localCheckpoint(eager=True)
+
+
+def _substring_runs_frame(base: DataFrame) -> DataFrame:
+    """substring_runs' lazy plan over the positional shingle frame."""
     hot = (
         base.groupBy("shingle")
         .count()
@@ -7330,7 +7258,7 @@ def substring_runs(
     runs = isl.groupBy("doc_a", "doc_b", "diag", "isl").agg(
         F.count(F.lit(1)).alias("run_len")
     )
-    plan = (
+    return (
         runs.filter(F.col("run_len") >= MIN_SUBSTR_RUN)
         .groupBy("doc_a", "doc_b")
         .agg(
@@ -7347,11 +7275,6 @@ def substring_runs(
             "total_run_shingles",
         )
     )
-    if _plan_only:
-        return plan  # un-checkpointed, for plan inspection (gen_plans)
-    out = plan.localCheckpoint(eager=True)
-    base.unpersist()
-    return out
 
 
 def substring_runs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7359,7 +7282,7 @@ def substring_runs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence for the no-BNLJ / no-global-sort claims (the public
     operator checkpoints its result, which hides the plan behind an
     ExistingRDD scan)."""
-    return substring_runs(spark, sf_dir, _plan_only=True)
+    return _substring_runs_frame(_pos_shingles(spark, sf_dir))
 
 
 _POS_SHINGLES_SQL = f"""

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hadoop_distexec_spark.functions import group_local
+from hadoop_distexec_spark.functions.cache import cached
 from hadoop_distexec_spark.functions.numeric import SQL_REVENUE, dsum, revenue_expr
 from hadoop_distexec_spark.registry import register
 from hadoop_distexec_spark.sources.tables import table
@@ -2304,42 +2305,36 @@ def _robust_stats_window_tier(li: DataFrame, _close) -> DataFrame:
     med = _spark_pcts(
         li, [50], [F.percentile_approx("v", 0.5, 10000).alias("amed")]
     ).select("g", F.col("n").alias("n_med"), F.col("p50").alias("med"), "amed")
-    devs = (
-        li.join(F.broadcast(med), li.g == med.g)
-        .select(
-            li.g.alias("g"),
-            F.abs(li.v - F.col("med")).alias("v"),
-            F.abs(li.v - F.col("amed")).alias("av"),
+    devs = li.join(F.broadcast(med), li.g == med.g).select(
+        li.g.alias("g"),
+        F.abs(li.v - F.col("med")).alias("v"),
+        F.abs(li.v - F.col("amed")).alias("av"),
+    )
+    with cached(devs) as devs:
+        mad = _spark_pcts(
+            devs, [50], [F.percentile_approx("av", 0.5, 10000).alias("amad")]
+        ).select("g", F.col("p50").alias("mad"), "amad")
+        thresh = F.lit(_MAD_Z) * (F.lit(_MAD_K) * F.col("mad"))
+        outl = (
+            devs.join(F.broadcast(mad), "g")
+            .where(F.col("v") > thresh)
+            .groupBy("g")
+            .agg(F.count(F.lit(1)).alias("n_outliers"))
         )
-        .persist()
-    )
-    devs.count()
-    mad = _spark_pcts(
-        devs, [50], [F.percentile_approx("av", 0.5, 10000).alias("amad")]
-    ).select("g", F.col("p50").alias("mad"), "amad")
-    thresh = F.lit(_MAD_Z) * (F.lit(_MAD_K) * F.col("mad"))
-    outl = (
-        devs.join(F.broadcast(mad), "g")
-        .where(F.col("v") > thresh)
-        .groupBy("g")
-        .agg(F.count(F.lit(1)).alias("n_outliers"))
-    )
-    result = (
-        med.join(mad, "g")
-        .join(outl, "g", "left")
-        .select(
-            F.col("g").alias("l_returnflag"),
-            F.col("n_med").alias("n"),
-            F.col("med").alias("median"),
-            "mad",
-            F.coalesce("n_outliers", F.lit(0)).alias("n_outliers"),
-            _close(F.col("amed"), F.col("med")).alias("median_ok"),
-            _close(F.col("amad"), F.col("mad")).alias("mad_ok"),
+        return (
+            med.join(mad, "g")
+            .join(outl, "g", "left")
+            .select(
+                F.col("g").alias("l_returnflag"),
+                F.col("n_med").alias("n"),
+                F.col("med").alias("median"),
+                "mad",
+                F.coalesce("n_outliers", F.lit(0)).alias("n_outliers"),
+                _close(F.col("amed"), F.col("med")).alias("median_ok"),
+                _close(F.col("amad"), F.col("mad")).alias("mad_ok"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    devs.unpersist()
-    return result
 
 
 @register(

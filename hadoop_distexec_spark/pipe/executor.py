@@ -355,9 +355,9 @@ def plan_partitions(
     so no single-partition window runs and the driver sees O(#partitions)
     numbers.
 
-    Returns (planned, n_tasks, pinned) — ``pinned`` is the checkpointed
-    intermediate the caller may release once the planned rows have been
-    consumed."""
+    Returns (planned, n_tasks, pinned) — ``pinned`` is the local
+    checkpoint ``planned`` reads; its blocks are freed when it is
+    garbage-collected (``unpersist`` does not release them)."""
     is_file = (~F.col("is_dir")).cast("long")
     ranked, totals, pinned = prefix_sum.running_sums(
         manifest.withColumn("_files", is_file), "src_path", ["size", "_files"]
@@ -483,7 +483,6 @@ def distexec(
     # (DistCp -update semantics).
     manifest = build_manifest(spark, srcs, dst, contents_into_dst=update, fs=fs)
     manifest = limit_manifest(manifest, filelimit, sizelimit)
-    plan_cache = None
     tmp_dir = None
     try:
 
@@ -517,7 +516,7 @@ def distexec(
         log_dir = dst_fs.join(dst, "_distexec_logs")
         dst_fs.rmtree(log_dir)  # this run's tasks write the whole log
 
-        planned, n_tasks, plan_cache = plan_partitions(manifest, n_tasks)
+        planned, n_tasks, _ = plan_partitions(manifest, n_tasks)
         to_run = planned.select("bin", "src_path", "rel_dst", "is_dir", "mtime_epoch")
         if prev_state is not None:
             # prior content hashes ride along with the plan rows (one equi-join
@@ -625,12 +624,7 @@ def distexec(
         else:
             results = results.localCheckpoint(eager=True)
     finally:
-        # released on EVERY exit, including the DuplicationError
-        # pre-flight raise and a failed results write — DataFrame caches
-        # are not GC-collected
-        if plan_cache is not None:
-            plan_cache.unpersist()
-        # tmp goes on every exit too (reference DistExec.java:333-338); on
+        # tmp goes on every exit (reference DistExec.java:333-338); on
         # success this runs after the durability write, so no result row
         # can still need a tmp file
         if tmp_dir is not None:

@@ -149,9 +149,13 @@ def build_manifest(
     manifest plans as a ``LocalTableScan`` and no action on it starts a
     Python task. Past the cap, the rest of the round and every later round
     fan out on executors in at most ``defaultParallelism`` tasks, as a
-    ``mapInArrow`` over the round's paths. Each round is persisted, so a
-    later action on the manifest reads it without a Python task; it stays
-    cached until the session's cache is cleared. Only directory names come
+    ``mapInArrow`` over the round's paths. Each round is pinned by a lazy
+    ``localCheckpoint``: the collect of its directory names fills it, a
+    later action on the manifest reads it without a Python task, and its
+    blocks are freed when the manifest is garbage-collected, so nothing
+    enters the session cache. The price is recovery: a lost checkpoint
+    block fails the manifest's later readers, where a persisted round
+    would have been listed again (SCALE.md). Only directory names come
     back to the driver.
     """
     if isinstance(srcs, str):
@@ -199,7 +203,9 @@ def build_manifest(
                                 [(*e, _root) for p in paths for e in _list_dir(p, _fs)]
                             )
 
-                    listing = frontier_df.mapInArrow(list_dirs, _WALK_SCHEMA).persist()
+                    listing = frontier_df.mapInArrow(list_dirs, _WALK_SCHEMA).localCheckpoint(
+                        eager=False
+                    )
                     rounds.append(listing)
                     # only directory *names* come back to the driver
                     # (path + link flag)
@@ -249,11 +255,3 @@ def _rel_expr():
         )
     )
 
-
-def read_uri_list(spark: SparkSession, uri_file: str) -> DataFrame:
-    """Newline-delimited path list source — the reference inherited
-    ``fetchFileList`` from DistCp's -f flag (DistExec.java:188-204; dead
-    code there, useful here)."""
-    return spark.read.text(uri_file).select(F.trim("value").alias("src_path")).filter(
-        F.length("src_path") > 0
-    )

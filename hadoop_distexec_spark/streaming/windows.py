@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_distexec_spark.functions.cache import cached
 from hadoop_distexec_spark.functions.numeric import dsum
 from hadoop_distexec_spark.registry import register
 from hadoop_distexec_spark.sources.tables import table
@@ -760,43 +761,40 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events long, sum_value double",
             )
         )
-        got = got.cache()
-        got.count()
+        with cached(got) as got:
+            # batch twin: recent rows only, windows closed by the final watermark
+            # (max - 30 min); identical integer arithmetic to the DuckDB oracle
+            e = table(spark, sf_dir, "events").select(
+                F.unix_micros("ts").alias("u"), "event_type", "value"
+            )
+            mx = e.agg(F.max("u").alias("max_u"))
+            expected = (
+                e.crossJoin(F.broadcast(mx))
+                .where(F.col("u") >= F.col("max_u") - _LATE_RECENT_US)
+                .withColumn("win_start_us", F.col("u") - F.col("u") % _LATE_WIN_US)
+                .where(
+                    F.col("win_start_us") + _LATE_WIN_US
+                    <= F.col("max_u") - _LATE_WM_US
+                )
+                .groupBy("win_start_us", "event_type")
+                .agg(
+                    F.count(F.lit(1)).alias("n_events"),
+                    F.sum("value").alias("sum_value"),
+                )
+            )
+            j = got.alias("s").join(
+                expected.alias("b"), ["win_start_us", "event_type"], "full_outer"
+            )
+            mism = j.filter(
+                F.col("s.n_events").isNull()
+                | F.col("b.n_events").isNull()
+                | (F.col("s.n_events") != F.col("b.n_events"))
+                | (F.abs(F.col("s.sum_value") - F.col("b.sum_value"))
+                   > 1e-6 * F.greatest(F.abs(F.col("b.sum_value")), F.lit(1.0)))
+            ).count()
+            n_stream, n_batch = got.count(), expected.count()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-    # batch twin: recent rows only, windows closed by the final watermark
-    # (max - 30 min); identical integer arithmetic to the DuckDB oracle
-    e = table(spark, sf_dir, "events").select(
-        F.unix_micros("ts").alias("u"), "event_type", "value"
-    )
-    mx = e.agg(F.max("u").alias("max_u"))
-    expected = (
-        e.crossJoin(F.broadcast(mx))
-        .where(F.col("u") >= F.col("max_u") - _LATE_RECENT_US)
-        .withColumn("win_start_us", F.col("u") - F.col("u") % _LATE_WIN_US)
-        .where(
-            F.col("win_start_us") + _LATE_WIN_US
-            <= F.col("max_u") - _LATE_WM_US
-        )
-        .groupBy("win_start_us", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-    )
-    j = got.alias("s").join(
-        expected.alias("b"), ["win_start_us", "event_type"], "full_outer"
-    )
-    mism = j.filter(
-        F.col("s.n_events").isNull()
-        | F.col("b.n_events").isNull()
-        | (F.col("s.n_events") != F.col("b.n_events"))
-        | (F.abs(F.col("s.sum_value") - F.col("b.sum_value"))
-           > 1e-6 * F.greatest(F.abs(F.col("b.sum_value")), F.lit(1.0)))
-    ).count()
-    n_stream, n_batch = got.count(), expected.count()
-    got.unpersist()
     return _check_frame(spark, "late_data_drop", n_stream, n_batch, mism)
 
 

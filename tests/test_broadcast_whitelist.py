@@ -12,7 +12,7 @@ The whitelist records the reviewed HINT COUNT per function, not just the
 function name (round-6 review finding: a set-based whitelist lets an
 unreviewed second hint hide inside an already-whitelisted function —
 e.g. re-adding the de-hinted corpus-sized ``F.broadcast(dfreq)`` to
-``_tfidf_pairs_build``, whose entry is justified only by its 1-row
+``_tfidf_weights``, whose entry is justified only by its 1-row
 n_docs scalar, would have stayed green)."""
 
 import ast
@@ -55,7 +55,7 @@ WHITELIST = {
     ),
     ("operators/llmops.py", "lsh_candidates"): (1, "query set x probe masks, bounded"),
     ("operators/llmops.py", "q_tfidf"): (1, "1-row n_docs scalar (dfreq de-hinted r06)"),
-    ("operators/llmops.py", "_tfidf_pairs_build"): (1, "1-row n_docs scalar (norms/dfreq de-hinted r06, plan-gated)"),
+    ("operators/llmops.py", "_tfidf_weights"): (1, "1-row n_docs scalar (norms/dfreq de-hinted r06, plan-gated)"),
     ("operators/llmops.py", "_bm25_per_doc"): (1, "1-row avgdl scalar (dfreq de-hinted r06)"),
     ("operators/llmops.py", "q_rag_retrieval"): (1, "top-k hit list, k bounded"),
     ("operators/llmops.py", "_hybrid_arms"): (1, "1-row query-vector frame (hint moved here from q_hybrid_search in the r07 arms refactor)"),

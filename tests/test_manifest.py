@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from hadoop_distexec_spark.fs import MappedFS
 from hadoop_distexec_spark.sources import manifest as manifest_mod
-from hadoop_distexec_spark.sources.manifest import build_manifest, make_relative, read_uri_list
+from hadoop_distexec_spark.sources.manifest import build_manifest, make_relative
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFAULT_CAP = manifest_mod._DRIVER_ROWS_CAP
@@ -153,8 +153,9 @@ def test_driver_and_fanout_walks_agree(spark, monkeypatch, mixed_tree, tmp_path,
     """Driver rounds, fan-out rounds and a walk that crosses the driver's
     row cap mid-round give the same rows under each root rule. Cap 0 fans
     every listing out; cap 7 lists the root, `empty` and `plain` on the
-    driver (7 rows) and fans `sub` and everything after it out. No walk
-    leaves a Python RDD under the manifest."""
+    driver (7 rows) and fans `sub` and everything after it out. The
+    driver walk plans as one Arrow table; a fan-out round reads its local
+    checkpoint (no RDD-API Python under either: test_no_python_rdd.py)."""
     tree, other = mixed_tree
     args = {
         "special": (str(tree), None),
@@ -168,15 +169,43 @@ def test_driver_and_fanout_walks_agree(spark, monkeypatch, mixed_tree, tmp_path,
         walks[cap] = (sorted(m.collect()), _plan(m))
     rows, plan = walks[DEFAULT_CAP]
     # a small tree is listed on the driver into one Arrow table
-    assert "LocalTableScan" in plan and "InMemoryTableScan" not in plan
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
     for cap in (0, 7):
         assert walks[cap][0] == rows
-        # fan-out rounds are persisted mapInArrow frames
-        assert "InMemoryTableScan" in walks[cap][1]
-    for _, plan in walks.values():
-        assert "ExistingRDD" not in plan
+        # fan-out rounds are local checkpoints of mapInArrow frames
+        assert "ExistingRDD" in walks[cap][1]
     # the mixed walk keeps its driver rows in the Arrow table
     assert "LocalTableScan" in walks[7][1]
+
+
+def test_fanout_walk_leaves_session_cache_empty(spark, monkeypatch, mixed_tree, tmp_path):
+    """Fan-out rounds are pinned by local checkpoints, not the session
+    cache: the rows match the driver walk, nothing stays cached, and the
+    walk filled each checkpoint, so later actions on the manifest list no
+    directory again (a counting FS, shipped to the executors by value,
+    logs every listing from the driver and from the tasks)."""
+    from hadoop_distexec_spark.fs import LocalFS
+
+    calls = tmp_path / "listdir_calls"
+
+    class CountingFS(LocalFS):
+        def listdir(self, path):
+            with open(calls, "a") as f:
+                f.write(path + "\n")
+            return super().listdir(path)
+
+    tree, _ = mixed_tree
+    want = sorted(build_manifest(spark, str(tree)).collect())
+    spark.catalog.clearCache()
+    monkeypatch.setattr(manifest_mod, "_DRIVER_ROWS_CAP", 1)
+    m = build_manifest(spark, str(tree), fs=CountingFS())
+    walked = calls.read_text().splitlines()
+    # root, sub, empty, plain, sub/deep: loop is a symlink, never expanded
+    assert len(walked) == 5
+    assert sorted(m.collect()) == want
+    assert m.count() == len(want)
+    assert calls.read_text().splitlines() == walked
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 @pytest.mark.parametrize("cap", [DEFAULT_CAP, 0], ids=["driver", "fanout"])
@@ -237,13 +266,6 @@ def test_mtime_is_the_true_instant_off_utc(tree):
     for cap, (max_skew, n) in skews.items():
         assert n == 7, cap
         assert max_skew <= 1, (cap, max_skew)
-
-
-def test_uri_list_source(spark, tmp_path):
-    lst = tmp_path / "uris.txt"
-    lst.write_text("/data/a.txt\n/data/b.txt\n\n  /data/c.txt \n")
-    df = read_uri_list(spark, str(lst))
-    assert [r["src_path"] for r in df.collect()] == ["/data/a.txt", "/data/b.txt", "/data/c.txt"]
 
 
 def test_source_under_uri_root_stays_inside_dst(spark, tmp_path):

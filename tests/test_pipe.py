@@ -307,6 +307,40 @@ def test_update_hash_mode_content_compare(spark, tree, tmp_path):
     assert (dst / "a.txt").read_text() == "brand new bytes"
 
 
+@pytest.mark.parametrize("uri", [False, True], ids=["bare", "file_uri"])
+def test_dirs_only_source_reads_back_zero_rows(spark, tmp_path, monkeypatch, uri):
+    """A run with no files writes one empty part for its results and its
+    hash state; both read back as zero rows, and a re-run reads that empty
+    state. The read-back paths keep dst's form: a ``file://`` dst is not
+    read back as bare paths (which would resolve against fs.defaultFS on
+    a cluster)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    src = tmp_path / "tree"
+    (src / "a" / "b").mkdir(parents=True)
+    dst = tmp_path / "out"
+    dst_arg = f"file://{dst}" if uri else str(dst)
+    read = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        read.extend(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    for _ in range(2):
+        res = distexec(spark, str(src), dst_arg, "cat", update="hash")
+        assert res.count() == 0
+        assert (dst / "a" / "b").is_dir()
+    # run 1 reads back its results; run 2 its results and run 1's state
+    assert len(read) == 3
+    for p in read:
+        assert p.startswith(f"{dst_arg}/_distexec_"), p
+    for name in ("_distexec_results", "_distexec_state"):
+        parts = [p for p in (dst / name).iterdir() if p.name.startswith("part-")]
+        assert len(parts) == 1, name
+
+
 def test_preserve_mode_and_mtime(spark, tree, tmp_path):
     """-p finalize pass (DistCp heritage, src/reference/DistCp.java:662-712):
     destination files get the source's permission bits and mtime."""

@@ -90,11 +90,12 @@ def test_tfidf_pairs_no_static_broadcast_on_corpus_sized_sides(spark):
     carry at most the single 1-row n_docs broadcast hint; AQE sizes the
     rest at runtime.
 
-    Gated on the PRE-checkpoint builder plan: the registered query
+    Gated on the query's lazy steps composed uncached: the registered query
     returns an eager localCheckpoint whose analyzed plan is a truncated
     LogicalRDD that can never contain a ResolvedHint — asserting on it
     would be vacuous (re-adding every hint would keep it green)."""
-    df, _w, _cnt = llmops._tfidf_pairs_build(spark, SF_SMALL, materialize=False)
+    w = llmops._tfidf_weights(llmops._tfidf_counts(spark, SF_SMALL))
+    df = llmops._tfidf_cosine(w)
     plan = df._jdf.queryExecution().analyzed().toString()
     lines = plan.splitlines()
     hint_idx = [i for i, ln in enumerate(lines) if "ResolvedHint" in ln]
