@@ -1,13 +1,17 @@
 """Group-local kernels: Spark groups the rows by a key and one task runs
-numpy over one whole group (``applyInPandas``). That is safe only when
-every group fits one task, so each caller pins its input with
-``pin_if_groups_fit`` and runs its distributed fallback, which returns
-the same rows, when some group is over its bound.
+numpy over one whole group. That is safe only when every group fits one
+task, so every such kernel runs through ``cell_local``: it pins the
+input, checks the group sizes against a named bound, and then runs the
+kernel as one ``applyInArrow`` pass (a ``pyarrow.Table`` in, a
+``pyarrow.Table`` out, no pandas) or, when some group is over its bound,
+the caller's distributed fallback, which returns the same rows.
 
-This module imports only pyspark, so every operator module can import
-it without an import cycle."""
+This module imports only pyspark at import time, so every operator
+module can import it without an import cycle."""
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -15,9 +19,10 @@ from pyspark.sql import functions as F
 # Largest group, in rows of the grouped frame, that one task may take.
 BOUNDS = {
     # union-find connected components: 4M edge rows x ~16 bytes of ids is
-    # ~64 MB per Arrow group plus the parent array; the per-edge union is
-    # an interpreted loop, so a cell at the bound costs tens of seconds of
-    # CPU. Do not raise it without vectorizing that pass.
+    # ~64 MB per Arrow group, plus the index and parent arrays. The union
+    # is vectorized (min-label hooking + pointer jumping, O(|E|) numpy
+    # work per hooking round), so the bound is memory, not CPU; it stays
+    # where it was until a 10x-lane measurement sets it.
     "cc": 4_000_000,
     # label propagation: the same edge-list arithmetic as "cc"
     "lpa": 4_000_000,
@@ -32,7 +37,7 @@ BOUNDS = {
 }
 
 
-def pin_if_groups_fit(
+def _pin_if_groups_fit(
     df: DataFrame, key: str, bound_name: str
 ) -> tuple[DataFrame, bool]:
     """Pin ``df`` with an eager local checkpoint and report whether every
@@ -41,8 +46,7 @@ def pin_if_groups_fit(
     The total row count rides the checkpoint job as an Observation, and a
     total within the bound proves every group fits, so the common path
     runs one Spark job. Only an over-bound total pays a second job, the
-    per-key max count. Callers feed the pinned frame to the group-local
-    kernel when it fits and to their distributed fallback otherwise."""
+    per-key max count."""
     bound = BOUNDS[bound_name]
     obs = Observation()
     pinned = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
@@ -57,3 +61,44 @@ def pin_if_groups_fit(
         .collect()[0]["mx"]
     )
     return pinned, mx <= bound
+
+
+def cell_local(
+    df: DataFrame,
+    key: str,
+    bound_name: str,
+    kernel: Callable,
+    schema: str,
+    fallback: Callable[[DataFrame], DataFrame],
+) -> tuple[DataFrame, DataFrame]:
+    """Run ``kernel`` once per ``key`` group of ``df`` when every group
+    fits ``BOUNDS[bound_name]``, else ``fallback``; return ``(result,
+    pinned)``.
+
+    ``kernel`` takes one group as a ``pyarrow.Table`` and returns a
+    ``pyarrow.Table`` with the columns of ``schema`` (a DDL string) in
+    order; its Arrow types are cast to the schema's here. ``fallback``
+    takes the pinned frame and returns the same rows in the same schema
+    without holding a group in one task. ``pinned`` is ``df`` after the
+    guard's eager checkpoint: callers read it for any other aggregate
+    over the same rows (the approx tiers), so the input is scanned once."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    pinned, fits = _pin_if_groups_fit(df, key, bound_name)
+    if not fits:
+        return fallback(pinned), pinned
+    out = to_arrow_schema(StructType.fromDDL(schema))
+    return pinned.groupBy(key).applyInArrow(lambda t: kernel(t).cast(out), schema), pinned
+
+
+def dense_ids(t, a: str, b: str):
+    """Dense indices for the id columns ``a`` and ``b`` of the Arrow
+    table ``t``: ``(ids, ia, ib)`` with ``ids[ia]`` = ``a`` and
+    ``ids[ib]`` = ``b``. ``ids`` ascends, so a smallest-index rule in a
+    kernel is a smallest-id rule."""
+    import numpy as np
+
+    x, y = (t.column(c).to_numpy().astype(np.int64) for c in (a, b))
+    ids, idx = np.unique(np.concatenate([x, y]), return_inverse=True)
+    return ids, idx[: len(x)], idx[len(x) :]

@@ -886,7 +886,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact decimal cosine is evaluated only for survivors. Since
     round 8 the prefilter itself is VECTORIZED: the within-cell m^2/2
     pair space goes through one chunked float64 X @ X.T per label cell
-    (applyInPandas — Arrow batches, BLAS matmul) instead of ~1.3
+    (applyInArrow — Arrow batches, BLAS matmul) instead of ~1.3
     BILLION interpreted zip_with element ops at the 10x lane, which
     stage-profiling showed dominated every exact-graph consumer
     (triangle/LPA/CC/agreement harnesses all sat at 110-142s paying
@@ -905,7 +905,9 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         _spark_dot(F.col("embedding"), F.col("embedding")).alias("norm2"),
     )
-    cand = e.select("vec_id", "label", "embedding").groupBy("label").applyInPandas(
+    # no group-size guard: the label cell is this builder's blocking
+    # contract, and its quadratic pair space is chunked in the kernel
+    cand = e.select("vec_id", "label", "embedding").groupBy("label").applyInArrow(
         _embed_cand_cell, "vec_a long, vec_b long"
     )
     a = e.select(
@@ -928,20 +930,24 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _embed_cand_cell(pdf):
+def _embed_cand_cell(t):
     """Per-label-cell candidate pairs for q_dedup_embed: chunked float64
     X @ X.T cosine prefilter at EMBED_COS_THRESHOLD - 1e-6, emitting
     (vec_a < vec_b) id pairs. The margin makes the survivor set immune
     to summation-order differences between the matmul and the exact
     decimal confirm that follows JVM-side (see q_dedup_embed). Zero-norm
     vectors are excluded up front — their exact cosine is NULL and the
-    registered filter drops them anyway."""
+    registered filter drops them anyway. ``t`` is one cell's Arrow
+    table; the embeddings are read as one flat float array reshaped to
+    (n, dim)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    pdf = pdf.sort_values("vec_id")
-    ids = pdf["vec_id"].to_numpy()
-    x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    ids = t.column("vec_id").to_numpy()
+    x = pc.list_flatten(t.column("embedding")).to_numpy().reshape(len(ids), -1)
+    order = np.argsort(ids)
+    ids, x = ids[order], x[order].astype(np.float64)
     n2 = (x * x).sum(axis=1)
     keep = n2 > 0.0
     ids, x, n2 = ids[keep], x[keep], n2[keep]
@@ -949,7 +955,7 @@ def _embed_cand_cell(pdf):
     thr = EMBED_COS_THRESHOLD - 1e-6
     inv = 1.0 / np.sqrt(n2)
     xn = x * inv[:, None]  # unit rows: cosine == xn @ xn.T
-    out_a, out_b = [], []
+    out_a, out_b = [ids[:0]], [ids[:0]]
     chunk = 1024
     for i0 in range(0, n, chunk):
         i1 = min(i0 + chunk, n)
@@ -959,12 +965,7 @@ def _embed_cand_cell(pdf):
         m = jj > gi  # upper triangle in vec_id order => vec_a < vec_b
         out_a.append(ids[gi[m]])
         out_b.append(ids[jj[m]])
-    if out_a:
-        return pd.DataFrame(
-            {"vec_a": np.concatenate(out_a), "vec_b": np.concatenate(out_b)}
-        )
-    return pd.DataFrame({"vec_a": pd.Series([], dtype="int64"),
-                         "vec_b": pd.Series([], dtype="int64")})
+    return pa.table({"vec_a": np.concatenate(out_a), "vec_b": np.concatenate(out_b)})
 
 
 # decimal dot variants for the IVF oracle: element casts fix the exact
@@ -3005,27 +3006,17 @@ def _tri_counts_cell_local(edges_cell: DataFrame) -> DataFrame:
     enumerates each triangle exactly once at its (x, y) edge with the
     common-neighbor filter z > y; per-vertex counts do not depend on the
     enumeration scheme, so the result equals triangle_counts' oriented
-    pipeline row-for-row. A cell over ``BOUNDS["triangles"]`` edges sends
-    the whole graph to triangle_counts instead
-    (group_local.pin_if_groups_fit)."""
-    edges_cell, fits = group_local.pin_if_groups_fit(
-        edges_cell, "cell", "triangles"
-    )
-    if not fits:
-        return triangle_counts(
-            edges_cell.select(F.col("vec_a").alias("va"), F.col("vec_b").alias("vb"))
-        )
+    pipeline row-for-row. One ``group_local.cell_local`` pass; a cell
+    over ``BOUNDS["triangles"]`` edges sends the whole graph to
+    triangle_counts instead."""
 
-    def _tri(pdf):
+    def _tri(t):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        a = pdf["vec_a"].to_numpy(np.int64)
-        b = pdf["vec_b"].to_numpy(np.int64)
-        # np.unique sorts ascending: index order == id order, so the
+        # dense_ids ascends: index order == id order, so the
         # vec_a < vec_b input order carries to ia < ib
-        ids, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
-        ia, ib = idx[: len(a)], idx[len(a) :]
+        ids, ia, ib = group_local.dense_ids(t, "vec_a", "vec_b")
         n = len(ids)
         endp = np.concatenate([ia, ib])
         deg = np.bincount(endp, minlength=n)
@@ -3048,11 +3039,14 @@ def _tri_counts_cell_local(edges_cell: DataFrame) -> DataFrame:
                 counts[y] += len(z)
                 counts[z] += 1  # z unique -> fancy assignment is exact
         keep = counts > 0
-        return pd.DataFrame({"vec_id": ids[keep], "n_tri": counts[keep]})
+        return pa.table({"vec_id": ids[keep], "n_tri": counts[keep]})
 
-    return edges_cell.groupBy("cell").applyInPandas(
-        _tri, schema="vec_id long, n_tri long"
-    )
+    return group_local.cell_local(
+        edges_cell, "cell", "triangles", _tri, "vec_id long, n_tri long",
+        lambda pin: triangle_counts(
+            pin.select(F.col("vec_a").alias("va"), F.col("vec_b").alias("vb"))
+        ),
+    )[0]
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -8176,8 +8170,8 @@ def _kcore_peel_cells(
     Robustness: |E_cell| <= n_cell*cap bounds edges per MEMBER, but a
     hot label's n_cell is unbounded, so a cell over ``BOUNDS["kcore"]``
     symmetric edges sends the whole graph to the distributed _kcore_peel
-    above (group_local.pin_if_groups_fit), stamped with its global
-    certificate — identical output contract.
+    above, stamped with its global certificate — identical output
+    contract.
 
     Equivalence to the distributed loop (which stays above as the tested
     reference): peeling is monotone and cells are independent, so a cell
@@ -8187,18 +8181,18 @@ def _kcore_peel_cells(
     core empties is converged, so zero-row cells drop out of the AND
     harmlessly). The distributed loop paid 2 driver-blocking jobs per
     round (checkpoint + count: ~16 jobs on the 8-round budget); this is
-    one applyInPandas pass over the bounded capped edge set."""
-    sym_cell, fits = group_local.pin_if_groups_fit(sym_cell, "cell", "kcore")
-    if not fits:
-        alive, converged = _kcore_peel(sym_cell.select("u", "v"), k, rounds)
+    one ``group_local.cell_local`` pass over the bounded capped edge
+    set."""
+
+    def _fallback(pin: DataFrame) -> DataFrame:
+        alive, converged = _kcore_peel(pin.select("u", "v"), k, rounds)
         return alive.withColumn("converged", F.lit(converged))
 
-    def _peel(pdf):
+    def _peel(t):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        u = pdf["u"].to_numpy(np.int64)
-        v = pdf["v"].to_numpy(np.int64)
+        u, v = (t.column(c).to_numpy().astype(np.int64) for c in ("u", "v"))
 
         def survivors(uu, vv):
             ids, inv = np.unique(uu, return_inverse=True)
@@ -8220,17 +8214,11 @@ def _kcore_peel_cells(
             # oracle's e{rounds+1} — alive is NOT advanced by it
             u2, _v2 = survivors(u, v)
             converged = len(u2) == n_prev
-        return pd.DataFrame(
-            {
-                "u": u,
-                "v": v,
-                "converged": np.repeat(converged, len(u)),
-            }
-        )
+        return pa.table({"u": u, "v": v, "converged": np.repeat(converged, len(u))})
 
-    return sym_cell.groupBy("cell").applyInPandas(
-        _peel, schema="u long, v long, converged boolean"
-    )
+    return group_local.cell_local(
+        sym_cell, "cell", "kcore", _peel, "u long, v long, converged boolean", _fallback
+    )[0]
 
 
 def kcore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -455,11 +455,7 @@ def connected_components_jump(
     )
 
 
-def connected_components_cell_local(
-    nodes: DataFrame,
-    edges_cell: DataFrame,
-    validate_blocking: bool = False,
-) -> DataFrame:
+def connected_components_cell_local(nodes: DataFrame, edges_cell: DataFrame) -> DataFrame:
     """Connected components over a CELL-BLOCKED edge set — ``edges_cell``
     is (cell, doc_a, doc_b) where every edge's endpoints share the cell
     (the label/IVF blocking invariant of the capped builders), so no
@@ -472,82 +468,48 @@ def connected_components_cell_local(
     connected_components / connected_components_jump: (doc_id,
     component = min reachable doc_id).
 
-    Why (r12 optimization round, measured at sf0.1): the pointer-jumping
-    loop pays ~2 blocking jobs x ~10 AQE stage-jobs per round for 18
-    rounds — 210 Spark jobs, 11.3s of almost pure per-job fixed overhead
-    on a bounded edge set (the edge build itself is 0.8s). The union-find
-    path is 7 jobs / 1.4s with bit-identical output (verified by
-    exceptAll both ways at sf0.001 AND sf0.1 before the switch). At 100 TB
-    the trade holds: cells are the blocking unit, |E_cell| <= m*cap by
-    construction, and one task consolidating one cell's bounded edge list
-    replaces O(log diameter) corpus-wide shuffle rounds; per-cell cost is
-    linear in the edge list (array union-find with path compression).
+    Why (measured at sf0.1): the pointer-jumping loop pays 210 Spark
+    jobs, 11.3s of almost pure per-job overhead, on a bounded edge set;
+    this path is 7 jobs / 1.4s with identical labels. At 100 TB cells are
+    the blocking unit, |E_cell| <= m*cap by construction, and one task per
+    cell replaces O(log diameter) corpus-wide shuffle rounds.
 
-    Robustness: a cell over ``BOUNDS["cc"]`` edges sends the whole graph
-    to the distributed jump loop instead (group_local.pin_if_groups_fit)
-    — same result, graceful at chain diameters no single task should
-    hold.
+    Shape: one ``group_local.cell_local`` pass. The kernel hooks every
+    edge's larger root under its smaller one (``np.minimum.at``), then
+    pointer-jumps to a star forest, until no edge joins two roots: each
+    round is O(|E_cell|) numpy work, and links only point to smaller
+    indices, so each root is its component's minimum. A cell over
+    ``BOUNDS["cc"]`` edges sends the whole graph to the distributed jump
+    loop instead — same result.
 
-    HARD PRECONDITION (VERDICT r12 what's-wrong #3): every doc_id must
-    appear under at most ONE cell. A cross-cell edge would make the
-    per-cell passes emit duplicate label rows and the left-join tail
-    silently inflate the output row count. Today's callers satisfy it by
-    construction (their builders block by the very cell they attach);
-    ``validate_blocking=True`` adds one agg over the pinned edges that
-    raises loudly on a violation — the debug path for any future caller
-    whose blocking is not proof-by-construction."""
-    edges_cell, fits = group_local.pin_if_groups_fit(edges_cell, "cell", "cc")
-    if validate_blocking:
-        bad = (
-            edges_cell.select(
-                "cell", F.explode(F.array("doc_a", "doc_b")).alias("doc")
-            )
-            .groupBy("doc")
-            .agg(F.countDistinct("cell").alias("nc"))
-            .filter(F.col("nc") > 1)
-            .count()
-        )
-        if bad:
-            raise AssertionError(
-                f"cell-blocking invariant violated: {bad} doc ids appear "
-                "under more than one cell — a cross-cell edge would "
-                "silently duplicate component labels"
-            )
-    if not fits:
-        return connected_components_jump(nodes, edges_cell.select("doc_a", "doc_b"))
+    Precondition: every doc_id appears under at most ONE cell, or the
+    per-cell passes emit duplicate label rows. Each caller's builder
+    blocks by the cell it attaches; tests/test_group_local.py checks the
+    invariant on every caller's edge frame."""
 
-    def _uf_min_label(pdf):
+    def _uf_min_label(t):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        a = pdf["doc_a"].to_numpy(dtype=np.int64)
-        b = pdf["doc_b"].to_numpy(dtype=np.int64)
-        # np.unique sorts ascending, so index order == id order and the
-        # union-by-min below keeps each tree's root at the component min
-        ids, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
-        ia, ib = idx[: len(a)], idx[len(a) :]
+        ids, ia, ib = group_local.dense_ids(t, "doc_a", "doc_b")
         parent = np.arange(len(ids), dtype=np.int64)
+        while True:
+            ra, rb = parent[ia], parent[ib]  # roots: parent is a star forest
+            lo, hi = np.minimum(ra, rb), np.maximum(ra, rb)
+            cross = lo != hi
+            if not cross.any():
+                break
+            np.minimum.at(parent, hi[cross], lo[cross])
+            while True:
+                jumped = parent[parent]
+                if np.array_equal(jumped, parent):
+                    break
+                parent = jumped
+        return pa.table({"doc_id": ids, "component": ids[parent]})
 
-        def find(x: int) -> int:
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for x, y in zip(ia, ib):
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                if rx < ry:
-                    parent[ry] = rx
-                else:
-                    parent[rx] = ry
-        roots = np.array([find(i) for i in range(len(ids))], dtype=np.int64)
-        return pd.DataFrame({"doc_id": ids, "component": ids[roots]})
-
-    labels = edges_cell.groupBy("cell").applyInPandas(
-        _uf_min_label, schema="doc_id long, component long"
+    labels, _ = group_local.cell_local(
+        edges_cell, "cell", "cc", _uf_min_label, "doc_id long, component long",
+        lambda pin: connected_components_jump(nodes, pin.select("doc_a", "doc_b")),
     )
     return nodes.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("component", F.col("doc_id")).alias("component")
@@ -1217,23 +1179,17 @@ def _lpa_labels_cell_local(
     round changes nothing is safe: a synchronous fixed point reproduces
     itself, so rounds k+1..LPA_ROUNDS are no-ops.
 
-    A cell over ``BOUNDS["lpa"]`` edges sends the whole graph to the
-    distributed _lpa_labels loop instead (group_local.pin_if_groups_fit)
-    — identical output."""
-    edges_cell, fits = group_local.pin_if_groups_fit(edges_cell, "cell", "lpa")
-    if not fits:
-        return _lpa_labels(nodes, edges_cell.select("vec_a", "vec_b"))
+    Shape: one ``group_local.cell_local`` pass. A cell over
+    ``BOUNDS["lpa"]`` edges sends the whole graph to the distributed
+    _lpa_labels loop instead — identical output."""
 
-    def _lpa_cell(pdf):
+    def _lpa_cell(t):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        a = pdf["vec_a"].to_numpy(dtype=np.int64)
-        b = pdf["vec_b"].to_numpy(dtype=np.int64)
-        # np.unique sorts ascending: index order == id order, so the
+        # dense_ids ascends: index order == id order, so the
         # smallest-INDEX tiebreak below is the smallest-LABEL tiebreak
-        ids, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
-        ia, ib = idx[: len(a)], idx[len(a) :]
+        ids, ia, ib = group_local.dense_ids(t, "vec_a", "vec_b")
         v_all = np.concatenate([ia, ib])
         u_all = np.concatenate([ib, ia])
         lab = np.arange(len(ids), dtype=np.int64)
@@ -1256,10 +1212,11 @@ def _lpa_labels_cell_local(
             if np.array_equal(new_lab, lab):
                 break
             lab = new_lab
-        return pd.DataFrame({"v": ids, "lab": ids[lab]})
+        return pa.table({"v": ids, "lab": ids[lab]})
 
-    labels = edges_cell.groupBy("cell").applyInPandas(
-        _lpa_cell, schema="v long, lab long"
+    labels, _ = group_local.cell_local(
+        edges_cell, "cell", "lpa", _lpa_cell, "v long, lab long",
+        lambda pin: _lpa_labels(nodes, pin.select("vec_a", "vec_b")),
     )
     return nodes.join(labels, "v", "left").select(
         "v", F.coalesce("lab", F.col("v")).alias("lab")

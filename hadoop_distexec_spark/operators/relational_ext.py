@@ -1170,15 +1170,14 @@ def _pct_agg_sql(p: int) -> str:
     return f"({vlo} + ({vhi} - {vlo}) * (MAX(rem{p}) / 100.0))"
 
 
-def _spark_pcts(df: DataFrame, pcts, extra_aggs=()) -> DataFrame:
+def _spark_pcts(df: DataFrame, pcts) -> DataFrame:
     """Spark twin of _pct_row_sql / _pct_agg_sql: the integer-exact
     interpolated percentiles of ``v`` per ``g`` over ``df`` (g, v, ...),
     one window sort that spills. Returns (g, n, p{p} for each p in
-    ``pcts``, then ``extra_aggs``). Every input column reaches the final
-    groupBy, so ``extra_aggs`` can read any of them and ride the same
-    Exchange instead of a second scan."""
+    ``pcts``): the window tier of the order-statistics ids, used when a
+    group is too large for one task."""
     ranked = df.select(
-        "*",
+        "g", "v",
         (F.row_number().over(W.partitionBy("g").orderBy("v")) - 1).alias("i"),
         F.count(F.lit(1)).over(W.partitionBy("g")).alias("n"),
     )
@@ -1192,19 +1191,14 @@ def _spark_pcts(df: DataFrame, pcts, extra_aggs=()) -> DataFrame:
             f"_vhi{p}": F.when(F.col("i") == hi, F.col("v")),
             f"_rem{p}": rem,
         })
-    agg = ranked.groupBy("g").agg(
-        F.max("n").alias("n"), *[F.max(c).alias(c) for c in sel], *extra_aggs
-    )
+    agg = ranked.groupBy("g").agg(F.max("n").alias("n"), *[F.max(c).alias(c) for c in sel])
 
     def pct(p: int):
         vlo, vhi = F.col(f"_vlo{p}"), F.col(f"_vhi{p}")
         return vlo + (vhi - vlo) * (F.col(f"_rem{p}").cast("double") / 100.0)
 
     # a fresh g attribute: callers join the result back onto ``df``
-    return agg.select(
-        F.col("g").alias("g"), "n", *[pct(p).alias(f"p{p}") for p in pcts],
-        *[c for c in agg.columns if c not in ("g", "n", *sel)],
-    )
+    return agg.select(F.col("g").alias("g"), "n", *[pct(p).alias(f"p{p}") for p in pcts])
 
 
 def _interp_pct_np(xs, p: int) -> float:
@@ -1253,41 +1247,33 @@ def q_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE expression tree. row_number ties on equal v are harmless: every
     rank inside a tie block holds the same value.
 
-    Shape (r13): the exact tier runs as one Arrow pass per group — numpy
-    sorts the bounded group in-task and applies the identical integer-
-    exact rank interpolation at all three points (_interp_pct_np, the
-    q_robust_stats rewrite, guide §4.2) — while the GK production tier
-    stays a map-side-combinable hash aggregate. A group over
+    Shape: the exact tier is one ``group_local.cell_local`` pass — numpy
+    sorts each bounded group in-task and applies the identical integer-
+    exact rank interpolation at all three points (_interp_pct_np, guide
+    §4.2) — while the GK production tier is a map-side-combinable hash
+    aggregate over the same pinned rows. A group over
     ``BOUNDS["order_stats"]`` rows sends every group to the r4 window
-    tier (_spark_pcts) instead, which sorts with spilling
-    (group_local.pin_if_groups_fit). At 100 TB the exact path is the
-    audit tier and approx_percentile is the production tier — this query
-    ships both and proves they agree."""
+    tier (_spark_pcts) instead, which sorts with spilling. At 100 TB the
+    exact path is the audit tier and approx_percentile is the production
+    tier — this query ships both and proves they agree."""
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"), F.col("l_quantity").alias("v")
     )
+
+    def _pcts(t):
+        import numpy as np
+        import pyarrow as pa
+
+        xs = np.sort(t.column("v").to_numpy())
+        pcts = {f"p{p}": [_interp_pct_np(xs, p)] for p in _PCTS}
+        return pa.table({"g": t.column("g")[:1], "n": [len(xs)], **pcts})
+
+    schema = "g string, n long, " + ", ".join(f"p{p} double" for p in _PCTS)
+    exact, li = group_local.cell_local(
+        li, "g", "order_stats", _pcts, schema, lambda pin: _spark_pcts(pin, _PCTS)
+    )
     approx_p50 = F.percentile_approx("v", 0.5, 10000).alias("_approx_p50")
-    li, fits = group_local.pin_if_groups_fit(li, "g", "order_stats")
-    if fits:
-
-        def _pcts(pdf):
-            import numpy as np
-            import pandas as pd
-
-            xs = np.sort(pdf["v"].to_numpy())
-            row = {"g": [pdf["g"].iloc[0]], "n": [len(xs)]}
-            for p in _PCTS:
-                row[f"p{p}"] = [_interp_pct_np(xs, p)]
-            return pd.DataFrame(row)
-
-        exact = li.groupBy("g").applyInPandas(
-            _pcts,
-            schema="g string, n long, "
-            + ", ".join(f"p{p} double" for p in _PCTS),
-        )
-        agg = exact.join(li.groupBy("g").agg(approx_p50), "g")
-    else:
-        agg = _spark_pcts(li, _PCTS, [approx_p50])
+    agg = exact.join(li.groupBy("g").agg(approx_p50), "g")
     # GK sketch with accuracy 10000 has rank error <= n/10000 (~6 ranks at
     # sf0.1); l_quantity is dense near the median, so 1.0 of headroom is
     # generous while still catching a broken sketch.
@@ -1346,32 +1332,69 @@ def q_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     per boundary) is the hash-checked TRUE-flag asserting the production
     tier tracks the exact one.
 
-    Shape: one group-key Exchange for the ranking window + aggregate,
-    one broadcast of the 3-row boundary table back onto the scan for bin
-    counting (map-side combinable). The bin-count pass never sorts."""
+    Shape: the exact tier is one ``group_local.cell_local`` pass — numpy
+    sorts each bounded group once, cuts p25/p50/p75 and counts the
+    non-empty bins in the same task — and the GK tier is one hash
+    aggregate over the same pinned rows. A group over
+    ``BOUNDS["order_stats"]`` rows sends every group to
+    _quantile_bins_window_tier instead."""
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"), F.col("l_extendedprice").alias("v")
     )
-    bounds = _spark_pcts(li, _PCTS, [
+
+    def _bins(t):
+        import numpy as np
+        import pyarrow as pa
+
+        xs = np.sort(t.column("v").to_numpy())
+        cuts = [_interp_pct_np(xs, p) for p in _PCTS]
+        # strict v > cut, ties land low: the registered bin rule
+        per_bin = np.bincount((xs[:, None] > cuts).sum(axis=1), minlength=4)
+        bins = np.flatnonzero(per_bin)
+        edges = [None, *cuts, None]
+        return pa.table({
+            "g": t.column("g").take(np.zeros(len(bins), np.int64)),
+            "bin": bins,
+            "lo": [edges[k] for k in bins],
+            "hi": [edges[k + 1] for k in bins],
+            "n_rows": per_bin[bins],
+            **{f"p{p}": [c] * len(bins) for p, c in zip(_PCTS, cuts)},
+        })
+
+    schema = "g string, bin int, lo double, hi double, n_rows long, " + ", ".join(
+        f"p{p} double" for p in _PCTS
+    )
+    exact, li = group_local.cell_local(
+        li, "g", "order_stats", _bins, schema, _quantile_bins_window_tier
+    )
+    apx = li.groupBy("g").agg(
         F.percentile_approx("v", [p / 100.0 for p in _PCTS], 10000).alias("_apx")
-    ])
+    )
 
     def close(p: int, idx: int):
         exact = F.col(f"p{p}")
         approx = F.col("_apx")[idx]
         return F.abs(approx - exact) <= (F.lit(0.005) * F.abs(exact) + F.lit(1.0))
 
-    bounds = bounds.select(
-        "g", "p25", "p50", "p75",
+    return exact.join(apx, "g").select(
+        F.col("g").alias("l_returnflag"), "bin", "lo", "hi", "n_rows",
         (close(25, 0) & close(50, 1) & close(75, 2)).alias("bounds_ok"),
     )
-    bin_col = sum(
-        F.when(F.col("v") > F.col(f"p{p}"), 1).otherwise(0) for p in _PCTS
-    ).cast("int")
+
+
+def _quantile_bins_window_tier(li: DataFrame) -> DataFrame:
+    """q_quantile_bins' exact tier without holding a group in one task:
+    the window percentiles (_spark_pcts) broadcast back onto the scan for
+    bin counting (map-side combinable; the bin-count pass never sorts).
+    The cut points ride the bin-count grouping keys (constant per g), so
+    the boundary frame is evaluated once. Same rows and schema as the
+    kernel: (g, bin, lo, hi, n_rows, p25, p50, p75)."""
+    bounds = _spark_pcts(li, _PCTS).drop("n")
+    cuts = [f"p{p}" for p in _PCTS]
+    bin_col = sum(F.when(F.col("v") > F.col(c), 1).otherwise(0) for c in cuts).cast("int")
     cnt = (
-        li.join(F.broadcast(bounds.select("g", "p25", "p50", "p75")), "g")
-        .select("g", bin_col.alias("bin"))
-        .groupBy("g", "bin")
+        li.join(F.broadcast(bounds), "g")
+        .groupBy("g", bin_col.alias("bin"), *cuts)
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )
     pick = lambda m: F.element_at(  # noqa: E731
@@ -1380,13 +1403,11 @@ def q_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("bin"),
     )
-    return cnt.join(F.broadcast(bounds), "g").select(
-        F.col("g").alias("l_returnflag"),
-        "bin",
+    return cnt.select(
+        "g", "bin",
         pick({1: "p25", 2: "p50", 3: "p75"}).alias("lo"),
         pick({0: "p25", 1: "p50", 2: "p75"}).alias("hi"),
-        "n_rows",
-        "bounds_ok",
+        "n_rows", *cuts,
     )
 
 
@@ -2258,62 +2279,40 @@ _MAD_K = 1.4826  # consistency constant: MAD * k estimates sigma for normals
 _MAD_Z = 3.0
 
 
-def _group_median_arrow(df: DataFrame) -> DataFrame:
-    """Per-group exact interpolated median via one Arrow pass: numpy
-    sorts each bounded group in-task (guide §4.2) instead of a
-    single-partition-per-group WindowExec sort + rank arithmetic.
-    Input (g, v); output (g, n_med, med), bit-equal to _spark_pcts(df,
-    [50]) (g, n, p50)."""
+def _robust_stats_kernel(t):
+    """q_robust_stats' exact tier for one group, as one Arrow table in
+    and one row out (g, n, median, mad, n_outliers): one sort of the
+    values gives the median, one sort of ``|v - median|`` gives the MAD,
+    and the robust-z outlier count (dev > 3 * (1.4826 * mad)) reads the
+    same sorted deviations. Interpolation and the threshold use the IEEE
+    operation order of the window tier, so every value is bit-equal."""
+    import numpy as np
+    import pyarrow as pa
 
-    def _med(pdf):
-        import numpy as np
-        import pandas as pd
-
-        xs = np.sort(pdf["v"].to_numpy())
-        return pd.DataFrame({
-            "g": [pdf["g"].iloc[0]], "n_med": [len(xs)], "med": [_interp_pct_np(xs, 50)]
-        })
-
-    return df.groupBy("g").applyInPandas(_med, schema="g string, n_med long, med double")
-
-
-def _group_mad_outliers_arrow(devs: DataFrame) -> DataFrame:
-    """Per-group exact MAD plus the fused robust-z outlier count over a
-    deviations frame (g, v = |x - median|): mad is known the moment the
-    group is sorted, so counting v > _MAD_Z * (_MAD_K * mad) rides the
-    same Arrow pass — the scalar threshold uses the identical IEEE tree
-    as the old broadcast-join pass. Output (g, mad, n_outliers)."""
-
-    def _mad(pdf):
-        import numpy as np
-        import pandas as pd
-
-        d = np.sort(pdf["v"].to_numpy())
-        m = _interp_pct_np(d, 50)
-        n_out = int((d > _MAD_Z * (_MAD_K * m)).sum())
-        return pd.DataFrame({"g": [pdf["g"].iloc[0]], "mad": [m], "n_outliers": [n_out]})
-
-    return devs.groupBy("g").applyInPandas(
-        _mad, schema="g string, mad double, n_outliers long"
-    )
+    xs = np.sort(t.column("v").to_numpy())
+    med = _interp_pct_np(xs, 50)
+    d = np.sort(np.abs(xs - med))
+    mad = _interp_pct_np(d, 50)
+    n_out = int((d > _MAD_Z * (_MAD_K * mad)).sum())
+    return pa.table({
+        "g": t.column("g")[:1], "n": [len(xs)], "median": [med], "mad": [mad],
+        "n_outliers": [n_out],
+    })
 
 
-def _robust_stats_window_tier(li: DataFrame, _close) -> DataFrame:
-    """The r8 window-tier body of q_robust_stats, kept verbatim as the
-    oversized-group fallback (and the tested reference twin) for the
-    Arrow path above."""
-    med = _spark_pcts(
-        li, [50], [F.percentile_approx("v", 0.5, 10000).alias("amed")]
-    ).select("g", F.col("n").alias("n_med"), F.col("p50").alias("med"), "amed")
+_ROBUST_SCHEMA = "g string, n long, median double, mad double, n_outliers long"
+
+
+def _robust_stats_window_tier(li: DataFrame) -> DataFrame:
+    """The r8 window tier of q_robust_stats' exact columns, the
+    oversized-group fallback (and the tested reference twin) of
+    _robust_stats_kernel: same rows, schema _ROBUST_SCHEMA."""
+    med = _spark_pcts(li, [50]).select("g", "n", F.col("p50").alias("median"))
     devs = li.join(F.broadcast(med), li.g == med.g).select(
-        li.g.alias("g"),
-        F.abs(li.v - F.col("med")).alias("v"),
-        F.abs(li.v - F.col("amed")).alias("av"),
+        li.g.alias("g"), F.abs(li.v - F.col("median")).alias("v")
     )
     with cached(devs) as devs:
-        mad = _spark_pcts(
-            devs, [50], [F.percentile_approx("av", 0.5, 10000).alias("amad")]
-        ).select("g", F.col("p50").alias("mad"), "amad")
+        mad = _spark_pcts(devs, [50]).select("g", F.col("p50").alias("mad"))
         thresh = F.lit(_MAD_Z) * (F.lit(_MAD_K) * F.col("mad"))
         outl = (
             devs.join(F.broadcast(mad), "g")
@@ -2325,13 +2324,8 @@ def _robust_stats_window_tier(li: DataFrame, _close) -> DataFrame:
             med.join(mad, "g")
             .join(outl, "g", "left")
             .select(
-                F.col("g").alias("l_returnflag"),
-                F.col("n_med").alias("n"),
-                F.col("med").alias("median"),
-                "mad",
+                "g", "n", "median", "mad",
                 F.coalesce("n_outliers", F.lit(0)).alias("n_outliers"),
-                _close(F.col("amed"), F.col("med")).alias("median_ok"),
-                _close(F.col("amad"), F.col("mad")).alias("mad_ok"),
             )
             .localCheckpoint(eager=True)
         )
@@ -2376,21 +2370,26 @@ def q_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative + 1.0 absolute) that the oracle asserts as literal TRUE —
     sketch drift flips a hash-checked column.
 
-    Shape (restructured r13, guide §1.2/§4.2): the exact tier hands
-    each bounded group to ONE Arrow pass per frame — numpy sorts the
-    group, applies the identical integer-exact interpolation, and the
-    MAD pass also counts the outliers in place (the threshold is known
-    the moment mad is, so the old third broadcast-join pass over the
-    deviations disappears) — with the corpus-sized devs persist
-    replaced by recomputing the cheap scan+broadcast projection per
-    consumer. The approx tier stays two hash-aggregate passes (sketches
-    merge map-side), no sort, no window — the plan that runs at 100 TB.
-    A group over ``BOUNDS["order_stats"]`` rows sends every group to the
-    r8 window tier (_robust_stats_window_tier), which sorts with
-    spilling (group_local.pin_if_groups_fit). Measured at sf0.1:
-    4.5 -> 2.5s, 16 -> 12 jobs."""
+    Shape (guide §1.2/§4.2): the exact tier is one
+    ``group_local.cell_local`` pass (_robust_stats_kernel): numpy sorts
+    each bounded group once for the median, sorts the deviations once for
+    the MAD, and counts the outliers over the same sorted deviations. The
+    approx tier is two hash aggregates over the same pinned rows
+    (sketches merge map-side), no sort, no window — the plan that runs at
+    100 TB. A group over ``BOUNDS["order_stats"]`` rows sends every group
+    to the r8 window tier (_robust_stats_window_tier), which sorts with
+    spilling; the approx tier is the same on both paths."""
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"), F.col("l_extendedprice").alias("v")
+    )
+    exact, li = group_local.cell_local(
+        li, "g", "order_stats", _robust_stats_kernel, _ROBUST_SCHEMA,
+        _robust_stats_window_tier,
+    )
+    amed = li.groupBy("g").agg(F.percentile_approx("v", 0.5, 10000).alias("amed"))
+    av = F.abs(F.col("v") - F.col("amed"))
+    amad = li.join(F.broadcast(amed), "g").groupBy("g").agg(
+        F.percentile_approx(av, 0.5, 10000).alias("amad")
     )
 
     def _close(approx, exact):
@@ -2400,43 +2399,16 @@ def q_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # while still failing on a broken sketch or a wrong deviation pass.
         return F.abs(approx - exact) <= (F.lit(0.005) * F.abs(exact) + F.lit(1.0))
 
-    li, fits = group_local.pin_if_groups_fit(li, "g", "order_stats")
-    if not fits:
-        return _robust_stats_window_tier(li, _close)
-
-    # exact tier, Arrow pass 1: per-group n + interpolated median;
-    # production tier rides its own map-side-combinable GK aggregate
-    med = (
-        _group_median_arrow(li)
-        .join(
-            li.groupBy("g").agg(
-                F.percentile_approx("v", 0.5, 10000).alias("amed")
-            ),
-            "g",
-        )
-        .localCheckpoint(eager=True)  # |groups| rows; consumed twice
-    )
-    devs = li.join(F.broadcast(med), "g").select(
-        "g",
-        F.abs(F.col("v") - F.col("med")).alias("v"),
-        F.abs(F.col("v") - F.col("amed")).alias("av"),
-    )
-    # Arrow pass 2 fuses MAD and the outlier count (dev > 3*(1.4826*mad),
-    # same scalar IEEE tree as the old broadcast-join pass)
-    mad = _group_mad_outliers_arrow(devs.select("g", "v"))
-    amad = devs.groupBy("g").agg(
-        F.percentile_approx("av", 0.5, 10000).alias("amad")
-    )
     return (
-        med.join(mad, "g")
+        exact.join(amed, "g")
         .join(amad, "g")
         .select(
             F.col("g").alias("l_returnflag"),
-            F.col("n_med").alias("n"),
-            F.col("med").alias("median"),
+            "n",
+            "median",
             "mad",
             "n_outliers",
-            _close(F.col("amed"), F.col("med")).alias("median_ok"),
+            _close(F.col("amed"), F.col("median")).alias("median_ok"),
             _close(F.col("amad"), F.col("mad")).alias("mad_ok"),
         )
         .localCheckpoint(eager=True)

@@ -33,8 +33,8 @@ WHITELIST = {
     ("operators/relational_ext.py", "q_range_join"): (1, "static band table (a handful of rows)"),
     ("operators/relational_ext.py", "q_scalar_subquery"): (1, "1-row global average"),
     ("operators/relational_ext.py", "q_anomaly"): (1, "per-event-type stats, bounded event-type domain"),
-    ("operators/relational_ext.py", "q_quantile_bins"): (2, "3-row per-group boundary frame (bounded group domain)"),
-    ("operators/relational_ext.py", "q_robust_stats"): (1, "per-group median frame, bounded group domain"),
+    ("operators/relational_ext.py", "_quantile_bins_window_tier"): (1, "3-row per-group boundary frame (bounded group domain; the oversized-group fallback tier)"),
+    ("operators/relational_ext.py", "q_robust_stats"): (1, "per-group GK median frame, bounded group domain"),
     ("operators/relational_ext.py", "_robust_stats_window_tier"): (2, "per-group median/MAD, bounded group domain (the oversized-group fallback tier)"),
     ("operators/llmops.py", "q_dedup_recall_eval"): (4, "four 1-row scalar count aggregates"),
     ("operators/llmops.py", "q_sim_topk"): (1, "fixed 5-vector query set"),

@@ -2106,124 +2106,6 @@ def test_context_fill_laws(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r12 OPTIMIZATION round: connected_components_cell_local — the per-cell
-# union-find that replaces the pointer-jump loop on cell-blocked edge sets
-# (semantic_dedup_groups_capped / cc_cap_agreement). Contract: identical
-# labels to connected_components_jump, plus the oversized-cell fallback.
-# ---------------------------------------------------------------------------
-
-
-def test_cc_cell_local_matches_jump_on_capped_graph(spark):
-    """The fast path's labels are bit-identical to the distributed jump
-    loop's on the real capped edge set (both SF fixtures' sf0.001 arm:
-    the optimization must never change what the query computes)."""
-    from pyspark.sql import functions as F
-
-    from hadoop_distexec_spark.operators.llmops import embed_edges_capped
-    from hadoop_distexec_spark.operators.pipeline import (
-        connected_components_cell_local,
-        connected_components_jump,
-    )
-    from hadoop_distexec_spark.sources.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    emb = table(spark, sf, "embeddings")
-    nodes = emb.select(F.col("vec_id").alias("doc_id"))
-    edges = embed_edges_capped(spark, sf).select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    cell_of = emb.select(
-        F.col("vec_id").alias("doc_a"), F.col("label").alias("cell")
-    )
-    fast = connected_components_cell_local(nodes, edges.join(cell_of, "doc_a"))
-    slow = connected_components_jump(nodes, edges)
-    diff = fast.exceptAll(slow).unionAll(slow.exceptAll(fast)).count()
-    assert diff == 0
-
-
-def test_cc_cell_local_chain_and_singletons(spark):
-    """Hand-built graph: a chain 1-2-3-4 in cell A (min-label 1 must
-    reach 4 through the chain), a pair (10,11) in cell B, and untouched
-    node 99 — labels = min reachable id, singletons label themselves."""
-    from pyspark.sql import functions as F
-
-    from hadoop_distexec_spark.operators.pipeline import (
-        connected_components_cell_local,
-    )
-
-    edges = spark.createDataFrame(
-        [("A", 2, 3), ("A", 1, 2), ("A", 3, 4), ("B", 10, 11)],
-        "cell string, doc_a long, doc_b long",
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 4, 10, 11, 99)], "doc_id long"
-    )
-    got = {
-        (r["doc_id"], r["component"])
-        for r in connected_components_cell_local(nodes, edges).collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (99, 99)}
-
-
-def test_kcore_peel_cells_matches_distributed(spark):
-    """The per-cell numpy peel's surviving edge set and certificate are
-    identical to _kcore_peel's distributed loop on the real capped graph
-    (the r12 optimization must not change what q_kcore_audit computes)."""
-    from pyspark.sql import functions as F
-
-    from hadoop_distexec_spark.operators.llmops import (
-        KCORE_K,
-        KCORE_ROUNDS,
-        _kcore_peel,
-        _kcore_peel_cells,
-        embed_edges_capped,
-    )
-    from hadoop_distexec_spark.sources.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    edges = embed_edges_capped(spark, sf).select("vec_a", "vec_b")
-    sym = edges.select(
-        F.col("vec_a").alias("u"), F.col("vec_b").alias("v")
-    ).unionByName(
-        edges.select(F.col("vec_b").alias("u"), F.col("vec_a").alias("v"))
-    )
-    alive_ref, conv_ref = _kcore_peel(sym, KCORE_K, KCORE_ROUNDS)
-    emb = table(spark, sf, "embeddings").select(
-        F.col("vec_id").alias("u"), F.col("label").alias("cell")
-    )
-    peeled = _kcore_peel_cells(sym.join(emb, "u"), KCORE_K, KCORE_ROUNDS)
-    alive_new = peeled.select("u", "v")
-    diff = (
-        alive_new.exceptAll(alive_ref).unionAll(alive_ref.exceptAll(alive_new)).count()
-    )
-    assert diff == 0
-    row = peeled.agg(F.min("converged").alias("c")).collect()[0]["c"]
-    conv_new = True if row is None else bool(row)
-    assert conv_new == conv_ref
-
-
-def test_kcore_peel_cells_budget_and_empty(spark):
-    """Planted cases: a triangle+tail cell (tail peels, triangle stays,
-    converged) and a zero-survivor cell (everything peels, converged) —
-    per-cell semantics match the synchronous-rounds contract."""
-    from pyspark.sql import functions as F
-
-    from hadoop_distexec_spark.operators.llmops import _kcore_peel_cells
-
-    # cell 1: triangle 1-2-3 (degree 2 each) + tail 3-4; k=2 keeps the
-    # triangle, drops the tail. cell 2: a bare pair — fully peeled at k=2.
-    pairs = [(1, 1, 2), (1, 2, 3), (1, 1, 3), (1, 3, 4), (2, 10, 11)]
-    sym = spark.createDataFrame(
-        [(c, a, b) for c, a, b in pairs] + [(c, b, a) for c, a, b in pairs],
-        "cell long, u long, v long",
-    )
-    peeled = _kcore_peel_cells(sym, 2, 8)
-    got = {(r["u"], r["v"]) for r in peeled.collect()}
-    assert got == {(1, 2), (2, 3), (1, 3), (2, 1), (3, 2), (3, 1)}
-    assert all(r["converged"] for r in peeled.collect())
-
-
-# ---------------------------------------------------------------------------
 # ADVICE r11 degenerate-input pins (optimization round: correctness items
 # only). Both flagged divergences were probed and do NOT manifest — these
 # planted fixtures pin that agreement so a future edit cannot silently

@@ -2,7 +2,8 @@
 
 Each test pins an optimization-round rewrite to the semantics it
 replaced, on planted data where the interesting cases are forced —
-the r12 pattern (tests/test_round12_ops.py::test_cc_cell_local_*)."""
+the pattern of the group-local kernel tests in
+tests/test_group_local.py."""
 
 from __future__ import annotations
 
@@ -77,113 +78,6 @@ def test_sliding_distinct_sketch_is_duplicate_insensitive(spark):
         ).alias("e")
     ).collect()[0]["e"]
     assert est(raw) == est(raw.distinct()) == 50
-
-
-def test_robust_stats_arrow_tier_matches_window_tier(spark):
-    """q_robust_stats r13 rewrite: the per-group Arrow pass (numpy sort +
-    the shared interpolation + fused outlier count) must be bit-equal to
-    the r8 window tier it replaced, on a planted frame with even/odd
-    group sizes, duplicates, and a genuine outlier."""
-    from pyspark.sql import functions as F
-
-    import hadoop_distexec_spark.operators.relational_ext as rx
-
-    rows = [
-        ("A", 1.0), ("A", 2.0), ("A", 2.0), ("A", 100.0),      # even, outlier
-        ("B", 5.0), ("B", 6.0), ("B", 7.0),                     # odd
-        ("C", 3.5),                                             # singleton
-    ]
-    li = spark.createDataFrame(rows, "g string, v double")
-
-    def _close(a, e):
-        return F.abs(a - e) <= (F.lit(0.005) * F.abs(e) + F.lit(1.0))
-
-    win = {
-        r["l_returnflag"]: r.asDict()
-        for r in rx._robust_stats_window_tier(li, _close).collect()
-    }
-
-    med = rx._group_median_arrow(li)
-    devs = li.join(F.broadcast(med), "g").select(
-        "g", F.abs(F.col("v") - F.col("med")).alias("v")
-    )
-    mad = rx._group_mad_outliers_arrow(devs)
-    arrow = {
-        r["g"]: r.asDict() for r in med.join(mad, "g").collect()
-    }
-    assert set(win) == set(arrow)
-    for g, w in win.items():
-        a = arrow[g]
-        assert a["n_med"] == w["n"]
-        assert a["med"] == w["median"]          # bit-equal, no tolerance
-        assert a["mad"] == w["mad"]
-        assert a["n_outliers"] == w["n_outliers"]
-
-
-def test_robust_stats_forced_fallback_is_identical(spark, monkeypatch):
-    """Forcing the oversized-group guard must route q_robust_stats
-    through the window tier and return the identical frame (the
-    CC-family forced-fallback pattern)."""
-    from hadoop_distexec_spark.functions.group_local import BOUNDS
-    from hadoop_distexec_spark.registry import specs
-
-    fn = specs()["q_robust_stats"].fn
-    sf = "/root/testdata/sf0.001"
-    fast = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
-    monkeypatch.setitem(BOUNDS, "order_stats", 1)
-    slow = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
-    assert fast == slow
-
-
-def test_lpa_cell_local_matches_distributed_on_natural_graph(spark):
-    """_lpa_labels_cell_local must be bit-identical to the distributed
-    _lpa_labels loop on the real label-blocked q_dedup_embed graph."""
-    from pyspark.sql import functions as F
-
-    from hadoop_distexec_spark.operators.llmops import q_dedup_embed
-    from hadoop_distexec_spark.operators.pipeline import (
-        _lpa_labels,
-        _lpa_labels_cell_local,
-    )
-    from hadoop_distexec_spark.sources.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    emb = table(spark, sf, "embeddings")
-    nodes = emb.select(F.col("vec_id").alias("v"))
-    edges = q_dedup_embed(spark, sf).select("vec_a", "vec_b").localCheckpoint(eager=True)
-    cell_of = emb.select(F.col("vec_id").alias("vec_a"), F.col("label").alias("cell"))
-    fast = _lpa_labels_cell_local(nodes, edges.join(cell_of, "vec_a"))
-    slow = _lpa_labels(nodes, edges)
-    assert fast.exceptAll(slow).count() == 0
-    assert slow.exceptAll(fast).count() == 0
-
-
-def test_lpa_cell_local_planted_mode_and_ties(spark):
-    """Planted cell exercising the mode rule: a node with two neighbors
-    of one community and one of another adopts the majority; an exact
-    tie adopts the smaller label; isolated nodes stay themselves."""
-    from pyspark.sql import functions as F
-
-    from hadoop_distexec_spark.operators.pipeline import (
-        _lpa_labels,
-        _lpa_labels_cell_local,
-    )
-
-    # triangle {1,2,3} + pendant 4 on 3; tie node 10 between 11 and 12;
-    # isolated node 99 (no edges)
-    edges = spark.createDataFrame(
-        [(0, 1, 2), (0, 1, 3), (0, 2, 3), (0, 3, 4), (1, 10, 11), (1, 10, 12)],
-        "cell int, vec_a long, vec_b long",
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 4, 10, 11, 12, 99)], "v long"
-    )
-    fast = _lpa_labels_cell_local(nodes, edges)
-    slow = _lpa_labels(nodes, edges.select("vec_a", "vec_b"))
-    assert fast.exceptAll(slow).count() == 0
-    assert slow.exceptAll(fast).count() == 0
-    got = {r["v"]: r["lab"] for r in fast.collect()}
-    assert got[99] == 99  # isolated self-stable
 
 
 def test_pq_recenter_cb_matches_join_posexplode_chain(spark):
@@ -315,54 +209,6 @@ def test_stream_no_data_batch_skip_is_identical(spark):
     assert spark.conf.get(conf_key) == before
 
 
-def test_single_cell_cc_matches_distributed_on_ngram_graph(spark):
-    """q_dedup_groups r13: routing the small near-dup pair list through
-    connected_components_cell_local under one constant cell must label
-    identically to the distributed min-label loop."""
-    from pyspark.sql import functions as F
-
-    from hadoop_distexec_spark.operators.llmops import q_dedup_ngram
-    from hadoop_distexec_spark.operators.pipeline import (
-        connected_components,
-        connected_components_cell_local,
-    )
-    from hadoop_distexec_spark.sources.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    docs = table(spark, sf, "documents").select("doc_id")
-    edges = q_dedup_ngram(spark, sf).select("doc_a", "doc_b")
-    fast = connected_components_cell_local(
-        docs, edges.select(F.lit(0).alias("cell"), "doc_a", "doc_b")
-    )
-    slow = connected_components(docs, edges)
-    assert fast.exceptAll(slow).count() == 0
-    assert slow.exceptAll(fast).count() == 0
-
-
-def test_cc_cell_local_validate_blocking_trips_on_cross_cell_edge(spark):
-    """connected_components_cell_local's debug-path guard (VERDICT r12
-    #3): a planted doc appearing under two cells must raise instead of
-    silently duplicating labels; a clean cell-blocked set passes."""
-    import pytest as _pytest
-
-    from hadoop_distexec_spark.operators.pipeline import (
-        connected_components_cell_local,
-    )
-
-    nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "doc_id long")
-    clean = spark.createDataFrame(
-        [(0, 1, 2), (1, 3, 4)], "cell int, doc_a long, doc_b long"
-    )
-    out = connected_components_cell_local(nodes, clean, validate_blocking=True)
-    assert out.count() == 6
-    # doc 3 under cells 0 AND 1
-    dirty = spark.createDataFrame(
-        [(0, 1, 2), (0, 2, 3), (1, 3, 4)], "cell int, doc_a long, doc_b long"
-    )
-    with _pytest.raises(AssertionError, match="cell-blocking invariant"):
-        connected_components_cell_local(nodes, dirty, validate_blocking=True)
-
-
 def test_contract_line_accounts_and_stabilizes_omissions():
     """bench r13 (VERDICT r12 #2/#4): the contract line carries
     n_queries + an omitted-set md5 (an id missing from the itemized dict
@@ -406,55 +252,3 @@ def test_contract_line_accounts_and_stabilizes_omissions():
     out2["_prev_queries"] = {fast_id: 8.0}
     c2 = b._compact_contract_line(out2)
     assert fast_id in c2["queries"]
-
-
-def test_agg_percentile_arrow_matches_window_tier(spark, monkeypatch):
-    """q_agg_percentile r13: the Arrow exact tier must be bit-equal to
-    the window tier at every percentile point — forced by running the
-    registered fn both under and over the group-size guard."""
-    from hadoop_distexec_spark.functions.group_local import BOUNDS
-    from hadoop_distexec_spark.registry import specs
-
-    fn = specs()["q_agg_percentile"].fn
-    sf = "/root/testdata/sf0.001"
-    fast = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
-    monkeypatch.setitem(BOUNDS, "order_stats", 0)
-    slow = {r["l_returnflag"]: r.asDict() for r in fn(spark, sf).collect()}
-    assert fast == slow
-
-
-def test_tri_counts_cell_local_matches_oriented_pipeline(spark):
-    """q_triangle_count r13: the per-cell enumeration must equal the
-    degree-oriented join pipeline row-for-row on the natural graph and
-    on a planted graph with a clique, a chain, and shared-triangle
-    vertices."""
-    from pyspark.sql import functions as F
-
-    import hadoop_distexec_spark.operators.llmops as L
-    from hadoop_distexec_spark.sources.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    emb = table(spark, sf, "embeddings")
-    edges = L.q_dedup_embed(spark, sf).select("vec_a", "vec_b").localCheckpoint(
-        eager=True
-    )
-    cell_of = emb.select(F.col("vec_id").alias("vec_a"), F.col("label").alias("cell"))
-    fast = L._tri_counts_cell_local(edges.join(cell_of, "vec_a"))
-    slow = L.triangle_counts(
-        edges.select(F.col("vec_a").alias("va"), F.col("vec_b").alias("vb"))
-    )
-    assert fast.exceptAll(slow).count() == 0
-    assert slow.exceptAll(fast).count() == 0
-
-    # planted: K4 on {1,2,3,4} + triangle {5,6,7} sharing vertex 4 via
-    # chain edges (4,5) — chain edges contribute no triangles
-    rows = [
-        (0, 1, 2), (0, 1, 3), (0, 1, 4), (0, 2, 3), (0, 2, 4), (0, 3, 4),
-        (0, 4, 5), (0, 5, 6), (0, 5, 7), (0, 6, 7),
-    ]
-    pe = spark.createDataFrame(rows, "cell int, vec_a long, vec_b long")
-    got = {
-        r["vec_id"]: r["n_tri"]
-        for r in L._tri_counts_cell_local(pe).collect()
-    }
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3, 5: 1, 6: 1, 7: 1}
