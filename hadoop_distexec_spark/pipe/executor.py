@@ -43,12 +43,18 @@ through Spark — file bytes stream directly disk -> child process -> disk
 on the executor, never through the JVM, exactly like the reference
 (128 KiB buffered streams, distexec/ExecFilesMapper.java:35).
 
-Scale design: the manifest is a DataFrame (distributed listing, see
-sources/manifest.py); partitions are balanced by *bytes* with the same
-greedy rule as the reference's ExecInputFormat (DistExec.java:132-177) via
-``plan_partitions``, and ``limit_manifest`` cuts a strict prefix; both
-read their running totals from the one distributed prefix sum,
-``functions.prefix_sum.running_sums``. Tasks write independently (no
+Scale design: the manifest is a DataFrame (see sources/manifest.py);
+partitions are balanced by *bytes* with the same greedy rule as the
+reference's ExecInputFormat (DistExec.java:132-177) via
+``plan_partitions``, and ``limit_manifest`` cuts a strict prefix. Both
+take one of two paths, selected by ``manifest.isLocal()``. A manifest
+whose walk stayed on the driver (below ``_DRIVER_ROWS_CAP`` rows) is read
+once with ``toArrow()`` and planned on the driver with one sort and one
+numpy cumsum, as the reference plans on its client; the planner then
+returns ``pinned=None``. A fanned-out manifest reads its running totals
+from the one distributed prefix sum, ``functions.prefix_sum.running_sums``,
+and returns the checkpoint it pinned. The default width is one wave,
+``min(files, defaultParallelism)``. Tasks write independently (no
 cross-task coordination; speculative execution must stay off,
 DistExec.java:443-445).
 """
@@ -64,7 +70,9 @@ import uuid
 from typing import Iterable, Iterator
 from urllib.parse import urlsplit
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -341,32 +349,62 @@ def _exec_one(
     return ("FAIL", rc, bytes_in, bytes_out, bytes_err, msg)
 
 
+def _in_src_order(t: pa.Table) -> tuple[pa.Table, np.ndarray]:
+    """A driver-resident manifest's rows in src_path order (byte order, as
+    Spark sorts strings) and each row's bytes before it: the driver twin of
+    ``prefix_sum.running_sums`` for the planner and the limits."""
+    t = t.sort_by("src_path")
+    size = t["size"].to_numpy()
+    return t, np.cumsum(size) - size
+
+
 def plan_partitions(
     manifest: DataFrame, n_tasks: int | None = None
-) -> tuple[DataFrame, int, DataFrame]:
+) -> tuple[DataFrame, int, DataFrame | None]:
     """Assign manifest rows to byte-balanced bins — the reference's greedy
     prefix-sum split planning (ExecInputFormat.getSplits,
     DistExec.java:132-177): in src_path order, a row's bin is the bytes
     before it divided by ``ceil(total / n_tasks)``, capped at the last
     bin. Directory rows are planned too; their size is 0 (the reference's
-    manifest key, DistExec.java:592), so no file's bin moves, and the
-    default ``n_tasks`` counts files only. The bytes-before column comes
-    from the distributed prefix sum (``functions.prefix_sum.running_sums``),
-    so no single-partition window runs and the driver sees O(#partitions)
-    numbers.
+    manifest key, DistExec.java:592), so no file's bin moves.
 
-    Returns (planned, n_tasks, pinned) — ``pinned`` is the local
-    checkpoint ``planned`` reads; its blocks are freed when it is
-    garbage-collected (``unpersist`` does not release them)."""
-    is_file = (~F.col("is_dir")).cast("long")
-    ranked, totals, pinned = prefix_sum.running_sums(
-        manifest.withColumn("_files", is_file), "src_path", ["size", "_files"]
-    )
+    The default ``n_tasks`` is one map per file, at most one wave:
+    ``min(files, defaultParallelism)``, the reference's setMapCount
+    (DistExec.java:419-426) with the cluster's slots as the cap. A wider
+    plan only queues tasks behind the first wave, and each Python task
+    costs about 0.2 s of worker set-up (SCALE.md).
+
+    Two paths, one rule. When ``manifest.isLocal()`` (the walk stayed on
+    the driver, ``build_manifest``), the planner reads it with one
+    ``toArrow()``, sorts and sums on the driver, and returns the planned
+    rows as a new local frame: one Spark job, and ``pinned`` is None.
+    Otherwise the bytes-before column comes from the distributed prefix
+    sum (``functions.prefix_sum.running_sums``), so no single-partition
+    window runs and the driver sees O(#partitions) numbers; ``pinned`` is
+    then the local checkpoint ``planned`` reads, freed when it is
+    garbage-collected (``unpersist`` does not release it).
+
+    Returns (planned, n_tasks, pinned)."""
+    spark = manifest.sparkSession
+    local = manifest.isLocal()
+    if local:
+        table, before = _in_src_order(manifest.toArrow())
+        files = int((~table["is_dir"].to_numpy(zero_copy_only=False)).sum())
+        total = int(table["size"].to_numpy().sum())
+    else:
+        is_file = (~F.col("is_dir")).cast("long")
+        ranked, totals, pinned = prefix_sum.running_sums(
+            manifest.withColumn("_files", is_file), "src_path", ["size", "_files"]
+        )
+        files, total = totals["_files"], totals["size"]
     if n_tasks is None:
-        cap = manifest.sparkSession.sparkContext.defaultParallelism * 4
-        # one map per file, capped — reference setMapCount (DistExec.java:419-426)
-        n_tasks = max(1, min(totals["_files"], cap))
-    target = max(1, -(-totals["size"] // n_tasks))  # ceil div
+        n_tasks = max(1, min(files, spark.sparkContext.defaultParallelism))
+    target = max(1, -(-total // n_tasks))  # ceil div
+    if local:
+        bins = np.minimum(before // target, n_tasks - 1).astype(np.int32)
+        schema = T.StructType([*manifest.schema, T.StructField("bin", T.IntegerType(), False)])
+        planned = spark.createDataFrame(table.append_column("bin", pa.array(bins)), schema)
+        return planned, n_tasks, None
     # exact bigint division, never IEEE
     planned = ranked.withColumn(
         "bin",
@@ -385,14 +423,26 @@ def limit_manifest(
     keep files, in deterministic src_path order, while the running file
     count stays < filelimit and the running byte total stays <= sizelimit.
 
-    Both running totals come from the distributed prefix sum and are
-    monotone, so a JVM-side filter on them keeps a strict prefix.
-    Directory records are all kept (empty-dir preservation is orthogonal
-    to the copy budget, and dropping a parent dir of a kept file would be
-    wrong).
+    Both running totals are monotone, so a filter on them keeps a strict
+    prefix. A driver-resident manifest is cut on the driver with the
+    planner's own sort and sum and stays local, so ``plan_partitions``
+    keeps its driver path; any other comes from the distributed prefix
+    sum and a JVM-side filter. Directory records are all kept
+    (empty-dir preservation is orthogonal to the copy budget, and
+    dropping a parent dir of a kept file would be wrong).
     """
     if filelimit is None and sizelimit is None:
         return manifest
+    if manifest.isLocal():
+        table = manifest.toArrow()
+        files, before = _in_src_order(table.filter(pc.invert(table["is_dir"])))
+        keep = np.ones(len(files), dtype=bool)
+        if filelimit is not None:
+            keep &= np.arange(len(files)) < filelimit
+        if sizelimit is not None:
+            keep &= before + files["size"].to_numpy() <= sizelimit
+        kept = pa.concat_tables([files.filter(pa.array(keep)), table.filter(table["is_dir"])])
+        return manifest.sparkSession.createDataFrame(kept, manifest.schema)
     files = manifest.filter(~F.col("is_dir"))
     dirs = manifest.filter(F.col("is_dir"))
     ranked, _, _ = prefix_sum.running_sums(

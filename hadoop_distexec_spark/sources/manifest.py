@@ -5,7 +5,8 @@ The reference walks the whole tree on the *client* with an explicit stack
 Here the walk runs in BFS rounds, on the driver up to a row cap and on
 executors past it; ``build_manifest`` states the rule.
 
-Manifest schema (SURVEY.md §1): src_path, rel_dst, size, is_dir, mtime.
+Manifest schema (SURVEY.md §1): src_path, rel_dst, size, is_dir, mtime
+(``MANIFEST_SCHEMA``, plus the raw ``mtime_epoch``).
 ``rel_dst`` implements the reference's ``makeRelative`` rebasing
 (DistExec.java:388-410) including the single-source "special" root rule
 (DistExec.java:545,553).
@@ -24,12 +25,16 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from hadoop_distexec_spark.errors import InvalidInputError
 from hadoop_distexec_spark.fs import FileSystem, resolve_fs
 
+# the manifest as ``build_manifest`` returns it, on either walk path
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("src_path", T.StringType(), False),
+        T.StructField("rel_dst", T.StringType(), False),
         T.StructField("size", T.LongType(), False),
         T.StructField("is_dir", T.BooleanType(), False),
         T.StructField("mtime", T.TimestampType(), True),
+        # nullable: object-store backends may not report mtimes
+        T.StructField("mtime_epoch", T.DoubleType(), True),
     ]
 )
 
@@ -42,9 +47,7 @@ _DRIVER_ROWS_CAP = 1 << 16
 # the walk's rows before the rel_dst projection
 _WALK_SCHEMA = T.StructType(
     [
-        *MANIFEST_SCHEMA.fields,
-        # nullable: object-store backends may not report mtimes
-        T.StructField("mtime_epoch", T.DoubleType(), True),
+        *(f for f in MANIFEST_SCHEMA.fields if f.name != "rel_dst"),
         T.StructField("is_link", T.BooleanType(), False),
         T.StructField("root", T.StringType(), False),
     ]
@@ -147,16 +150,21 @@ def build_manifest(
     than ``_DRIVER_ROWS_CAP`` rows, so it holds at most the cap plus one
     directory's children. Those rows become one typed Arrow table: the
     manifest plans as a ``LocalTableScan`` and no action on it starts a
-    Python task. Past the cap, the rest of the round and every later round
-    fan out on executors in at most ``defaultParallelism`` tasks, as a
-    ``mapInArrow`` over the round's paths. Each round is pinned by a lazy
-    ``localCheckpoint``: the collect of its directory names fills it, a
-    later action on the manifest reads it without a Python task, and its
-    blocks are freed when the manifest is garbage-collected, so nothing
-    enters the session cache. The price is recovery: a lost checkpoint
-    block fails the manifest's later readers, where a persisted round
-    would have been listed again (SCALE.md). Only directory names come
-    back to the driver.
+    Python task. When no round fanned out, ``rel_dst`` is rebased on the
+    driver too (``make_relative``), so the manifest is that table alone and
+    ``isLocal()`` is true, and stays true when the frame is cached: the
+    split planner, the limits and delete-sync keep their bookkeeping on
+    the driver (``pipe.executor.plan_partitions``). Past the cap, the rest
+    of the round and every later round fan out on executors in at most
+    ``defaultParallelism`` tasks, as a ``mapInArrow`` over the round's
+    paths, and ``rel_dst`` is a column expression over the union. Each
+    round is pinned by a lazy ``localCheckpoint``: the collect of its
+    directory names fills it, a later action on the manifest reads it
+    without a Python task, and its blocks are freed when the manifest is
+    garbage-collected, so nothing enters the session cache. The price is
+    recovery: a lost checkpoint block fails the manifest's later readers,
+    where a persisted round would have been listed again (SCALE.md). Only
+    directory names come back to the driver.
     """
     if isinstance(srcs, str):
         srcs = [srcs]
@@ -217,16 +225,17 @@ def build_manifest(
                 # `ln -s . loop` cycle would otherwise walk forever.
                 frontier = [p for p, is_link in dirs if not is_link]
 
-    df = spark.createDataFrame(pa.Table.from_batches([_walk_batch(rows)]), _WALK_SCHEMA)
+    walked = pa.Table.from_batches([_walk_batch(rows)])
+    if not rounds:
+        # the whole walk stayed on the driver: rebase it here too
+        rel = [make_relative(r[6], r[0]) for r in rows]
+        local = walked.add_column(1, "rel_dst", pa.array(rel, pa.string()))
+        return spark.createDataFrame(local.select(MANIFEST_SCHEMA.names), MANIFEST_SCHEMA)
+    df = spark.createDataFrame(walked, _WALK_SCHEMA)
     for listing in rounds:
         df = df.union(listing)
     return df.select(
-        "src_path",
-        _rel_expr().alias("rel_dst"),
-        "size",
-        "is_dir",
-        "mtime",
-        "mtime_epoch",
+        *(_rel_expr().alias(c) if c == "rel_dst" else c for c in MANIFEST_SCHEMA.names)
     )
 
 

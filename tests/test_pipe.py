@@ -384,15 +384,17 @@ def test_sizelimit_truncates_prefix(spark, tree, tmp_path):
 
 
 def test_limits_cut_inside_a_later_partition(spark, tmp_path, monkeypatch):
-    """-filelimit and -sizelimit cuts that fall inside a later range
-    partition keep exactly the sequential strict prefix over sorted
-    src_path, so the per-partition offsets are applied; every directory
-    row is kept."""
+    """-filelimit and -sizelimit cuts keep exactly the sequential strict
+    prefix over sorted src_path, and every directory row, on both paths:
+    a fanned-out manifest is cut by the distributed prefix sum, where the
+    cuts fall inside a later range partition, so the per-partition
+    offsets are applied; a driver manifest is cut on the driver, runs no
+    prefix sum and stays local, so the planner keeps its driver path."""
     import random
 
     from hadoop_distexec_spark.functions import prefix_sum
     from hadoop_distexec_spark.pipe.executor import limit_manifest
-    from hadoop_distexec_spark.sources.manifest import build_manifest
+    from hadoop_distexec_spark.sources import manifest as manifest_mod
 
     monkeypatch.setattr(prefix_sum, "ROWS_PER_PART", 10)
     widths = []
@@ -410,12 +412,8 @@ def test_limits_cut_inside_a_later_partition(spark, tmp_path, monkeypatch):
     sizes = [rng.randrange(1, 500) for _ in range(120)]
     for i, n in enumerate(sizes):
         (src / f"f{i:03d}.bin").write_bytes(b"x" * n)
-    manifest = build_manifest(spark, str(src))
-    walked = manifest.collect()
-    files = sorted((r["src_path"], r["size"]) for r in walked if not r["is_dir"])
-    dirs = sorted(r["src_path"] for r in walked if r["is_dir"])
 
-    def prefix(filelimit, sizelimit):
+    def prefix(files, filelimit, sizelimit):
         kept, total = [], 0
         for path, size in files:
             if filelimit is not None and len(kept) >= filelimit:
@@ -427,15 +425,27 @@ def test_limits_cut_inside_a_later_partition(spark, tmp_path, monkeypatch):
         return kept
 
     cut_size = sum(sizes[:93]) + sizes[93] // 2  # file 93 would cross it
-    for filelimit, sizelimit in ((77, None), (None, cut_size), (100, cut_size)):
-        rows = limit_manifest(manifest, filelimit, sizelimit).collect()
-        assert sorted(r["src_path"] for r in rows if not r["is_dir"]) == prefix(
-            filelimit, sizelimit
-        )
-        assert sorted(r["src_path"] for r in rows if r["is_dir"]) == dirs
-    assert len(prefix(None, cut_size)) == 93
-    assert widths == [min(spark.sparkContext.defaultParallelism, 12)] * 3
-    assert widths[0] > 1
+    for walk, cap in (("fanout", 0), ("driver", manifest_mod._DRIVER_ROWS_CAP)):
+        monkeypatch.setattr(manifest_mod, "_DRIVER_ROWS_CAP", cap)
+        widths.clear()
+        manifest = manifest_mod.build_manifest(spark, str(src))
+        walked = manifest.collect()
+        files = sorted((r["src_path"], r["size"]) for r in walked if not r["is_dir"])
+        dirs = sorted(r["src_path"] for r in walked if r["is_dir"])
+        for filelimit, sizelimit in ((77, None), (None, cut_size), (100, cut_size)):
+            limited = limit_manifest(manifest, filelimit, sizelimit)
+            assert limited.isLocal() == (walk == "driver")
+            rows = limited.collect()
+            assert sorted(r["src_path"] for r in rows if not r["is_dir"]) == prefix(
+                files, filelimit, sizelimit
+            )
+            assert sorted(r["src_path"] for r in rows if r["is_dir"]) == dirs
+        assert len(prefix(files, None, cut_size)) == 93
+        if walk == "fanout":
+            assert widths == [min(spark.sparkContext.defaultParallelism, 12)] * 3
+            assert widths[0] > 1
+        else:
+            assert widths == []
 
 
 def test_update_rejects_bad_mode(spark, tree, tmp_path):
@@ -479,14 +489,38 @@ def test_pipe_rows_many_batches_per_partition(spark):
     assert got == {i: "" if i % 13 == 0 else f"W{i}" for i in range(500)}
 
 
-def test_split_plan_byte_balance(spark, tmp_path):
-    """The distributed prefix-sum planner reproduces the reference's
-    greedy byte-balance: every bin's byte total stays within one max-file
-    of the target (DistExec.java:149-176 invariant)."""
-    import random
-
+def _plan_both_paths(spark, monkeypatch, src, n_tasks=None):
+    """``plan_partitions`` over a forced fan-out walk and a driver walk of
+    ``src``. Both must give the same ``(src_path, bin)`` rows and
+    ``n_tasks``; the driver plan pins nothing. Returns the driver plan's
+    rows in src_path order and its ``n_tasks``; the driver cap is back at
+    its default afterwards."""
     from hadoop_distexec_spark.pipe.executor import plan_partitions
-    from hadoop_distexec_spark.sources.manifest import build_manifest
+    from hadoop_distexec_spark.sources import manifest
+
+    plans = {}
+    for walk, cap in (("fanout", 0), ("driver", manifest._DRIVER_ROWS_CAP)):
+        monkeypatch.setattr(manifest, "_DRIVER_ROWS_CAP", cap)
+        m = manifest.build_manifest(spark, str(src))
+        assert m.isLocal() == (walk == "driver")
+        planned, n, pinned = plan_partitions(m, n_tasks)
+        assert (pinned is None) == (walk == "driver")
+        plans[walk] = (sorted(planned.collect(), key=lambda r: r["src_path"]), n)
+    rows, n = plans["driver"]
+    fan_rows, fan_n = plans["fanout"]
+    assert [(r["src_path"], r["bin"]) for r in rows] == [
+        (r["src_path"], r["bin"]) for r in fan_rows
+    ]
+    assert n == fan_n
+    return rows, n
+
+
+def test_split_plan_byte_balance(spark, tmp_path, monkeypatch):
+    """The prefix-sum planner reproduces the reference's greedy
+    byte-balance: every bin's byte total stays within one max-file of the
+    target (DistExec.java:149-176 invariant), on the driver plan and the
+    distributed one alike."""
+    import random
 
     src = tmp_path / "many"
     (src / "empty").mkdir(parents=True)
@@ -496,11 +530,8 @@ def test_split_plan_byte_balance(spark, tmp_path):
     for i, n in enumerate(sizes):
         parent = src / "nest" / "deep" if i % 10 == 0 else src
         (parent / f"f{i:03d}.bin").write_bytes(b"x" * n)
-    manifest = build_manifest(spark, str(src))
-    planned, n_tasks, cached = plan_partitions(manifest, n_tasks=8)
-    rows = planned.collect()
-    cached.unpersist()
-    files = sorted((r for r in rows if not r["is_dir"]), key=lambda r: r["src_path"])
+    rows, n_tasks = _plan_both_paths(spark, monkeypatch, src, n_tasks=8)
+    files = [r for r in rows if not r["is_dir"]]
     assert len(files) == 200
     per_bin = {}
     for r in files:
@@ -523,10 +554,36 @@ def test_split_plan_byte_balance(spark, tmp_path):
         (few / d).mkdir(parents=True)
     for name in ("x", "a/y", "c/d/z"):
         (few / name).write_bytes(b"q")
-    planned, n_tasks, cached = plan_partitions(build_manifest(spark, str(few)))
-    assert planned.count() == 9
-    cached.unpersist()
+    rows, n_tasks = _plan_both_paths(spark, monkeypatch, few)
+    assert len(rows) == 9
     assert n_tasks == 3
+
+
+@pytest.mark.parametrize("n_tasks", [None, 3, 64])
+def test_split_plan_paths_agree_on_edge_inputs(spark, tmp_path, monkeypatch, n_tasks):
+    """The driver plan and the distributed one agree row for row on
+    nested and empty dirs, zero-byte files, one file larger than the
+    target, upper-case and non-ASCII names (byte order, as Spark sorts
+    strings; the rows here are in code-point order, the same order) and
+    more tasks than files; the default width is one wave,
+    ``min(files, defaultParallelism)``."""
+    src = tmp_path / "edge"
+    (src / "a" / "b").mkdir(parents=True)
+    (src / "empty").mkdir()
+    for name, n in (
+        ("z0.bin", 0), ("a/z1.bin", 0), ("big.bin", 40_000), ("a/b/c.bin", 700),
+        ("é-名.txt", 311), ("e.txt", 5), ("Z.txt", 90), ("a/b/empty.bin", 0),
+    ):
+        (src / name).write_bytes(b"x" * n)
+    rows, n = _plan_both_paths(spark, monkeypatch, src, n_tasks)
+    files = [r for r in rows if not r["is_dir"]]
+    want = n_tasks or min(len(files), spark.sparkContext.defaultParallelism)
+    assert n == want
+    target = max(1, -(-sum(r["size"] for r in files) // want))
+    before = 0
+    for r in rows:
+        assert r["bin"] == min(before // target, want - 1), r
+        before += r["size"]
 
 
 def test_flat_manifest_replans_at_full_width(spark, tmp_path, monkeypatch):
@@ -540,7 +597,11 @@ def test_flat_manifest_replans_at_full_width(spark, tmp_path, monkeypatch):
     from hadoop_distexec_spark.pipe import executor
     from hadoop_distexec_spark.sources.manifest import build_manifest
 
+    from hadoop_distexec_spark.sources import manifest as manifest_mod
+
     monkeypatch.setattr(prefix_sum, "ROWS_PER_PART", 10)
+    # the distributed planner is the one with a width to size
+    monkeypatch.setattr(manifest_mod, "_DRIVER_ROWS_CAP", 0)
     src = tmp_path / "flat"
     src.mkdir()
     for i in range(120):
@@ -582,15 +643,16 @@ def test_tokenizer_and_exit_policy():
     assert exit_ok(["cat"], 0)
 
 
-def test_split_plan_bins_contiguous_and_deterministic(spark, tmp_path):
+def test_split_plan_bins_contiguous_and_deterministic(spark, tmp_path, monkeypatch):
     """The prefix-sum rule implies bin ids are NONDECREASING in global
     src_path order (each bin is a contiguous byte range of the ordered
     manifest) — pins the JVM-side window/offset-map assignment (round 8)
     to the exact semantics the Python mapPartitionsWithIndex pass had,
-    and that two plans of the same manifest agree row-for-row. The pipe
-    map's ``repartitionById(n_tasks, "bin")`` puts bin b in partition b
-    under AQE, also when some bins are empty (one file spanning four
-    targets leaves bins with no row)."""
+    that the driver plan agrees with it, and that two plans of the same
+    manifest agree row-for-row. The pipe map's
+    ``repartitionById(n_tasks, "bin")`` puts bin b in partition b under
+    AQE, also when some bins are empty (one file spanning four targets
+    leaves bins with no row)."""
     import random
 
     from hadoop_distexec_spark.pipe.executor import plan_partitions
@@ -602,25 +664,23 @@ def test_split_plan_bins_contiguous_and_deterministic(spark, tmp_path):
     for i in range(150):
         (src / f"f{i:03d}.bin").write_bytes(b"x" * rng.randrange(1, 2048))
     (src / "f075big.bin").write_bytes(b"x" * 150 * 1024)
-    manifest = build_manifest(spark, str(src))
-    planned, n_tasks, cached = plan_partitions(manifest, n_tasks=8)
-    rows = sorted(planned.collect(), key=lambda r: r["src_path"])
+    rows, n_tasks = _plan_both_paths(spark, monkeypatch, src, n_tasks=8)
     bins = [r["bin"] for r in rows]
     assert bins == sorted(bins), "bins must be contiguous in src_path order"
     assert bins[0] == 0 and max(bins) <= 7
     assert len(set(bins)) < n_tasks
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    manifest = build_manifest(spark, str(src))
+    planned, _, _ = plan_partitions(manifest, n_tasks=8)
     placed = planned.repartitionById(n_tasks, "bin").select(
         "bin", F.spark_partition_id().alias("pid")
     )
     assert all(r["pid"] == r["bin"] for r in placed.collect())
-    planned2, _, cached2 = plan_partitions(manifest, n_tasks=8)
+    planned2, _, _ = plan_partitions(manifest, n_tasks=8)
     rows2 = sorted(planned2.collect(), key=lambda r: r["src_path"])
     assert [(r["src_path"], r["bin"]) for r in rows] == [
         (r["src_path"], r["bin"]) for r in rows2
     ]
-    cached.unpersist()
-    cached2.unpersist()
 
 
 def test_tmp_dir_removed_when_job_raises(spark, tree, tmp_path, monkeypatch):
@@ -896,9 +956,9 @@ def test_fail_log_one_part_per_task(spark, tmp_path):
         body = "café\n".encode("latin-1") if i % 5 == 0 else f"ok {i}\n".encode()
         (src / f"f{i:02d}.txt").write_bytes(body)
     dst = tmp_path / "out"
-    planned, _, pinned = plan_partitions(build_manifest(spark, str(src), str(dst)), 4)
+    # a driver plan pins nothing (pinned is None)
+    planned, _, _ = plan_partitions(build_manifest(spark, str(src), str(dst)), 4)
     bin_of = {r["rel_dst"]: r["bin"] for r in planned.collect()}
-    pinned.unpersist()
 
     res = distexec(spark, str(src), str(dst), "iconv -f UTF-8 -t ASCII", n_tasks=4)
     fails = res.filter(F.col("status") == "FAIL").collect()
