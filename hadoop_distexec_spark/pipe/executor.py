@@ -31,7 +31,10 @@ Semantics checklist, each with its reference citation
 - FAIL log records written by the map itself: each task commits its
   FAIL lines as one part file, ``<dst>/_distexec_logs/part-<bin>``
   (distexec/ExecFilesMapper.java:184-187; log path defaulting
-  DistExec.java:507-521).
+  DistExec.java:507-521). With the ``update="hash"`` state it is the
+  durable record of a run, as the reference's counters and log are; the
+  per-file result rows are pinned by one eager ``localCheckpoint`` on
+  every filesystem, never written under dst.
 
 Why not ``RDD.pipe``: Spark's pipe is per-partition and line-oriented; the
 reference's contract is per-*file* whole-stream with separate stderr, lazy
@@ -84,9 +87,9 @@ from hadoop_distexec_spark.functions import prefix_sum
 from hadoop_distexec_spark.pipe.cmdline import exit_ok, tokenize
 from hadoop_distexec_spark.sources.manifest import build_manifest
 
-# Schemes Spark's own Hadoop FS layer can read/write (the results ledger,
-# the hash state). Anything else — e.g. a custom FileSystem implementation —
-# gets its results pinned with a localCheckpoint and no hash state.
+# Schemes Spark's own Hadoop FS layer can read/write, so the only dsts that
+# can hold the update="hash" state. Any other scheme — e.g. a custom
+# FileSystem implementation — runs without it.
 _SPARK_NATIVE_SCHEMES = {
     "", "file", "hdfs", "viewfs", "s3", "s3a", "s3n",
     "gs", "wasb", "wasbs", "abfs", "abfss", "oss", "o3fs",
@@ -474,9 +477,12 @@ def distexec(
     """Distributed per-file command execution — `hadoop distexec src dst cmd`
     (reference README.md:9-10) as a Spark job.
 
-    Returns the per-file results DataFrame (RESULT_SCHEMA). Each map task
-    that FAILs a file also writes its ``FAIL <rel_dst> : <error>`` lines
-    to ``<dst>/_distexec_logs/part-<bin>``, committed like any output; the
+    Returns the per-file results DataFrame (RESULT_SCHEMA), pinned by an
+    eager ``localCheckpoint`` before tmp is torn down: later actions read
+    the pinned rows and never re-run a child, and a lost executor makes
+    them fail rather than re-execute. Each map task that FAILs a file also
+    writes its ``FAIL <rel_dst> : <error>`` lines to
+    ``<dst>/_distexec_logs/part-<bin>``, committed like any output; the
     log directory is cleared at the start of every run (reference
     ExecFilesMapper.java:184-187, log path DistExec.java:507-521).
 
@@ -657,25 +663,15 @@ def distexec(
         # one task per bin, exactly: repartitionById sends bin b to partition
         # b (a hash repartition would collide bins into one task and leave
         # others empty, destroying the byte balance)
-        results = to_run.repartitionById(n_tasks, "bin").mapInArrow(run_batch, RESULT_SCHEMA)
-        # Make the results durable BEFORE tearing down tmp: a cached-only frame
-        # would silently re-run every subprocess if partitions were evicted and
-        # the caller acted on it again after tmp_dir is gone. The ledger lives
-        # under dst when Spark's Hadoop layer can write that scheme (local,
-        # hdfs, s3a, ...). For other FileSystem impls, pin the computed rows
-        # with an eager localCheckpoint — executors cannot be assumed to share
-        # a driver-local scratch dir, so a parquet round-trip through
-        # tempfile.mkdtemp would land the parts on worker disks and the
-        # driver's read-back would see an empty directory.
-        if _spark_native(dst):
-            results_dir = dst_fs.join(dst, "_distexec_results")
-            results.write.mode("overwrite").parquet(results_dir)
-            results = spark.read.schema(RESULT_SCHEMA).parquet(results_dir)
-        else:
-            results = results.localCheckpoint(eager=True)
+        # pinned before tmp is torn down, so no later action re-runs a child
+        results = (
+            to_run.repartitionById(n_tasks, "bin")
+            .mapInArrow(run_batch, RESULT_SCHEMA)
+            .localCheckpoint(eager=True)
+        )
     finally:
         # tmp goes on every exit (reference DistExec.java:333-338); on
-        # success this runs after the durability write, so no result row
+        # success this runs after the results are pinned, so no result row
         # can still need a tmp file
         if tmp_dir is not None:
             try:

@@ -49,7 +49,7 @@ def q_pipe_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         src = _materialize_tree(spark, sf_dir, base)
         results = distexec(spark, src, os.path.join(base, "out"), "cat")
-        out = (
+        return (
             results.filter(F.col("status") == "EXECUTED")
             .select(
                 "rel_dst",
@@ -59,8 +59,6 @@ def q_pipe_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("rel_dst")
         )
-        out = spark.createDataFrame(out.collect(), out.schema)  # detach from tmp files
-        return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -88,12 +86,10 @@ def q_pipe_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = _materialize_tree(spark, sf_dir, base, n_docs=32)
         dst = os.path.join(base, "out")
         results = distexec(spark, src, dst, "grep -c spark")
-        rows = results.filter(F.col("status") == "EXECUTED").select(
+        return results.filter(F.col("status") == "EXECUTED").select(
             "rel_dst",
             "exit_code",
             (F.col("bytes_out") > 0).alias("matched"),
         )
-        out = spark.createDataFrame(rows.collect(), rows.schema)
-        return out
     finally:
         shutil.rmtree(base, ignore_errors=True)

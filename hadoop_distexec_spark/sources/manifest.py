@@ -7,9 +7,10 @@ executors past it; ``build_manifest`` states the rule.
 
 Manifest schema (SURVEY.md §1): src_path, rel_dst, size, is_dir, mtime
 (``MANIFEST_SCHEMA``, plus the raw ``mtime_epoch``).
-``rel_dst`` implements the reference's ``makeRelative`` rebasing
-(DistExec.java:388-410) including the single-source "special" root rule
-(DistExec.java:545,553).
+``rel_dst`` is the reference's ``makeRelative`` rebasing
+(DistExec.java:388-410), applied by ``make_relative`` to each row where it
+is listed, on the driver or in a fan-out task, including the single-source
+"special" root rule (DistExec.java:545,553).
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ import datetime
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -44,13 +44,9 @@ MANIFEST_SCHEMA = T.StructType(
 # the fan-out at this size (SCALE.md).
 _DRIVER_ROWS_CAP = 1 << 16
 
-# the walk's rows before the rel_dst projection
+# the walk's rows: the manifest plus the link flag that stops expansion
 _WALK_SCHEMA = T.StructType(
-    [
-        *(f for f in MANIFEST_SCHEMA.fields if f.name != "rel_dst"),
-        T.StructField("is_link", T.BooleanType(), False),
-        T.StructField("root", T.StringType(), False),
-    ]
+    [*MANIFEST_SCHEMA.fields, T.StructField("is_link", T.BooleanType(), False)]
 )
 # its Arrow twin types every walk batch (``_walk_batch``)
 _WALK_ARROW_SCHEMA = to_arrow_schema(_WALK_SCHEMA)
@@ -69,10 +65,13 @@ def make_relative(root: str, path: str) -> str | None:
     return path[len(prefix) :].rstrip("/")
 
 
-def _stat_entry(
-    path: str, fs: FileSystem
-) -> tuple[str, int, bool, datetime.datetime | None, float | None, bool]:
-    """(path, size, is_dir, mtime_utc, mtime_epoch, is_link).
+# one walk row, in _WALK_SCHEMA order
+_WalkRow = tuple[str, str, int, bool, datetime.datetime | None, float | None, bool]
+
+
+def _stat_entry(path: str, root: str, fs: FileSystem) -> _WalkRow:
+    """(path, rel_dst, size, is_dir, mtime_utc, mtime_epoch, is_link),
+    ``rel_dst`` being ``make_relative(root, path)``.
 
     ``mtime`` is UTC-aware: PySpark converts a *naive* datetime with the
     host's local timezone, which shifted it by the host's offset.
@@ -88,13 +87,20 @@ def _stat_entry(
         if st.mtime_epoch is not None
         else None
     )
-    return (path, 0 if st.is_dir else st.size, st.is_dir, mtime, st.mtime_epoch, st.is_link)
+    return (
+        path,
+        make_relative(root, path),
+        0 if st.is_dir else st.size,
+        st.is_dir,
+        mtime,
+        st.mtime_epoch,
+        st.is_link,
+    )
 
 
-def _list_dir(
-    path: str, fs: FileSystem
-) -> list[tuple[str, int, bool, datetime.datetime | None, float | None, bool]]:
-    """One directory's direct children (driver or executor side).
+def _list_dir(path: str, root: str, fs: FileSystem) -> list[_WalkRow]:
+    """One directory's direct children as walk rows (driver or executor
+    side).
 
     PermissionError propagates: an unreadable directory must fail the job
     (like the reference's client-side walk would), never silently vanish
@@ -108,7 +114,7 @@ def _list_dir(
         return out
     for child in children:
         try:
-            out.append(_stat_entry(child, fs))
+            out.append(_stat_entry(child, root, fs))
         except FileNotFoundError:
             continue
     return out
@@ -150,21 +156,22 @@ def build_manifest(
     than ``_DRIVER_ROWS_CAP`` rows, so it holds at most the cap plus one
     directory's children. Those rows become one typed Arrow table: the
     manifest plans as a ``LocalTableScan`` and no action on it starts a
-    Python task. When no round fanned out, ``rel_dst`` is rebased on the
-    driver too (``make_relative``), so the manifest is that table alone and
-    ``isLocal()`` is true, and stays true when the frame is cached: the
-    split planner, the limits and delete-sync keep their bookkeeping on
-    the driver (``pipe.executor.plan_partitions``). Past the cap, the rest
-    of the round and every later round fan out on executors in at most
-    ``defaultParallelism`` tasks, as a ``mapInArrow`` over the round's
-    paths, and ``rel_dst`` is a column expression over the union. Each
-    round is pinned by a lazy ``localCheckpoint``: the collect of its
-    directory names fills it, a later action on the manifest reads it
-    without a Python task, and its blocks are freed when the manifest is
-    garbage-collected, so nothing enters the session cache. The price is
-    recovery: a lost checkpoint block fails the manifest's later readers,
-    where a persisted round would have been listed again (SCALE.md). Only
-    directory names come back to the driver.
+    Python task. When no round fanned out, the manifest is that table
+    alone and ``isLocal()`` is true, and stays true when the frame is
+    cached: the split planner, the limits and delete-sync keep their
+    bookkeeping on the driver (``pipe.executor.plan_partitions``). Past
+    the cap, the rest of the round and every later round fan out on
+    executors in at most ``defaultParallelism`` tasks, as a ``mapInArrow``
+    over the round's paths, unioned onto the table. Every row gets its
+    ``rel_dst`` from ``make_relative`` where it is listed, on the driver
+    or in a task, so both paths rebase alike. Each round is pinned by a
+    lazy ``localCheckpoint``: the collect of its directory names fills it,
+    a later action on the manifest reads it without a Python task, and its
+    blocks are freed when the manifest is garbage-collected, so nothing
+    enters the session cache. The price is recovery: a lost checkpoint
+    block fails the manifest's later readers, where a persisted round
+    would have been listed again (SCALE.md). Only directory names come
+    back to the driver.
     """
     if isinstance(srcs, str):
         srcs = [srcs]
@@ -182,21 +189,21 @@ def build_manifest(
         and src_fss[0].stat(srcs[0]).is_dir
         and (contents_into_dst or dst is None or not dst_fs.exists(dst))
     )
-    rows: list[tuple] = []  # (src_path, size, is_dir, mtime, mtime_epoch, is_link, root)
+    rows: list[_WalkRow] = []
     rounds = []
     for src, src_fs in zip(srcs, src_fss):
         root = src if special else (src_fs.dirname(src) or "/")
-        entry = _stat_entry(src, src_fs)
-        rows.append((*entry, root))
-        if entry[2]:  # directory: BFS rounds
+        entry = _stat_entry(src, root, src_fs)
+        rows.append(entry)
+        if entry[3]:  # directory: BFS rounds
             frontier = [src]
             while frontier:
                 dirs = []
                 n = 0
                 while n < len(frontier) and len(rows) < _DRIVER_ROWS_CAP:
-                    listed = [(*e, root) for e in _list_dir(frontier[n], src_fs)]
+                    listed = _list_dir(frontier[n], root, src_fs)
                     rows.extend(listed)
-                    dirs += [(e[0], e[5]) for e in listed if e[2]]
+                    dirs += [(e[0], e[6]) for e in listed if e[3]]
                     n += 1
                 rest = frontier[n:]
                 if rest:
@@ -207,9 +214,7 @@ def build_manifest(
                     def list_dirs(batches, _fs=src_fs, _root=root):
                         for b in batches:
                             paths = b.column(0).to_pylist()
-                            yield _walk_batch(
-                                [(*e, _root) for p in paths for e in _list_dir(p, _fs)]
-                            )
+                            yield _walk_batch([e for p in paths for e in _list_dir(p, _root, _fs)])
 
                     listing = frontier_df.mapInArrow(list_dirs, _WALK_SCHEMA).localCheckpoint(
                         eager=False
@@ -225,18 +230,12 @@ def build_manifest(
                 # `ln -s . loop` cycle would otherwise walk forever.
                 frontier = [p for p, is_link in dirs if not is_link]
 
-    walked = pa.Table.from_batches([_walk_batch(rows)])
-    if not rounds:
-        # the whole walk stayed on the driver: rebase it here too
-        rel = [make_relative(r[6], r[0]) for r in rows]
-        local = walked.add_column(1, "rel_dst", pa.array(rel, pa.string()))
-        return spark.createDataFrame(local.select(MANIFEST_SCHEMA.names), MANIFEST_SCHEMA)
-    df = spark.createDataFrame(walked, _WALK_SCHEMA)
+    # the driver's rows stay one bare LocalRelation, so isLocal() holds
+    walked = pa.Table.from_batches([_walk_batch(rows)]).select(MANIFEST_SCHEMA.names)
+    df = spark.createDataFrame(walked, MANIFEST_SCHEMA)
     for listing in rounds:
-        df = df.union(listing)
-    return df.select(
-        *(_rel_expr().alias(c) if c == "rel_dst" else c for c in MANIFEST_SCHEMA.names)
-    )
+        df = df.union(listing.select(*MANIFEST_SCHEMA.names))
+    return df
 
 
 def _walk_batch(rows: list[tuple]) -> pa.RecordBatch:
@@ -251,16 +250,3 @@ def _walk_batch(rows: list[tuple]) -> pa.RecordBatch:
         [pa.array(c, f.type) for c, f in zip(cols, _WALK_ARROW_SCHEMA)],
         schema=_WALK_ARROW_SCHEMA,
     )
-
-
-def _rel_expr():
-    """Column twin of ``make_relative``: strip root + '/' (just the root
-    when it already ends in '/', as '/' and 'mock://' do), '.' for the
-    root itself. Pure string expression, so the projection stays in
-    codegen."""
-    return F.when(F.col("src_path") == F.col("root"), F.lit(".")).otherwise(
-        F.expr(
-            "substring(src_path, length(root) + (CASE WHEN root LIKE '%/' THEN 1 ELSE 2 END))"
-        )
-    )
-

@@ -46,7 +46,7 @@ def test_manifest_is_local_below_the_cap_only(spark, tmp_path, monkeypatch):
 
 def test_warm_small_run_job_counts(spark, tmp_path):
     """A warm 4-file ``distexec`` runs at most 3 Spark jobs (plan collect,
-    the pipe map's shuffle and its ledger write) and ``sync_deletes`` on
+    the pipe map's shuffle and its checkpoint) and ``sync_deletes`` on
     its output at most 2 (one collect per manifest)."""
     src = _four_files(tmp_path)
     distexec(spark, str(src), str(tmp_path / "warm"), "cat")

@@ -94,21 +94,6 @@ def test_symlink_cycle_terminates(spark, tmp_path):
     assert not any("/loop/" in p for p in rows)
 
 
-def test_rel_expr_handles_root_slash(spark):
-    """The column rebase must match make_relative when root == '/'
-    (the '+2' prefix-strip would eat one extra character)."""
-    from hadoop_distexec_spark.sources.manifest import _rel_expr
-
-    df = spark.createDataFrame(
-        [("/data/a.txt", "/"), ("/data/a.txt", "/data"), ("/data", "/data")],
-        "src_path string, root string",
-    )
-    got = [r[0] for r in df.select(_rel_expr()).collect()]
-    assert got == ["data/a.txt", "a.txt", "."]
-    for src, root in [("/data/a.txt", "/"), ("/data/a.txt", "/data")]:
-        assert make_relative(root, src) in got
-
-
 def test_unreadable_dir_fails_job(spark, tmp_path):
     """PermissionError must fail the walk (reference client-walk behavior),
     never silently drop a subtree."""
@@ -268,10 +253,11 @@ def test_mtime_is_the_true_instant_off_utc(tree):
         assert max_skew <= 1, (cap, max_skew)
 
 
-def test_source_under_uri_root_stays_inside_dst(spark, tmp_path):
+def test_source_under_uri_root_stays_inside_dst(spark, tmp_path, monkeypatch):
     """A source directly under a URI root rebases against the scheme root
     ("mock://", not "mock:"): once dst exists, a second run into it lands
-    under dst/big/ instead of at an absolute path outside dst."""
+    under dst/big/ instead of at an absolute path outside dst, on the
+    driver walk and on the fan-out alike."""
     from hadoop_distexec_spark import distexec
 
     store = tmp_path / "store"
@@ -281,26 +267,33 @@ def test_source_under_uri_root_stays_inside_dst(spark, tmp_path):
     fs = MappedFS("mock", str(store))
     assert fs.dirname("mock://big") == "mock://"
     assert make_relative("mock://", "mock://big/a.txt") == "big/a.txt"
-    for _ in range(2):
-        res = distexec(spark, "mock://big", "mock://out", "cat", fs=fs)
-        assert res.filter(F.col("status") != "EXECUTED").count() == 0
-    out = store / "out"
-    assert (out / "a.txt").read_text() == "alpha\n"  # first run: dst was new
-    assert (out / "big" / "a.txt").read_text() == "alpha\n"
-    assert (out / "big" / "sub" / "b.txt").read_text() == "beta\n"
-    m = build_manifest(spark, "mock://big", "mock://out", fs=fs)
-    assert sorted(r["rel_dst"] for r in m.collect()) == [
-        "big", "big/a.txt", "big/sub", "big/sub/b.txt",
-    ]
+    for walk, cap in (("driver", DEFAULT_CAP), ("fanout", 0)):
+        monkeypatch.setattr(manifest_mod, "_DRIVER_ROWS_CAP", cap)
+        for _ in range(2):
+            res = distexec(spark, "mock://big", f"mock://out_{walk}", "cat", fs=fs)
+            assert res.filter(F.col("status") != "EXECUTED").count() == 0
+        out = store / f"out_{walk}"
+        assert (out / "a.txt").read_text() == "alpha\n"  # first run: dst was new
+        assert (out / "big" / "a.txt").read_text() == "alpha\n"
+        assert (out / "big" / "sub" / "b.txt").read_text() == "beta\n"
+        m = build_manifest(spark, "mock://big", f"mock://out_{walk}", fs=fs)
+        assert sorted(r["rel_dst"] for r in m.collect()) == [
+            "big", "big/a.txt", "big/sub", "big/sub/b.txt",
+        ], walk
 
 
-def test_root_with_trailing_slash_keeps_whole_names(spark, tmp_path):
+def test_root_with_trailing_slash_keeps_whole_names(spark, tmp_path, monkeypatch):
     """A source root given with a trailing slash on a filesystem that does
     not normalize it ("mock://tree/") is already its own prefix: the
-    column rebase must not eat the first character of each name."""
+    rebase must not eat the first character of each name, on either walk
+    path."""
     store = tmp_path / "store"
     (store / "tree" / "sub").mkdir(parents=True)
     (store / "tree" / "a.txt").write_text("a")
     (store / "tree" / "sub" / "b.txt").write_text("b")
-    m = build_manifest(spark, "mock://tree/", None, fs=MappedFS("mock", str(store)))
-    assert sorted(r["rel_dst"] for r in m.collect()) == [".", "a.txt", "sub", "sub/b.txt"]
+    for cap in (DEFAULT_CAP, 0):
+        monkeypatch.setattr(manifest_mod, "_DRIVER_ROWS_CAP", cap)
+        m = build_manifest(spark, "mock://tree/", None, fs=MappedFS("mock", str(store)))
+        assert m.isLocal() == (cap == DEFAULT_CAP)
+        got = sorted(r["rel_dst"] for r in m.collect())
+        assert got == [".", "a.txt", "sub", "sub/b.txt"], cap

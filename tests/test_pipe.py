@@ -239,16 +239,40 @@ def test_metrics_bytes_count_success_only(spark, tree, tmp_path):
 
 
 def test_results_survive_reuse_after_run(spark, tree, tmp_path):
-    """The returned results frame is durable: re-filtering/re-counting it
+    """The returned results frame is pinned: re-filtering/re-counting it
     later must not re-execute subprocesses (tmp dir is gone by then)."""
     dst = tmp_path / "out"
     res = distexec(spark, str(tree), str(dst), "cat")
     marker = dst / "a.txt"
     first = marker.stat().st_mtime_ns
-    # act on the frame repeatedly — durable parquet, no recompute
+    # act on the frame repeatedly — pinned checkpoint, no recompute
     assert res.filter(F.col("status") == "EXECUTED").count() == 3
     assert res.count() == 3
     assert marker.stat().st_mtime_ns == first  # no re-run touched outputs
+
+
+@pytest.mark.parametrize(
+    "fs_kind,update", [("local", False), ("local", "hash"), ("mapped", False)]
+)
+def test_results_computed_once(spark, tree, tmp_path, fs_kind, update):
+    """Every child runs inside ``distexec``: acting on the returned frame
+    afterwards (count, collect, metrics) spawns no further child, on any
+    filesystem and under the hash state alike."""
+    from hadoop_distexec_spark.fs import MappedFS
+
+    if fs_kind == "local":
+        src, dst, fs = str(tree), str(tmp_path / "out"), None
+    else:
+        src, dst, fs = "mock://tree", "mock://out", MappedFS("mock", str(tmp_path))
+    spawned = tmp_path / "spawned"
+    cmd = f"sh -c 'echo x >> {spawned}; cat'"
+    res = distexec(spark, src, dst, cmd, update=update, fs=fs)
+    assert len(spawned.read_text().splitlines()) == 3
+    assert res.count() == 3
+    assert sorted(r["rel_dst"] for r in res.collect()) == ["a.txt", "nomatch.txt", "sub/b.txt"]
+    assert metrics(res).collect()[0]["executed"] == 3
+    assert len(spawned.read_text().splitlines()) == 3
+    assert not (tmp_path / "out" / "_distexec_results").exists()
 
 
 def test_update_mode_skips_fresh_destinations(spark, tree, tmp_path):
@@ -309,11 +333,10 @@ def test_update_hash_mode_content_compare(spark, tree, tmp_path):
 
 @pytest.mark.parametrize("uri", [False, True], ids=["bare", "file_uri"])
 def test_dirs_only_source_reads_back_zero_rows(spark, tmp_path, monkeypatch, uri):
-    """A run with no files writes one empty part for its results and its
-    hash state; both read back as zero rows, and a re-run reads that empty
-    state. The read-back paths keep dst's form: a ``file://`` dst is not
-    read back as bare paths (which would resolve against fs.defaultFS on
-    a cluster)."""
+    """A run with no files returns zero rows and writes one empty part
+    for its hash state, which a re-run reads once. The read-back path
+    keeps dst's form: a ``file://`` dst is not read back as a bare path
+    (which would resolve against fs.defaultFS on a cluster)."""
     from pyspark.sql.readwriter import DataFrameReader
 
     src = tmp_path / "tree"
@@ -332,13 +355,11 @@ def test_dirs_only_source_reads_back_zero_rows(spark, tmp_path, monkeypatch, uri
         res = distexec(spark, str(src), dst_arg, "cat", update="hash")
         assert res.count() == 0
         assert (dst / "a" / "b").is_dir()
-    # run 1 reads back its results; run 2 its results and run 1's state
-    assert len(read) == 3
-    for p in read:
-        assert p.startswith(f"{dst_arg}/_distexec_"), p
-    for name in ("_distexec_results", "_distexec_state"):
-        parts = [p for p in (dst / name).iterdir() if p.name.startswith("part-")]
-        assert len(parts) == 1, name
+    # run 1 has no state to read; run 2 reads run 1's once
+    assert read == [f"{dst_arg}/_distexec_state"]
+    parts = [p for p in (dst / "_distexec_state").iterdir() if p.name.startswith("part-")]
+    assert len(parts) == 1
+    assert not (dst / "_distexec_results").exists()
 
 
 def test_preserve_mode_and_mtime(spark, tree, tmp_path):
@@ -871,12 +892,12 @@ def test_unreadable_source_fails_only_that_file(spark, wired_tree):
 
 
 def _output_files(dst_local):
-    """Files under dst other than the FAIL logs and the results table."""
-    skip = (dst_local / "_distexec_logs", dst_local / "_distexec_results")
+    """Files under dst other than the FAIL logs."""
+    log_dir = dst_local / "_distexec_logs"
     return sorted(
         p.relative_to(dst_local).as_posix()
         for p in dst_local.rglob("*")
-        if p.is_file() and not any(d in p.parents for d in skip)
+        if p.is_file() and log_dir not in p.parents
     )
 
 

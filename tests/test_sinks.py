@@ -68,7 +68,6 @@ def test_sync_deletes_removes_extras_keeps_outputs(spark, tmp_path, monkeypatch)
         assert open(os.path.join(dst, "sub", "b.txt")).read() == "beta\n"
         assert open(os.path.join(dst, "a.txt.stderr")).read() == "warn\n"
         assert os.path.isdir(os.path.join(dst, "_distexec_keep", "inner"))
-        assert os.path.isdir(os.path.join(dst, "_distexec_results"))
         # idempotent: second sync deletes nothing
         assert sync_deletes(spark, str(src), dst).count() == 0
     assert found["driver"] == found["fanout"]
